@@ -67,8 +67,11 @@ object Bench {
             col("a.id") === col("b.id2"))
           .select(sum(col("v") * col("v2")))
           .write.mode("overwrite").format("noop").save()
-      } catch { case _: Throwable => () }
-      finally {
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println("[bench] warm-up failed, continuing untimed:")
+          e.printStackTrace()
+      } finally {
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
           .foreach(p => try java.nio.file.Files.deleteIfExists(p) catch {
@@ -200,8 +203,11 @@ object Bench {
               col("bet") <= col("aet") + expr("interval 1 hour"))
             .select(col("aid"), col("bid")), "append", "stwarm4")
         }
-      } catch { case _: Throwable => () }
-      finally {
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println("[bench] warm-up failed, continuing untimed:")
+          e.printStackTrace()
+      } finally {
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
           .foreach(p => try java.nio.file.Files.deleteIfExists(p) catch {

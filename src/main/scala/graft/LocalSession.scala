@@ -9,6 +9,19 @@ import org.apache.spark.sql.SparkSession
   * it single-sourced means a new required flag lands everywhere at once.
   */
 object LocalSession {
+  /** Entries in Spark's JVM-wide compiled-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, a static conf latched by the
+    * first codegen in the JVM). Spark's default of 100 is smaller than
+    * one MOT request's working set: `track` + `eval` + the metric tables
+    * on one small sequence compile about 280 classes, about 210 of them
+    * in the eval path alone, and catalog queries m02/m11 need 100-107
+    * each. An LRU smaller than the working set evicts every class before
+    * its next use, so each request recompiled all of them. 1000 holds
+    * several such working sets at once; the identical plans of repeat
+    * requests then hit the cache.
+    */
+  val CodegenCacheEntries: Int = 1000
+
   def build(cpus: String, logLevel: String = "WARN"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -16,6 +29,7 @@ object LocalSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // Let AQE re-optimize (coalesce tiny post-shuffle partitions)
       // INSIDE cached-plan fragments and below them. The default
       // (false) freezes a cached plan's output partitioning so

@@ -42,7 +42,8 @@ object Pipelines {
 
   /** §3.3 `eval` — the reference's two-pass design: (1) strict-threshold
     * GT filter → eval.txt; (2) metrics of GT vs the filtered tracks.
-    * Returns (perSequence, combined) metric rows.
+    * Returns (perSequence, combined) metric rows; perSequence is already
+    * collected (a local relation).
     */
   def eval(spark: SparkSession, gtFile: String, trackFile: String,
            evalFile: String, iouThreshold: Double = 0.3): (DataFrame, DataFrame) = {
@@ -52,8 +53,17 @@ object Pipelines {
     MotCsv.write(filtered.select("frame", "id", "x", "y", "w", "h", "conf"), evalFile)
     val evalTracks = withFrameIdx(MotCsv.read(spark, evalFile))
       .withColumn("seq", lit("seq0"))
-    val perSeq = MotEval.metrics(gt, evalTracks, iouThreshold)
-    (perSeq, MotEval.combine(perSeq))
+    // Run the five-branch metrics plan ONCE: the per-sequence rows come
+    // back as a local relation, so collecting perSeq runs no job and
+    // combine aggregates the collected rows instead of re-executing the
+    // plan. The match table is this call's own (fresh input files), so
+    // it is released as soon as the rows are in.
+    val matches = MotEval.matchFrames(gt, evalTracks, iouThreshold).cache()
+    val metrics = MotEval.metricsFrom(matches, gt, evalTracks)
+    val rows = try metrics.collect() finally matches.unpersist()
+    val perSeq = spark.createDataFrame(java.util.Arrays.asList(rows: _*), metrics.schema)
+    // one partition: the global aggregate then needs no exchange
+    (perSeq, MotEval.combine(perSeq.coalesce(1)))
   }
 
   /** §3 entry point 4 `features` — GT-derived matching thresholds. */

@@ -80,7 +80,7 @@ object MotCsv {
 
   /** S4/S5/S6 — MOT CSV write with the reference's `(id, frame)` output
     * sort (sort_file, reference src/utils/helpers.py:293-336 — the actual
-    * key is `(int(id), frame)` despite the docstring). `coalesce(1)`
+    * key is `(int(id), frame)` despite the docstring). `singleFile`
     * matches the reference's single-file layout; callers at scale write
     * partitioned instead.
     */
@@ -90,8 +90,11 @@ object MotCsv {
         col("frame"), col("id"),
         col("x"), col("y"), col("w"), col("h"), col("conf"),
         lit(1).as("mx"), lit(-1).as("my"), lit(-1).as("mz"))
-      .orderBy(col("id"), col("frame"))
-    (if (singleFile) out.coalesce(1) else out)
+    // one file: a single-partition exchange + local sort writes what a
+    // range-partitioned sort coalesced to one partition writes, minus the
+    // range partitioner's sampling job
+    (if (singleFile) out.repartition(1).sortWithinPartitions(col("id"), col("frame"))
+     else out.orderBy(col("id"), col("frame")))
       .write.mode("overwrite").option("header", "false").csv(path)
   }
 }

@@ -77,7 +77,7 @@ object MotEval {
     * recomputed ratios + TP-weighted LocA, which over raw matches is just
     * the global avg IoU).
     */
-  def metrics(gt: DataFrame, tracks: DataFrame, iouThreshold: Double): DataFrame = {
+  def metrics(gt: DataFrame, tracks: DataFrame, iouThreshold: Double): DataFrame =
     // The match table feeds FIVE aggregation branches (TP/LocA, IDSW/
     // Frag, coverage, both IDTP sides); without persisting it, Spark
     // recomputes the frame join + argmax window once per branch — and
@@ -85,13 +85,23 @@ object MotEval {
     // bounded by matched GT rows (eval-scale, not corpus-scale data).
     // Values are unaffected: the row set is deterministic and every
     // downstream aggregate is shuffle-order-independent.
-    // NOT unpersisted here: Spark's CacheManager dedupes cache entries
-    // by canonicalized plan, so repeated metrics calls over the same
-    // inputs SHARE one entry (storage growth = #distinct input plans,
-    // not #calls) and warm re-runs hit it. An explicit per-call
+    // NOT unpersisted here, nor by the catalog queries (MotQ, ExtQ,
+    // KernelQ) that call this: Spark's CacheManager dedupes cache
+    // entries by canonicalized plan, so repeated metrics calls over the
+    // same inputs SHARE one entry (storage growth = #distinct input
+    // plans, not #calls) and warm re-runs hit it. An explicit per-call
     // unpersist was measured to destroy that reuse (m11 0.6 s → 3.8 s
-    // warm) while saving nothing.
-    val mm = matchFrames(gt, tracks, iouThreshold).cache()
+    // warm) while saving nothing. Callers whose inputs are never
+    // evaluated twice (Pipelines.eval: fresh files per call) cache the
+    // match table themselves, call metricsFrom, and release it once
+    // the metric rows are collected.
+    metricsFrom(matchFrames(gt, tracks, iouThreshold).cache(), gt, tracks)
+
+  /** The metrics row of `metrics` over an already-built match table `mm`
+    * (`matchFrames(gt, tracks, τ)`, which the caller should persist: five
+    * branches read it).
+    */
+  def metricsFrom(mm: DataFrame, gt: DataFrame, tracks: DataFrame): DataFrame = {
     val gts = gt
     val trs = tracks
 

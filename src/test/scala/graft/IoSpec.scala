@@ -74,6 +74,19 @@ class IoSpec extends AnyFunSuite {
     assert(frames.toSeq == Seq("000007", "frame_x"))
   }
 
+  test("S4 write: one file sorted by (id, frame) from a multi-partition input") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("mot_write").toString
+    val rows = for (f <- 1 to 12; id <- Seq(3, 1, 2)) yield (f"$f%06d", id, f * 1.0, id * 1.0, 5.0, 5.0, 0.9)
+    MotCsv.write(scala.util.Random.shuffle(rows).toDF("frame", "id", "x", "y", "w", "h", "conf")
+      .repartition(4), dir)
+    val parts = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".csv"))
+    assert(parts.length == 1)
+    val keys = Files.readAllLines(parts.head.toPath).toArray.toSeq.map(_.toString.split(","))
+      .map(c => (c(1).toInt, c(0)))
+    assert(keys == rows.map(r => (r._2, r._1)).sorted)
+  }
+
   test("S3 candidates: frame -> sorted id list") {
     val dir = Files.createTempDirectory("mot_cand").toFile
     val f = new java.io.File(dir, "det.txt")

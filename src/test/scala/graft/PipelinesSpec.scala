@@ -14,9 +14,12 @@ class PipelinesSpec extends AnyFunSuite {
   private def tmp(name: String) =
     Files.createTempDirectory(name).toString
 
-  test("track -> eval -> metric tables end-to-end over files") {
+  /** GT of 2 objects over 8 frames, detections = GT jittered, tracked
+    * into `track`: returns (dir, trackFile); dir holds gt.txt.
+    */
+  private def trackedFixture(name: String): (String, String) = {
     import spark.implicits._
-    val dir = tmp("pipe")
+    val dir = tmp(name)
     // GT: 2 objects over 8 frames; detections = GT jittered; per-frame ids
     val gtRows = for (f <- 1 to 8; o <- 1 to 2)
       yield (f"$f%06d", o, 10.0 + o * 200 + f * 4, 20.0 + o * 100, 40.0, 36.0, 1.0, 1, -1, -1)
@@ -34,7 +37,11 @@ class PipelinesSpec extends AnyFunSuite {
       .toDF("frame", "id", "vector")
 
     Pipelines.track(spark, s"$dir/det.txt", embs, s"$dir/track")
-    val trackFile = s"$dir/track"
+    (dir, s"$dir/track")
+  }
+
+  test("track -> eval -> metric tables end-to-end over files") {
+    val (dir, trackFile) = trackedFixture("pipe")
     val trackDf = MotCsv.read(spark, trackFile)
     assert(trackDf.count() == 16)
     assert(trackDf.select("id").distinct().count() == 2)
@@ -48,6 +55,40 @@ class PipelinesSpec extends AnyFunSuite {
     val tables = Pipelines.formatMetricTables(perSeq, combined)
     assert(tables.contains("CLEAR") && tables.contains("COMBINED")
       && tables.contains("IDF1"))
+  }
+
+  test("eval runs the metrics plan once: rows and tables equal metrics/combine computed directly") {
+    val (dir, trackFile) = trackedFixture("eval_once")
+    val (perSeq, combined) = Pipelines.eval(spark, s"$dir/gt.txt", trackFile,
+      s"$dir/eval", iouThreshold = 0.3)
+    // the per-sequence rows are already collected: no Spark job behind them
+    assert(perSeq.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    def mot(file: String) = MotCsv.read(spark, file)
+      .withColumn("frameIdx", col("frame").cast("int")).withColumn("seq", lit("seq0"))
+    val direct = graft.operators.MotEval.metrics(mot(s"$dir/gt.txt"), mot(s"$dir/eval"), 0.3)
+    val directCombined = graft.operators.MotEval.combine(direct)
+    assert(perSeq.collect().toSeq == direct.collect().toSeq)
+    assert(combined.collect().toSeq == directCombined.collect().toSeq)
+    assert(Pipelines.formatMetricTables(perSeq, combined) ==
+      Pipelines.formatMetricTables(direct, directCombined))
+  }
+
+  test("repeated evals on the same files reuse compiled classes") {
+    // Spark's default 100-entry class cache is smaller than one eval's
+    // working set (~210 classes), so every call recompiled everything
+    val (dir, trackFile) = trackedFixture("eval_codegen")
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount
+    val perCall = (1 to 3).map { _ =>
+      val c0 = compiles()
+      val (perSeq, combined) = Pipelines.eval(spark, s"$dir/gt.txt", trackFile,
+        s"$dir/eval", iouThreshold = 0.3)
+      Pipelines.formatMetricTables(perSeq, combined)
+      compiles() - c0
+    }
+    assert(perCall(1) < 50 && perCall(2) < 50, s"classes compiled per call: $perCall")
   }
 
   test("Run CLI: config + overrides drive track then eval over a dataset dir") {

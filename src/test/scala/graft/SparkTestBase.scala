@@ -14,6 +14,7 @@ object SparkTestBase {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", LocalSession.CodegenCacheEntries.toString)
     .getOrCreate()
 
   GraftExtensions.register(spark)
