@@ -6,8 +6,8 @@ package graft
   * objects ≈ 50k gt rows, src/utils/eval.py:685-689), timed warm.
   * `sweep` arg: adds the 10× point (10000 frames ≈ 500k rows) so the
   * metrics pipeline's scaling curve is measured, not assumed — the
-  * CLEAR/Identity chain is windows + aggs over (frame, id) keys, so
-  * warm time should grow ~linearly with rows. Not driver-gated; run
+  * anchor is one sequence, so its metrics kernel is one task whose
+  * primitive sorts grow ~n log n with rows. Not a gated benchmark; run
   * `sbt "runMain graft.Anchor sweep"` and record in PLANS.md.
   */
 object Anchor {

@@ -11,14 +11,15 @@ import org.apache.spark.sql.SparkSession
 object LocalSession {
   /** Entries in Spark's JVM-wide compiled-class cache
     * (`spark.sql.codegen.cache.maxEntries`, a static conf latched by the
-    * first codegen in the JVM). Spark's default of 100 is smaller than
-    * one MOT request's working set: `track` + `eval` + the metric tables
-    * on one small sequence compile about 280 classes, about 210 of them
-    * in the eval path alone, and catalog queries m02/m11 need 100-107
-    * each. An LRU smaller than the working set evicts every class before
-    * its next use, so each request recompiled all of them. 1000 holds
-    * several such working sets at once; the identical plans of repeat
-    * requests then hit the cache.
+    * first codegen in the JVM). Spark's default of 100 is about one MOT
+    * request's working set: detect post-processing + `track` + `eval` +
+    * the metric tables on one small sequence compile about 100 classes
+    * (about 45 in the eval path, whose matching and metrics are Scala
+    * kernels), and a process that also runs other pipelines or catalog
+    * queries needs more. An LRU smaller than the working set evicts every
+    * class before its next use, so each request recompiles all of them.
+    * 1000 holds several such working sets at once; the identical plans of
+    * repeat requests then hit the cache.
     */
   val CodegenCacheEntries: Int = 1000
 
@@ -38,12 +39,14 @@ object LocalSession {
       // partitioning-independent by design (quantized aggregates,
       // pinned tie-breaks; cross-CPU bit-identity is a standing Verify
       // check at local[8] vs local[3]). Without it, every query that
-      // caches an eval-scale intermediate (MotEval's match table, the
-      // band/gram artifact memos) materializes and re-reads it at the
-      // full shuffle-partition count — at bench scale that is 32 tasks
-      // per stage carrying a few KB each, ~0.1 s scheduling latency
-      // per task (measured round 21: m11 4.8 s → 3.3 s steady, m02
-      // task-CPU 24 s → 9 s, d05 first-touch 7.8 s → 5.0 s). At
+      // caches an eval-scale intermediate (the derived MOT tables and
+      // m11's anchor base, the band/gram artifact memos, the streaming
+      // batches) materializes and re-reads it at the full
+      // shuffle-partition count — at bench scale that is 32 tasks per
+      // stage carrying a few KB each, ~0.1 s scheduling latency per task
+      // (measured when MotEval still cached a relational match table:
+      // m11 4.8 s → 3.3 s steady, m02 task-CPU 24 s → 9 s; d05
+      // first-touch 7.8 s → 5.0 s). At
       // cluster scale the same flag lets AQE right-size the cache's
       // partitions to data volume instead of the static conf.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")

@@ -53,15 +53,10 @@ object Pipelines {
     MotCsv.write(filtered.select("frame", "id", "x", "y", "w", "h", "conf"), evalFile)
     val evalTracks = withFrameIdx(MotCsv.read(spark, evalFile))
       .withColumn("seq", lit("seq0"))
-    // Run the five-branch metrics plan ONCE: the per-sequence rows come
-    // back as a local relation, so collecting perSeq runs no job and
-    // combine aggregates the collected rows instead of re-executing the
-    // plan. The match table is this call's own (fresh input files), so
-    // it is released as soon as the rows are in.
-    val matches = MotEval.matchFrames(gt, evalTracks, iouThreshold).cache()
-    val metrics = MotEval.metricsFrom(matches, gt, evalTracks)
-    val rows = try metrics.collect() finally matches.unpersist()
-    val perSeq = spark.createDataFrame(java.util.Arrays.asList(rows: _*), metrics.schema)
+    // the per-sequence rows come back as a local relation: collecting
+    // perSeq runs no job, and combine aggregates the collected rows
+    val metrics = MotEval.metrics(gt, evalTracks, iouThreshold)
+    val perSeq = spark.createDataFrame(java.util.Arrays.asList(metrics.collect(): _*), metrics.schema)
     // one partition: the global aggregate then needs no exchange
     (perSeq, MotEval.combine(perSeq.coalesce(1)))
   }

@@ -809,11 +809,8 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
   /** The m11 anchor pipeline (shared with `graft.Anchor`'s scaling
     * sweep): CLEAR/Identity metrics over the anchor derivation at any
     * frame count — 1000 frames ≈ 50k gt rows (the BASELINE.md shape),
-    * 10000 frames ≈ 500k (the 10× scaling point). Caches both derived
-    * relations: metrics fans them into several aggregation branches,
-    * and each branch would otherwise repeat the lineitem scan + dedup
-    * window. CacheManager dedupes by canonicalized plan, so repeat
-    * calls at the same frame count reuse the same two entries.
+    * 10000 frames ≈ 349k at sf0.1 (the 10× scaling point). One sequence,
+    * so the metrics kernel runs it as a single task.
     */
   /** m11's anchor base as a persisted on-disk artifact — the same
     * posture as Derived.artifact: the anchor gt/tracks stand in for

@@ -33,6 +33,25 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(m.getAs[Long]("ML") == 1L) // the one GT id is mostly-lost
   }
 
+  test("metrics fails loudly on GT rows repeated per (seq, frameIdx, id)") {
+    // a repeated row would count twice in its id's frame total but match
+    // once: coverage 1/2 instead of 1, silently
+    val gt = oneBox("s", 1, 1, 0, 0).union(oneBox("s", 1, 1, 0, 0))
+      .union(oneBox("s", 2, 1, 0, 0))
+    val tr = oneBox("s", 1, 9, 0, 0).union(oneBox("s", 2, 9, 0, 0))
+    val e = intercept[Exception](MotEval.metrics(gt, tr, 0.3).collect())
+    val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: IllegalArgumentException => x }
+    assert(cause.exists(_.getMessage.contains(
+      "duplicate GT rows for (seq=s, frameIdx=1, id=1)")), e)
+    // rows without an integer frame are not keyed by one: never duplicates
+    val noFrame = Seq.fill(2)(("s", null.asInstanceOf[Integer], 1, 0.0, 0.0, 20.0, 20.0))
+      .toDF("seq", "frameIdx", "id", "x", "y", "w", "h")
+    val m = MotEval.metrics(oneBox("s", 1, 1, 0, 0).union(noFrame), tr, 0.3).head()
+    assert(m.getAs[Long]("GT_Dets") == 3L && m.getAs[Long]("CLR_TP") == 1L)
+    assert(m.getAs[Long]("PT") == 1L) // 1 of the id's 3 rows matched
+  }
+
   test("nms on an empty frame set and a single box") {
     val empty = spark.emptyDataset[DetBox]
     assert(Nms.nms(empty, 0.5).count() == 0)

@@ -75,8 +75,9 @@ class PipelinesSpec extends AnyFunSuite {
   }
 
   test("repeated evals on the same files reuse compiled classes") {
-    // Spark's default 100-entry class cache is smaller than one eval's
-    // working set (~210 classes), so every call recompiled everything
+    // repeat calls must hit the compiled-class cache: Spark's default
+    // 100 entries once held less than one eval's working set, so every
+    // call recompiled everything
     val (dir, trackFile) = trackedFixture("eval_codegen")
     def compiles(): Long =
       org.apache.spark.metrics.source.CodegenMetrics
@@ -89,6 +90,30 @@ class PipelinesSpec extends AnyFunSuite {
       compiles() - c0
     }
     assert(perCall(1) < 50 && perCall(2) < 50, s"classes compiled per call: $perCall")
+  }
+
+  test("eval + metric tables run at most 10 Spark jobs") {
+    // the relational metrics plan ran 35: a job per AQE stage of its
+    // five aggregation branches
+    val (dir, trackFile) = trackedFixture("eval_jobs")
+    val sc = spark.sparkContext
+    val group = "eval_job_count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p => group == p.getProperty("spark.jobGroup.id")))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(counter)
+    try {
+      sc.setJobGroup(group, "eval job count")
+      val (perSeq, combined) = Pipelines.eval(spark, s"$dir/gt.txt", trackFile,
+        s"$dir/eval", iouThreshold = 0.3)
+      Pipelines.formatMetricTables(perSeq, combined)
+      sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(counter)
+    assert(jobs.get > 0 && jobs.get <= 10, s"jobs: ${jobs.get}")
   }
 
   test("Run CLI: config + overrides drive track then eval over a dataset dir") {

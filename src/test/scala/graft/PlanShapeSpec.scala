@@ -405,10 +405,11 @@ class PlanShapeSpec extends AnyFunSuite {
       s"vocab must not plan as a literal IN-list:\n${p.take(4000)}")
   }
 
-  test("m01_iou_match: broadcast equi-join with IoU residual + rank-limit pushdown") {
+  test("m01_iou_match: one per-frame cogroup kernel, one hash shuffle per input") {
     val p = plan("m01_iou_match")
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(p.contains("WindowGroupLimit"), s"row_number argmax must push down:\n$p")
+    assert(p.contains("CoGroup"), p)
+    assert(shuffles(p) == 2, s"one (seq, frameIdx) exchange per side:\n$p")
+    assert(!p.contains("Join") && !p.contains("Window"), s"no relational matcher left:\n$p")
   }
 
   test("s01_cosine_topk: broadcast NLJ serving shape, native dotq, top-k pushdown") {
