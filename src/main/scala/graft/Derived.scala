@@ -97,13 +97,6 @@ object Derived {
       Tables.load(spark, dir, n).createOrReplaceTempView(n)
     }
 
-  // The derived tables saturate at ~3.6k rows regardless of scale factor
-  // (the dedup keeps one row per (seq, frame, id)), but deriving them
-  // scans + windows the full lineitem each time. Materialize once per
-  // (session, dir) — SURVEY §4 P6 (materialized intermediate): every
-  // MOT-operator query then starts from a tiny in-memory relation.
-  private val cache = scala.collection.concurrent.TrieMap.empty[(org.apache.spark.SparkContext, String, String), DataFrame]
-
   /** On-disk artifact directory for a derived table — the same
     * cross-session posture as TextQ.bandArtifact: gt/tracks/gt_emb/dets
     * are DETERMINISTIC functions of the source data, and in production
@@ -113,14 +106,11 @@ object Derived {
     * re-derived by each query from a 600k-row fact scan. Keyed by the
     * source files' (length, mtime) so a regenerated testdata dir
     * invalidates the artifact instead of serving stale rows; `_SUCCESS`
-    * gates readiness (a torn write is rewritten, never read).
+    * gates readiness (a torn write is rewritten, never read). Queries
+    * declare the tables they read as [[GtStore]]/[[TracksStore]]/
+    * [[GtEmbStore]]/[[DetsStore]], so Bench builds them untimed.
     */
-  /** Builds (once per source-data generation) and returns the artifact
-    * path for a derived table. Exposed so Bench can pre-touch the
-    * once-per-generation build OUTSIDE the timed region — build cost
-    * is data maintenance, not query cost.
-    */
-  def artifact(spark: SparkSession, dir: String, name: String): String =
+  def artifact(spark: SparkSession, dir: String, name: String): String = {
     // One artifact KIND per table, NOT one kind with sub = name: `sub`
     // is ArtifactStore's params/layout tag, and its staleness GC
     // deletes sibling subs on every build (only one sub value may
@@ -130,31 +120,34 @@ object Derived {
     // bench query whose table had been GC'd re-derived a 600k-row
     // artifact inside its timed region (measured round 22: m06 cold
     // 7.3 s vs 0.7 s steady; f01 2.25 s vs 0.8 s — the r21 "first-touch
-    // floor" was largely this churn, not JIT).
+    // floor" was largely this churn, not JIT). The sub-keyed layout's
+    // root is deleted here, where the kinds that replaced it resolve.
+    sources.ArtifactStore.retire(spark, "graft_derived_artifact")
     sources.ArtifactStore.resolve(spark, s"graft_derived_$name",
       Seq("lineitem.parquet", "embeddings.parquet").map(new java.io.File(dir, _))) { adir =>
       derive(spark, dir, name).write.mode("overwrite").parquet(adir)
     }
-
-  /** Session view of a derived table: a memoized cached FileScan of
-    * [[artifact]] (building it first if this data generation was never
-    * derived). Bench isolation drops the memo, so each timed query pays
-    * the steady-state parquet probe — never the lineitem re-derivation.
-    * Keyed by (session, dir, name): a DataFrame is bound to its context,
-    * so a restarted session must not see a stopped session's entry.
-    */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // evict only entries whose owning context actually stopped, so the
-    // map (and the stopped sessions' object graphs) can't grow across
-    // restarts in one JVM — while two live sessions coexist untouched
-    cache.keys.filter(_._1.isStopped).foreach(cache.remove)
-    cache.getOrElseUpdate((spark.sparkContext, dir, name), {
-      val df = spark.read.parquet(artifact(spark, dir, name))
-      val cached = df.cache()
-      cached.count() // force materialization so timings measure operators
-      cached
-    })
   }
+
+  private def store(name: String) =
+    sources.Artifact(s"derived_$name")(artifact(_, _, name))
+  val GtStore: sources.Artifact = store("gt")
+  val TracksStore: sources.Artifact = store("tracks")
+  val GtEmbStore: sources.Artifact = store("gt_emb")
+  val DetsStore: sources.Artifact = store("dets")
+
+  /** Session view of a derived table: a cached FileScan of [[artifact]]
+    * (building it first if this data generation was never derived).
+    * The tables saturate at ~3.6k rows regardless of scale factor, so
+    * every MOT-operator query starts from a tiny in-memory relation —
+    * SURVEY §4 P6 (materialized intermediate). Memoized per (session,
+    * dir, name) in [[SessionMemo]]; Bench's isolation resets it, so
+    * each timed query pays the steady-state parquet probe — never the
+    * lineitem re-derivation.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    SessionMemo.cached(spark, ("derived", dir, name))(
+      spark.read.parquet(artifact(spark, dir, name)))
 
   /** Raw recompute of a derived table via the shared CTE text — used
     * only to build the on-disk artifact. gt derives from lineitem;
@@ -217,15 +210,4 @@ object Derived {
              |FROM lineitem WHERE l_orderkey % 5 = 0""".stripMargin)
     }
   }
-
-  /** Drop this session's memoized derived tables and unpersist their
-    * cached data — the bench isolation hook (see
-    * `TextQ.resetMaterializations`): each timed query then pays its own
-    * first-touch materialization, so per-query numbers don't depend on
-    * which neighbor ran first.
-    */
-  def reset(spark: SparkSession): Unit =
-    cache.keys.filter(_._1 == spark.sparkContext).foreach { k =>
-      cache.remove(k).foreach(_.unpersist())
-    }
 }

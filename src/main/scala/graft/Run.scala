@@ -123,7 +123,7 @@ object Run {
         // OLD generation in cache — building the new cluster artifact
         // through them would silently derive gen-N+1 labels from gen-N
         // signatures. Maintenance must rebuild from current storage.
-        graft.queries.TextQ.resetMaterializations(spark)
+        SessionMemo.reset(spark)
         val band = graft.queries.TextQ.bandArtifact(spark, dir)
         val gram = graft.queries.TextQ.gramArtifact(spark, dir)
         val clusters = graft.queries.TextQ.clusterArtifact(spark, dir)

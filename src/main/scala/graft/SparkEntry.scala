@@ -13,7 +13,7 @@ import graft.queries.{ExtQ, KernelQ, MotQ, Q, Rel, TextQ}
   */
 object SparkEntry {
 
-  private val catalog: Seq[Q] =
+  val catalog: Seq[Q] =
     Rel.defs ++ TextQ.defs ++ MotQ.defs ++ KernelQ.defs ++ ExtQ.defs
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:

@@ -886,12 +886,12 @@ object Dedup {
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // cached: three consumers (both pair-join sides + the final output
-    // join) would each re-run the k x dims argmax scan without it —
-    // the m02 match-table pattern (CacheManager-deduped, session-scoped);
-    // registered so the between-queries drain releases it instead of
-    // pinning one relation per distinct input for the session
-    val assign = graft.CacheRegistry.register(
-      SimilaritySearch.kmeansAssign(emb, k, iters, idCol, vecCol).cache())
+    // join) would each re-run the k x dims argmax scan without it;
+    // registered with the session memo so its reset releases it instead
+    // of pinning one relation per distinct input for the session
+    val assign = graft.SessionMemo.register(
+      SimilaritySearch.kmeansAssign(emb, k, iters, idCol, vecCol).cache(),
+      emb.sparkSession)
     val withVec = assign.join(emb.select(col(idCol), col(vecCol)), Seq(idCol))
     val edges = clusterCosineEdges(withVec, threshold, idCol, vecCol)
     val groups = connectedComponents(edges, distinctEdges = false)

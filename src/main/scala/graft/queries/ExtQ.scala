@@ -260,12 +260,12 @@ object ExtQ {
     q.awaitTermination()
     // earlier batches' band snapshots are dead once the stream drains
     // (only the final labels outlive the loop, consumed by the caller —
-    // registered so the between-queries drain releases that last handle
+    // registered so the session memo's reset releases that last handle
     // too instead of pinning one label table per invocation)
     batchBandHandles.foreach(_.unpersist())
     // explicit owner: `labels` was built inside foreachBatch, whose
-    // cloned session would never match the caller's drain(s)
-    if (labelsOwned) graft.CacheRegistry.register(labels, s)
+    // cloned session would never match the caller's reset(s)
+    if (labelsOwned) graft.SessionMemo.register(labels, s)
     labels
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy("cluster_id")).cast("long"))
@@ -550,7 +550,7 @@ object ExtQ {
 
     // F1/F2/F4 — the cascade predicates on the derived corner-format
     // detections (mask-free portion; F5 is f02).
-    Q("f01_filter_cascade",
+    Q("f01_filter_cascade", Seq(Derived.DetsStore),
       (s, d) => {
         val dets = Derived.table(s, d, "dets")
         DetectFilters.cascade(dets, col("score"),
@@ -573,7 +573,7 @@ object ExtQ {
     // F5 — integral-image mask stats vs BRUTE-FORCE pixel counting in
     // the oracle: proves the O(1) prefix-sum lookups equal the
     // reference's O(box-area) submask count (src/detection.py:1086-1116).
-    Q("f02_mask_filter",
+    Q("f02_mask_filter", Seq(Derived.DetsStore),
       (s, d) => {
         val dets = Derived.table(s, d, "dets").filter(col("frame") === 0)
         val stats = DetectFilters.maskStats(
@@ -659,7 +659,7 @@ object ExtQ {
 
     // A6 — COMBINED metrics row (combine_metrics): sums + recomputed
     // ratios + TP-weighted LocA across the two derived sequences.
-    Q("m09_combined_metrics",
+    Q("m09_combined_metrics", Seq(Derived.GtStore, Derived.TracksStore),
       (s, d) => {
         val gt = Derived.table(s, d, "gt")
         val tr = Derived.table(s, d, "tracks")
@@ -699,7 +699,7 @@ object ExtQ {
     // back with the schema'd reader, aggregate. Oracle aggregates the
     // source relation directly — equality proves the round-trip is
     // lossless.
-    Q("s03_mot_roundtrip",
+    Q("s03_mot_roundtrip", Seq(Derived.TracksStore),
       (s, d) => {
         val tmp = s"/tmp/graft_mot_rt_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
         val tracks = Derived.table(s, d, "tracks")
@@ -982,7 +982,7 @@ object ExtQ {
     // the two share one oracle; the spec-level multi-batch run
     // (StreamingParitySpec) additionally pins that a split into
     // several triggers is invisible in the final sink.
-    Q("st9_stream_classify",
+    Q("st9_stream_classify", Seq(TextQ.ClfStore),
       (s, d) => {
         val docs = Tables.documents(s, d)
         TextQ.clfArtifact(s, d)  // build/refresh at batch parallelism
@@ -1004,7 +1004,7 @@ object ExtQ {
     // row-identically to d25 — the two share one oracle; the
     // spec-level multi-batch run (StreamingParitySpec) additionally
     // pins that a split into several triggers is invisible.
-    Q("st10_stream_decontam",
+    Q("st10_stream_decontam", Seq(TextQ.DecontamStore),
       (s, d) => {
         val docs = Tables.documents(s, d)
         TextQ.decontamArtifact(s, d)  // build/refresh at batch parallelism
@@ -1016,7 +1016,7 @@ object ExtQ {
       },
       Some(TextQ.decontamOracleSql(TextQ.DecontamBatchWhereSql))),
 
-    Q("st8_stream_ann_probe",
+    Q("st8_stream_ann_probe", Seq(TextQ.AnnStore),
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         // explicit nprobe: the catalog row's oracle hash must not
@@ -1041,7 +1041,7 @@ object ExtQ {
     // the spec-level multi-batch run (StreamingParitySpec)
     // additionally pins that a split into several triggers is
     // invisible.
-    Q("st11_stream_ann_delta",
+    Q("st11_stream_ann_delta", Seq(TextQ.AnnCorpusStore),
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         TextQ.annCorpusArtifact(s, d)  // build/refresh at batch parallelism
@@ -1063,7 +1063,7 @@ object ExtQ {
     // spec-level multi-batch run (StreamingParitySpec) additionally
     // pins fixpoint identity and untouched-component id stability
     // across micro-batch splits.
-    Q("st7_stream_cluster_maintain",
+    Q("st7_stream_cluster_maintain", Seq(TextQ.BandStore, TextQ.ClusterStore, TextQ.GramStore),
       (s, d) => {
         import graft.functions.Text
         val docs = Tables.documents(s, d)
@@ -1086,7 +1086,7 @@ object ExtQ {
       },
       Some(TextQ.ClusterOracleSql)),
 
-    Q("st6_stream_ingest_dedup",
+    Q("st6_stream_ingest_dedup", Seq(TextQ.BandStore, TextQ.GramStore),
       (s, d) =>
         // corpus side capped per bucket (the d09/d15 ingest guard) via
         // the artifact's PRECOMPUTED corpus_rank — a partition-pruned
@@ -1119,7 +1119,7 @@ object ExtQ {
     // partition-pruned artifact's precomputed corpus_rank, bucket-local
     // so it commutes with the prefix pruning (DedupGuardSpec). The
     // oracle replays the routed union branch by branch at RoutedCap.
-    Q("st12_stream_routed_dedup",
+    Q("st12_stream_routed_dedup", Seq(TextQ.BandStore, TextQ.GramStore),
       (s, d) =>
         streamIngestDedup(s, d, "graft_st12_out", prefixes =>
           graft.operators.Dedup.bandsRoutedByRank(
@@ -1311,7 +1311,7 @@ object ExtQ {
     // (visualize.py:528), md5-derived per-id color (E13). The pixel
     // half (band painting, bitmap-digit labels, PNG/GIF encode) is
     // asserted per-pixel in RenderSpec — rasters aren't SQL.
-    Q("v01_draw_plan",
+    Q("v01_draw_plan", Seq(Derived.DetsStore),
       (s, d) => graft.sinks.Render.drawPlan(
         Derived.table(s, d, "dets"), width = 640, height = 480),
       Some(s"""WITH ${Derived.detCte},

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.Derived
 import graft.operators.{DetBox, Nms, Tracker, TrackerConfig, TrackerIn}
-import graft.sources.Multimodal
+import graft.sources.{Artifact, Multimodal}
 import graft.streaming.{StreamingTracker, TimedTrackerIn}
 
 /** Sequential-kernel queries (SURVEY §7.1 layer 2). EVERY kernel here
@@ -819,15 +819,25 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
     * the metrics pipeline, not a synthetic-data derivation), so the
     * deterministic derivation is written once per source-data
     * generation and FileScanned thereafter. Keyed by lineitem's
-    * (length, mtime) and the frame count; `_SUCCESS` gates readiness.
+    * (length, mtime); `_SUCCESS` gates readiness.
+    *
+    * One artifact KIND per frame count (the Derived.artifact rule):
+    * frame counts are coexisting datasets, not params versions, so they
+    * must not be `sub` values, whose sibling GC would let `Anchor
+    * sweep`'s f10000 build delete m11's f1000 store.
     */
   private[graft] def anchorArtifact(s: org.apache.spark.sql.SparkSession, d: String,
-                                    frames: Int): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_anchor_artifact",
-      Seq(new java.io.File(d, "lineitem.parquet")), sub = s"f$frames") { dir =>
+                                    frames: Int): String = {
+    graft.sources.ArtifactStore.retire(s, "graft_anchor_artifact")
+    graft.sources.ArtifactStore.resolve(s, s"graft_anchor_f$frames",
+      Seq(new java.io.File(d, "lineitem.parquet"))) { dir =>
       graft.Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
       s.sql(anchorBaseSql(frames)).write.mode("overwrite").parquet(dir)
     }
+  }
+
+  private[graft] def anchorStore(frames: Int): Artifact =
+    Artifact(s"anchor_f$frames")(anchorArtifact(_, _, frames))
 
   def anchorMetrics(s: org.apache.spark.sql.SparkSession, d: String,
                     frames: Int = 1000): org.apache.spark.sql.DataFrame = {
@@ -877,12 +887,15 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
   private val K10LatePred = "seq = 's0' AND frameIdx BETWEEN 60 AND 69"
   private val K10BaseMs = 1767225600000L // 2026-01-01T00:00:00Z
 
-  /** Writes k10's input as three single-file parquet micro-batches under
-    * a fresh temp dir and returns that dir. The stream clock advances
-    * ~17 min per batch (et = base + batch·1e6 ms + frameIdx·1e3 ms) so
-    * event time is monotone with ARRIVAL — a frame-only clock would let
-    * one sequence's later batches drag the watermark past the other's
-    * still-queued on-time frames and turn the drop set timing-dependent.
+  /** k10's input as three single-file parquet micro-batches, persisted
+    * like the derived tables they are cut from: a pure function of the
+    * source data, written once per data generation (from the gt_emb
+    * artifact, read by path) under one store directory. The stream
+    * clock advances ~17 min per batch (et = base + batch·1e6 ms +
+    * frameIdx·1e3 ms) so event time is monotone with ARRIVAL — a
+    * frame-only clock would let one sequence's later batches drag the
+    * watermark past the other's still-queued on-time frames and turn
+    * the drop set timing-dependent.
     * Layout:
     *
     *   batch 0: both seqs, frames 0–59 (on time)
@@ -905,28 +918,18 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
     * 60 s-apart modTimes — FileStreamSource processes oldest-first, so
     * batch order is deterministic.
     */
-  private val batchDirCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.SparkContext, String), String]
-
-  /** Exposed for Bench's untimed pre-touch: k10's three micro-batch
-    * input files are a pure function of the source dir (the same
-    * data-maintenance class as the derived/band artifacts), so the
-    * timed region should measure the stream, not the input write.
-    */
   private[graft] def timedBatchArtifact(s: org.apache.spark.sql.SparkSession,
-                                        d: String): String = timedBatchDir(s, d)
+                                        d: String): String =
+    graft.sources.ArtifactStore.resolve(s, "graft_k10_batches",
+      Seq("lineitem.parquet", "embeddings.parquet").map(new java.io.File(d, _))) { dir =>
+      writeTimedBatches(s, Derived.artifact(s, d, "gt_emb"), dir)
+    }
 
-  private def timedBatchDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    // contents are a pure function of the source dir — write once per
-    // (context, dir) instead of leaking a fresh temp copy per run
-    // (bench invokes k10 repeatedly: warm-up + timed)
-    batchDirCache.keys.filter(_._1.isStopped).foreach(batchDirCache.remove)
-    batchDirCache.getOrElseUpdate((s.sparkContext, d), writeTimedBatches(s, d))
-  }
+  val K10BatchStore: Artifact = Artifact("k10_batches")(timedBatchArtifact)
 
-  private def writeTimedBatches(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("k10_batches_").toString
-    val timed = Derived.table(s, d, "gt_emb").selectExpr(
+  private def writeTimedBatches(s: org.apache.spark.sql.SparkSession,
+                                gtEmb: String, dir: String): Unit = {
+    val timed = s.read.parquet(gtEmb).selectExpr(
         "seq", "frameIdx", "id", "x", "y", "w", "h",
         "slice(emb, 1, 2) AS emb",
         """CASE WHEN frameIdx < 60 THEN 0
@@ -944,7 +947,7 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
         "batch")
     (0 to 2).foreach { b =>
       timed.filter(col("batch") === b).drop("batch")
-        .coalesce(1).write.parquet(s"$dir/batch=$b")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/batch=$b")
     }
     val t0 = System.currentTimeMillis()
     (0 to 2).foreach { b =>
@@ -957,7 +960,10 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
             s"could not set batch mtime on $f")
         }
     }
-    dir
+    // publish only after all three batches and their mtimes landed
+    // (the stream source skips `_`-prefixed files)
+    require(new java.io.File(dir, "_SUCCESS").createNewFile(),
+      s"could not publish $dir")
   }
 
   // ONE config instance per tracker query, shared between the Spark
@@ -987,7 +993,7 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
 
     // O5 — greedy NMS kernel per (seq, frame), kept rows oracle-checked
     // against the recursive-CTE replay of the same greedy scan.
-    Q("k01_nms",
+    Q("k01_nms", Seq(Derived.DetsStore),
       (s, d) => {
         Nms.nms(detBoxes(s, d), iouThreshold = 0.5).toDF()
           .select(col("seq"), col("frame").cast("int").as("frame"),
@@ -996,7 +1002,7 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
 
     // O6 — nested-detection removal kernel (containment + confidence
     // precedence matrix + eviction), kept rows oracle-checked.
-    Q("k02_nested_removal",
+    Q("k02_nested_removal", Seq(Derived.DetsStore),
       (s, d) => {
         Nms.removeNested(detBoxes(s, d), nmsThreshold = 0.5).toDF()
           .select(col("seq"), col("frame").cast("int").as("frame"),
@@ -1006,13 +1012,13 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
     // T1–T6 — the FULL default tracker (Kalman + spatial index +
     // bidirectional matching + lifecycle), fully oracle-checked: the
     // Kalman recursive-CTE replay above reproduces every emitted row.
-    Q("k03_track",
+    Q("k03_track", Seq(Derived.GtEmbStore),
       (s, d) => trackRows(Tracker.track(trackerInput(s, d), k03Cfg)),
       Some(kalmanTrackOracle(greedy = false, k03Cfg))),
 
     // J4 — same full tracker under pure-greedy global matching, also
     // fully oracle-checked (Kalman replay + sorted-pair greedy fold).
-    Q("k04_track_greedy",
+    Q("k04_track_greedy", Seq(Derived.GtEmbStore),
       (s, d) => trackRows(Tracker.track(trackerInput(s, d), k04Cfg)),
       Some(kalmanTrackOracle(greedy = true, k04Cfg))),
 
@@ -1021,7 +1027,7 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
     // step, mutual-best matching, lifecycle, matched-only emission,
     // min-length filter). The embedding is sliced to 2 dims so the
     // appearance cosine is exact shared-text arithmetic on both sides.
-    Q("k08_track_nokalman",
+    Q("k08_track_nokalman", Seq(Derived.GtEmbStore),
       (s, d) => trackRows(Tracker.track(trackerInput(s, d), k08Cfg)),
       Some(trackOracle(greedy = false, k08Cfg))),
 
@@ -1031,7 +1037,7 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
     // fold. Together k08+k09 oracle both matching policies; only the
     // Kalman-state variants (k03/k04/k05) remain rows-only (covered by
     // ScalaTest goldens + tools/tracker_oracle.py instead).
-    Q("k09_track_greedy_nokalman",
+    Q("k09_track_greedy_nokalman", Seq(Derived.GtEmbStore),
       (s, d) => trackRows(Tracker.track(trackerInput(s, d), k09Cfg)),
       Some(trackOracle(greedy = true, k09Cfg))),
 
@@ -1042,7 +1048,7 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
     // k04 had to drop (its Kalman-gated oracle trips a DuckDB
     // nondeterministic-evaluation bug; this constant-radius fold is
     // stable — see PLANS.md).
-    Q("k11_track_greedy_gated",
+    Q("k11_track_greedy_gated", Seq(Derived.GtEmbStore),
       (s, d) => trackRows(Tracker.track(trackerInput(s, d), k11Cfg)),
       Some(trackOracle(greedy = true, k11Cfg))),
 
@@ -1054,7 +1060,7 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
     // mergeTileDetections translates to image coords and runs the
     // cross-tile NMS + nested-removal chain. Oracle = shared-text
     // derivation + both kernel replays chained in one recursive query.
-    Q("f04_tile_merge",
+    Q("f04_tile_merge", Seq(Derived.DetsStore),
       (s, d) => {
         val base = Derived.table(s, d, "dets").selectExpr(
           "concat(seq, ':', CAST(frame AS STRING)) AS img",
@@ -1084,7 +1090,7 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
     // (frame, id) order, so row-for-row equality with the batch tracker
     // is a REAL end-to-end check of the streaming code path (not just
     // the ScalaTest parity suite).
-    Q("k05_track_streaming",
+    Q("k05_track_streaming", Seq(Derived.GtEmbStore),
       (s, d) => trackRows(StreamingTracker.track(trackerInput(s, d), k03Cfg)),
       Some(kalmanTrackOracle(greedy = false, k03Cfg))),
 
@@ -1101,10 +1107,10 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
     // eviction all break the hash. This also makes the
     // snapshotCore/restoreCore round-trip oracle-checked (k05's batch
     // host sees each sequence once, so it never restores mid-stream).
-    Q("k10_track_timed",
+    Q("k10_track_timed", Seq(K10BatchStore),
       (s, d) => ExtQ.withStreamShuffle(s) {
         import s.implicits._
-        val dir = timedBatchDir(s, d)
+        val dir = timedBatchArtifact(s, d)
         val name = ExtQ.sinkName("k10_timed_", d)
         val q = StreamingTracker.trackTimed(
             s.readStream.schema(org.apache.spark.sql.Encoders.product[TimedTrackerIn].schema)
@@ -1125,7 +1131,7 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
     // (≈50k gt rows). The reference docstring estimates 10–15 s
     // (src/utils/eval.py:685-689); bench records ours. Oracle = the full
     // m02 metric CTE chain over the SAME anchor derivation text.
-    Q("m11_eval_anchor",
+    Q("m11_eval_anchor", Seq(anchorStore(1000)),
       (s, d) => anchorMetrics(s, d),
       Some(s"""WITH gt AS (
         |${anchorSql(jitter = false)}

@@ -141,7 +141,7 @@ object MotQ {
   val defs: Seq[Q] = Seq(
 
     // J5 — per-frame greedy IoU argmax (MotEval.matchFrames).
-    Q("m01_iou_match",
+    Q("m01_iou_match", Seq(Derived.GtStore, Derived.TracksStore),
       (s, d) => {
         val gt = Derived.table(s, d, "gt")
         val tr = Derived.table(s, d, "tracks")
@@ -168,7 +168,7 @@ object MotQ {
         |WHERE rn = 1""".stripMargin)),
 
     // A2/A7-A14 — full CLEAR + Identity metrics per sequence.
-    Q("m02_clear_metrics",
+    Q("m02_clear_metrics", Seq(Derived.GtStore, Derived.TracksStore),
       (s, d) => {
         val gt = Derived.table(s, d, "gt")
         val tr = Derived.table(s, d, "tracks")
@@ -197,7 +197,7 @@ object MotQ {
     // J1 — grid band join ≡ exact radius join: candidate-pair counts per
     // sequence (the oracle is the NAIVE theta join — proving the
     // cell-key construction loses and invents nothing).
-    Q("m03_band_join",
+    Q("m03_band_join", Seq(Derived.GtStore, Derived.TracksStore),
       (s, d) => {
         val gt = Derived.table(s, d, "gt")
           .withColumn("cx", col("x") + col("w") / 2)
@@ -222,7 +222,7 @@ object MotQ {
     // graft_dist_le predicate, automatically rewritten to the cell
     // equi-join. Oracle = the same naive theta join as m03 — proving
     // rule-rewritten results match the unoptimized semantics.
-    Q("m10_distance_join_rule",
+    Q("m10_distance_join_rule", Seq(Derived.GtStore, Derived.TracksStore),
       (s, d) => {
         val gt = Derived.table(s, d, "gt")
           .withColumn("cx", col("x") + col("w") / 2)
@@ -245,7 +245,7 @@ object MotQ {
 
     // J3 — mutual-best match with the restricted det-side rank
     // (reference src/tracking.py:1002-1011 subtlety).
-    Q("m04_mutual_best",
+    Q("m04_mutual_best", Seq(Derived.GtStore, Derived.TracksStore),
       (s, d) => {
         val gt = Derived.table(s, d, "gt")
           .withColumn("cx", col("x") + col("w") / 2)
@@ -287,7 +287,7 @@ object MotQ {
         |WHERE rn_d = 1""".stripMargin)),
 
     // J7 — consecutive-frame self-join with pair features (E1/E2).
-    Q("m05_consecutive_pairs",
+    Q("m05_consecutive_pairs", Seq(Derived.GtStore),
       (s, d) => {
         val gt = Derived.table(s, d, "gt")
         graft.operators.Matching.consecutiveMatches(gt)
@@ -313,7 +313,7 @@ object MotQ {
         |JOIN gt n ON n.seq = g.seq AND n.frameIdx = f.nextFrameIdx AND n.id = g.id""".stripMargin)),
 
     // A4 — GT-derived thresholds with quantized-cosine appearance (E3).
-    Q("m06_gt_thresholds",
+    Q("m06_gt_thresholds", Seq(Derived.GtEmbStore),
       (s, d) => {
         import graft.functions.Vectors
         val gt = Derived.table(s, d, "gt_emb")
@@ -374,7 +374,7 @@ object MotQ {
         |FROM feat""".stripMargin)),
 
     // S6/O8 — the eval.txt GT filter (strict threshold + dedup).
-    Q("m07_eval_filter",
+    Q("m07_eval_filter", Seq(Derived.GtStore, Derived.TracksStore),
       (s, d) => {
         val gt = Derived.table(s, d, "gt")
         val tr = Derived.table(s, d, "tracks")
@@ -407,7 +407,7 @@ object MotQ {
 
     // J8 — seeded negative-pair sampling (anti-join + deterministic
     // hash-ordered row_number).
-    Q("m08_negative_pairs",
+    Q("m08_negative_pairs", Seq(Derived.GtStore),
       (s, d) => {
         val gt = Derived.table(s, d, "gt")
         val m = graft.operators.Matching.consecutiveMatches(gt)

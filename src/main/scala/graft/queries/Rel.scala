@@ -7,7 +7,8 @@ import graft.Tables
 import graft.functions.Text
 import graft.operators.TextAnalysis
 
-/** One catalog entry: Spark implementation + (optional) DuckDB oracle.
+/** One catalog entry: Spark implementation + (optional) DuckDB oracle
+  * + the persisted artifacts the implementation reads (`needs`).
   *
   * The oracle is held as a thunk so a query MAY build its SQL lazily —
   * `Verify` dumps `oracle_sql.json` AFTER running every query, which
@@ -16,9 +17,15 @@ import graft.operators.TextAnalysis
   * identical constants instead of each calling its own libm. The
   * common `Q(name, fn, Some(sql))` form stays eager — the string is
   * built once at catalog construction, exactly as before.
+  *
+  * `needs` lists exactly the artifacts `fn` resolves, so Bench builds
+  * them before the timed region (a build inside it is data maintenance
+  * billed to a query) and a query that reads an undeclared one shows
+  * up as a build inside its timed run (NeedsSpec).
   */
 final class Q(
     val name: String,
+    val needs: Seq[graft.sources.Artifact],
     val fn: (SparkSession, String) => DataFrame,
     oracleThunk: Option[() => String]) {
   def oracle: Option[String] = oracleThunk.map(_())
@@ -28,13 +35,19 @@ object Q {
   def apply(name: String,
             fn: (SparkSession, String) => DataFrame,
             oracle: Option[String]): Q =
-    new Q(name, fn, oracle.map(s => () => s))
+    new Q(name, Nil, fn, oracle.map(s => () => s))
+
+  /** Catalog entry that reads persisted artifacts. */
+  def apply(name: String, needs: Seq[graft.sources.Artifact],
+            fn: (SparkSession, String) => DataFrame,
+            oracle: Option[String]): Q =
+    new Q(name, needs, fn, oracle.map(s => () => s))
 
   /** Catalog entry whose oracle SQL is (re)built at each `oracle` read. */
   def lazyOracle(name: String,
                  fn: (SparkSession, String) => DataFrame)
                 (oracle: => String): Q =
-    new Q(name, fn, Some(() => oracle))
+    new Q(name, Nil, fn, Some(() => oracle))
 }
 
 /** Relational / events / text query catalog (driver-verified against

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Artifact
 import graft.functions.Text
 import graft.operators.{Dedup, SequencePack, SimilaritySearch, TextAnalysis}
 
@@ -180,15 +181,13 @@ object TextQ {
       |""".stripMargin
 
   /** Verified embedding near-dup pairs, materialized ONCE per
-    * (context, dir) — the same persisted-stage pattern as
+    * (session, dir) — the same persisted-stage pattern as
     * `scoredPairs`: d06 reports the pairs, d08 clusters them, and a
     * real dedup DAG would likewise persist the verified-pairs table
     * before fanning out.
     */
-  private val ndPairCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.SparkContext, String), org.apache.spark.sql.DataFrame]
   private def ndPairs(s: org.apache.spark.sql.SparkSession, d: String) =
-    memoized(ndPairCache, s, d) {
+    graft.SessionMemo.cached(s, ("nd_pairs", d)) {
       Dedup.embeddingNearDupLsh(Tables.embeddings(s, d),
         numTables = 2, planesPerTable = 6, threshold = 0.40)
     }
@@ -252,24 +251,6 @@ object TextQ {
     * jaccardPairs' size-ratio prefilter then drops colliding-but-
     * dissimilar pairs before any gram array is shuffled.
     */
-  /** Memoize a materialized (cache + count) DataFrame per
-    * (context, dir). Keyed by context because a DataFrame is bound to
-    * it: a restarted context must not see a stopped one's entries.
-    * Evict only entries whose owning context has actually stopped —
-    * two live sessions in one JVM must not thrash each other's cache.
-    */
-  private def memoized(
-      cache: scala.collection.concurrent.TrieMap[(org.apache.spark.SparkContext, String), org.apache.spark.sql.DataFrame],
-      s: org.apache.spark.sql.SparkSession, d: String)(
-      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    cache.keys.filter(_._1.isStopped).foreach(cache.remove)
-    cache.getOrElseUpdate((s.sparkContext, d), {
-      val df = build.cache()
-      df.count()
-      df
-    })
-  }
-
   /** Recompute the corpus's MinHash band-signature table `(doc_id,
     * band, band_sig, source)` from raw text — used ONLY to build the
     * on-disk artifact ([[bandArtifact]]); every query-time consumer
@@ -418,13 +399,9 @@ object TextQ {
     * Keyed by resolved store path, so a regenerated artifact (new
     * generation directory) never serves a stale index.
     */
-  private val storeReadCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.SparkContext, String), org.apache.spark.sql.DataFrame]
   private[graft] def storeRead(s: org.apache.spark.sql.SparkSession,
-                               path: String): org.apache.spark.sql.DataFrame = {
-    storeReadCache.keys.filter(_._1.isStopped).foreach(storeReadCache.remove)
-    storeReadCache.getOrElseUpdate((s.sparkContext, path), s.read.parquet(path))
-  }
+                               path: String): org.apache.spark.sql.DataFrame =
+    graft.SessionMemo(s, ("store", path))(s.read.parquet(path))
 
   private[graft] def prunedCorpusBands(s: org.apache.spark.sql.SparkSession,
                                        d: String, prefixes: Seq[String],
@@ -960,34 +937,14 @@ object TextQ {
       Dedup.jaccardPairsFromSets(gramSetsOf(s, d), cands, minJaccard = 0.5)
     }
 
-  /** Drop every memoized materialization owned by `s` (band table,
-    * scored pairs, embedding near-dup pairs) and unpersist their cached
-    * data — the bench isolation hook: each timed query then pays its
-    * own first-touch cost, so per-query numbers are order-independent.
-    */
-  def resetMaterializations(s: org.apache.spark.sql.SparkSession): Unit = {
-    Seq(ndPairCache).foreach { c =>
-      c.keys.filter(_._1 == s.sparkContext).foreach { k =>
-        c.remove(k).foreach(_.unpersist())
-      }
-    }
-    // uncached relation memos (file-index reuse): nothing persisted to
-    // release — dropping the entries makes each timed query pay its
-    // own store listing, the same isolation rule as the caches above
-    storeReadCache.keys.filter(_._1 == s.sparkContext)
-      .foreach(storeReadCache.remove)
-    // transient per-query handles (semDeDup assignment, st7's final
-    // label snapshot) die with the query run, not the session
-    graft.CacheRegistry.drain(s)
-  }
-
-  /** Vocab collected by the t16 query run — NOT a perf materialization
-    * (deliberately untouched by [[resetMaterializations]]): it is the
-    * model artifact the lazily-built t16 oracle interpolates, so the
-    * oracle dumped after a Verify run carries exactly the integers the
-    * Spark result was scored with. Keyed by (context, dir) like
-    * bandCache: a session that runs t16 against two datasets must not
-    * let the second run's vocab masquerade as the first's.
+  /** Vocab collected by the t16 query run — NOT session state over an
+    * artifact, so it lives outside [[graft.SessionMemo]] and survives
+    * its reset: it is the model the lazily-built t16 oracle
+    * interpolates, read AFTER the query run (Verify dumps oracles last),
+    * and a reset in between must not lose the integers the Spark result
+    * was scored with. Keyed by (context, dir):
+    * a session that runs t16 against two datasets must not let the
+    * second run's vocab masquerade as the first's.
     */
   private[queries] val t16Vocab =
     scala.collection.concurrent.TrieMap.empty[(org.apache.spark.SparkContext, String), Seq[(String, Long, Long)]]
@@ -2108,6 +2065,20 @@ object TextQ {
         |  FROM cos) t
         |WHERE rank <= 5""".stripMargin
 
+  // The persisted stores above, as the artifacts catalog rows declare
+  // in `needs` (built untimed by Bench's pre-touch, by the maintain
+  // commands, or by the query's own first resolve).
+  val BandStore = Artifact("band")(bandArtifact)
+  val GramStore = Artifact("gram")(gramArtifact)
+  val ClusterStore = Artifact("cluster")(clusterArtifact)
+  val SimhashStore = Artifact("simhash")(simhashArtifact)
+  val AnnStore = Artifact("ann")(annArtifact)
+  val AnnCorpusStore = Artifact("ann_corpus")(annCorpusArtifact)
+  val SemStore = Artifact("sem")(semArtifact)
+  val DsirStore = Artifact("dsir")(dsirArtifact)
+  val ClfStore = Artifact("clf")(clfArtifact)
+  val DecontamStore = Artifact("decontam")(decontamArtifact)
+
   val defs: Seq[Q] = Seq(
 
     // Language-ID confusion matrix: label vs stopword-argmax prediction.
@@ -2577,7 +2548,7 @@ object TextQ {
     // collisions, verified with exact token-set Jaccard (the full
     // near-dup pipeline: shingle -> minhash -> band -> bucket-join ->
     // verify). Oracle replicates every stage.
-    Q("d05_minhash_lsh_pairs",
+    Q("d05_minhash_lsh_pairs", Seq(BandStore, GramStore),
       (s, d) => {
         scoredPairs(s, d)
           .select(col("doc_a"), col("doc_b"),
@@ -2626,7 +2597,7 @@ object TextQ {
     // pairs (iterative min-label propagation, deterministic fixpoint).
     // Oracle = recursive-CTE transitive closure + min. `keep` marks the
     // canonical representative a dedup pass would retain.
-    Q("d07_dedup_clusters",
+    Q("d07_dedup_clusters", Seq(BandStore, GramStore),
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         // deliberately the UNCAPPED clique: a capped bucket would drop
@@ -2655,7 +2626,7 @@ object TextQ {
     // closure verbatim: the incremental fixpoint must be bit-identical
     // to batch CC over all edges, which is exactly the correctness
     // claim that makes incremental maintenance trustworthy.
-    Q("d17_incremental_cc",
+    Q("d17_incremental_cc", Seq(BandStore, ClusterStore, GramStore),
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val banded = bandSigs(s, d)
@@ -2740,7 +2711,7 @@ object TextQ {
     // ingest blow-up guard, round 18 — truncation observable), exact-
     // Jaccard verify at 0.5, then a per-new-doc match count;
     // kept = no verified corpus near-dup.
-    Q("d09_incremental_dedup",
+    Q("d09_incremental_dedup", Seq(BandStore, GramStore),
       (s, d) => {
         val banded = bandSigs(s, d)
         incrementalDedup(s, d,
@@ -2760,7 +2731,7 @@ object TextQ {
     // verify chain, same oracle — the artifact path must answer
     // identically to the recompute path (PlanShapeSpec additionally
     // pins the corpus side to a FileScan of the artifact).
-    Q("d15_band_artifact",
+    Q("d15_band_artifact", Seq(BandStore, GramStore),
       (s, d) => {
         val corpusBands = s.read.parquet(s"${bandArtifact(s, d)}/full")
           .filter(col("source") =!= "src0")
@@ -2794,7 +2765,7 @@ object TextQ {
     // uncapped answer exactly (the by-construction under-merge-window
     // close). Reference analogue: the dispatching filter cascade,
     // /root/reference/src/detection.py:1043-1118.
-    Q("d26_routed_dedup",
+    Q("d26_routed_dedup", Seq(BandStore, GramStore),
       (s, d) => {
         val banded = bandSigs(s, d)
         incrementalDedup(s, d,
@@ -2876,7 +2847,7 @@ object TextQ {
     // join, no eval re-tokenization, no corpus scan. False positives
     // die in the exact join, so the probe shares d10's oracle
     // scaffolding restricted to the batch slice.
-    Q("d25_decontam_incremental",
+    Q("d25_decontam_incremental", Seq(DecontamStore),
       (s, d) => {
         val docs = Tables.documents(s, d)
         decontamArtifact(s, d)  // build/refresh at batch parallelism
@@ -2925,7 +2896,7 @@ object TextQ {
     // d07's (members verified only against the hub, not each other) —
     // that approximation is the standard web-scale dedup trade; the
     // oracle replays exactly this star chain.
-    Q("d12_star_dedup",
+    Q("d12_star_dedup", Seq(BandStore, GramStore),
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val stars = Dedup.minhashCandidatesStarFromBands(bandSigs(s, d))
@@ -3054,7 +3025,7 @@ object TextQ {
     // incremental fixpoint must be bit-identical to batch semDeDup
     // over all vectors — the correctness claim that makes semantic
     // maintenance trustworthy.
-    Q("d21_semdedup_incremental",
+    Q("d21_semdedup_incremental", Seq(SemStore),
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         val art = semArtifact(s, d)
@@ -3138,7 +3109,7 @@ object TextQ {
     // frozen LMs exclude the batch from their own training by design
     // (scoring data with statistics it contributed is lookahead); the
     // oracle freezes the same slices.
-    Q("d22_dsir_incremental",
+    Q("d22_dsir_incremental", Seq(DsirStore),
       (s, d) => {
         import TextAnalysis.{SampleLcgA, SampleLcgC, SampleModulus}
         val docs = Tables.documents(s, d)
@@ -3419,7 +3390,7 @@ object TextQ {
     // rest (PlanShapeSpec pins the pruned scan). Same oracle as s08:
     // the code table is a deterministic projection, so the stored and
     // inline forms must answer row-identically.
-    Q("s09_ivf_pq_store",
+    Q("s09_ivf_pq_store", Seq(AnnStore),
       // through the ONE serving entry point (servedPqProbe) with the
       // catalog's explicit nprobe pin — the oracle hash must never
       // depend on whether ann-maintain stored a sidecar suggestion;
@@ -3455,7 +3426,7 @@ object TextQ {
     // encode. Same oracle as s10: the residual code table is a
     // deterministic projection, so stored and inline forms must
     // answer row-identically.
-    Q("s11_ivf_rpq_store",
+    Q("s11_ivf_rpq_store", Seq(AnnStore),
       // servedRPqProbe with the explicit catalog pin (see s09's note)
       (s, d) => servedRPqProbe(s, d,
         Tables.embeddings(s, d).filter(col("vec_id") < 10), Some(2)),
@@ -3493,7 +3464,7 @@ object TextQ {
     // exactly the full-table plan trained on the corpus slice — the
     // oracle is the s08 replay with both seed draws restricted to the
     // corpus.
-    Q("s12_ann_delta",
+    Q("s12_ann_delta", Seq(AnnCorpusStore),
       // servedDeltaProbe with the explicit catalog pin (see s09's note)
       (s, d) => servedDeltaProbe(s, d,
         Tables.embeddings(s, d).filter(col("vec_id") < 10), Some(2)),
@@ -3571,7 +3542,7 @@ object TextQ {
     // scan, no retrain. This is the CCNet/fastText deployment shape —
     // the classifier is trained once, then the corpus streams through
     // it.
-    Q("t18_classifier_incremental",
+    Q("t18_classifier_incremental", Seq(ClfStore),
       (s, d) => {
         val docs = Tables.documents(s, d)
         clfArtifact(s, d)  // build/refresh at batch parallelism
@@ -3670,7 +3641,7 @@ object TextQ {
     // Cost scales with the batch's distinct fingerprints, never the
     // corpus pair space; PlanShapeSpec pins the equi-keyed join and
     // the artifact FileScan.
-    Q("d18_simhash64_incremental",
+    Q("d18_simhash64_incremental", Seq(SimhashStore),
       (s, d) => {
         val fps = simhashFps(s, d)
         Dedup.simhash64BallPairsAgainst(

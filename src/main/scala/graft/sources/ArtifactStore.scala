@@ -42,9 +42,27 @@ import org.apache.spark.sql.SparkSession
   * the old directory, so a later action on a stale memoized relation
   * fails with a missing-file error instead of serving rows from data
   * that no longer exists. Sessions are expected to be restarted across
-  * data generations (the driver always is).
+  * data generations (Bench and Verify always are), or to drop their
+  * memoized relations with `SessionMemo.reset` first (dedup-maintain
+  * does).
   */
 object ArtifactStore {
+
+  /** Builds run by [[resolve]] in this JVM. Bench reads it around each
+    * timed query: a build there means the query reads an artifact it
+    * does not declare in its `needs`.
+    */
+  val builds = new java.util.concurrent.atomic.AtomicLong
+
+  /** Delete the root of a retired artifact kind (a layout no current
+    * code reads), if one is left in the store from an older version.
+    */
+  def retire(spark: SparkSession, kind: String): Unit = {
+    val root = new org.apache.hadoop.fs.Path(
+      s"${System.getProperty("java.io.tmpdir")}/$kind")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(root)) fs.delete(root, true)
+  }
 
   /** The artifact directory this (kind, sources, sub) resolves to —
     * shared by [[resolve]] (build-if-missing) and [[resolveExisting]]
@@ -154,8 +172,17 @@ object ArtifactStore {
         fs.listStatus(kindRoot).map(_.getPath)
           .filter(p => p.getName.length != 12)
           .foreach(p => fs.delete(p, true))
+      builds.incrementAndGet()
       build(dir)
     }
     dir
   }
 }
+
+/** A persisted input a catalog query reads (see `Q.needs`): `resolve`
+  * returns its directory for a source dir, building it first if this
+  * data generation lacks it. Equal by name, so `distinct` over the
+  * declarations of many queries resolves each artifact once.
+  */
+final case class Artifact(name: String)(
+    val resolve: (SparkSession, String) => String)

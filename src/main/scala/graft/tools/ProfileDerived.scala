@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Derived, LocalSession}
+import graft.{Bench, Derived, LocalSession}
 
 /** Measures the Derived first-touch cost the bench-isolation hook
   * makes every MOT-operator query pay: cold materialization of each
@@ -21,8 +21,7 @@ object ProfileDerived {
     // JVM/codegen warmup outside the measurements (Bench does the same)
     spark.range(1000000).selectExpr("sum(id % 7)").collect()
     for (round <- 1 to 2) {
-      Derived.reset(spark)
-      spark.catalog.clearCache()
+      Bench.isolate(spark)
       time(s"r$round dets cold")(Derived.table(spark, dir, "dets").count())
       time(s"r$round dets warm")(Derived.table(spark, dir, "dets").count())
       time(s"r$round gt cold")(Derived.table(spark, dir, "gt").count())
@@ -38,7 +37,7 @@ object ProfileDerived {
         lit(800.0), lit(800.0),
         confThreshold = 0.5, minSize = 100.0, edgeTol = 4.0).count()
     }
-    Derived.reset(spark); spark.catalog.clearCache()
+    Bench.isolate(spark)
     time("f01 cold (incl dets)")(f01())
     time("f01 warm")(f01())
     spark.stop()

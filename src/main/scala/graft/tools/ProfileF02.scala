@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Derived, LocalSession, SparkEntry}
+import graft.{Bench, Derived, LocalSession, SparkEntry}
 
 /** Where does f02's isolated first-touch CPU go? Round-12 driver record:
   * f02 7.91 s wall / 31 CPU-s vs f01 3.20/21.7 on the same cached dets
@@ -24,29 +24,23 @@ object ProfileF02 {
       println(f"[prof] $label%-34s ${(System.nanoTime() - t0) / 1e9}%7.2f s  cpu ${(osBean.getProcessCpuTime - c0) / 1e9}%6.1f s")
       r
     }
-    def isolate(): Unit = {
-      Derived.reset(spark)
-      graft.queries.TextQ.resetMaterializations(spark)
-      spark.catalog.clearCache()
-      graft.streaming.StreamHygiene.reset(spark)
-    }
     def runQ(name: String): Unit =
       SparkEntry.queries(name)(spark, dir).write.mode("overwrite").format("noop").save()
     spark.range(1000000).selectExpr("sum(id % 7)").collect()
     // bench-like heavy context (the condition under which the gap shows)
     for (q <- Seq("d05_minhash_lsh_pairs", "d06_embedding_neardup",
         "d07_dedup_clusters", "d16_simhash64_ball")) {
-      isolate(); time(s"context $q")(runQ(q))
+      Bench.isolate(spark); time(s"context $q")(runQ(q))
     }
-    isolate()
+    Bench.isolate(spark)
     time("dets materialize alone")(Derived.table(spark, dir, "dets").count())
     time("f02 rest (dets warm)")(runQ("f02_mask_filter"))
-    isolate()
+    Bench.isolate(spark)
     time("f02 cold")(runQ("f02_mask_filter"))
     time("f02 warm (no isolation)")(runQ("f02_mask_filter"))
-    isolate()
+    Bench.isolate(spark)
     time("f01 cold")(runQ("f01_filter_cascade"))
-    isolate()
+    Bench.isolate(spark)
     time("f02 cold again")(runQ("f02_mask_filter"))
     spark.stop()
   }

@@ -61,10 +61,7 @@ object ProfileQueryBench {
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)
       for (i <- 1 to 3) {
-        graft.Derived.reset(spark)
-        graft.queries.TextQ.resetMaterializations(spark)
-        spark.catalog.clearCache()
-        graft.streaming.StreamHygiene.reset(spark)
+        graft.Bench.isolate(spark)
         System.gc()
         val (j0, _) = javaThreadCpu()
         val c0 = osBean.getProcessCpuTime / 1e9

@@ -27,10 +27,7 @@ object ProfileStream {
 
     // catalog-fn timing through the exact bench path + hygiene hooks
     for (i <- 1 to 6; qn <- Seq("st2_stream_dedup", "st3_stream_session")) {
-      graft.Derived.reset(s)
-      graft.queries.TextQ.resetMaterializations(s)
-      s.catalog.clearCache()
-      graft.streaming.StreamHygiene.reset(s)
+      graft.Bench.isolate(s)
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(qn)(s, d).write.mode("overwrite").format("noop").save()
       println(f"[stream] catalog $qn run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")

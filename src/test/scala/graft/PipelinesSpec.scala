@@ -590,7 +590,7 @@ class PipelinesSpec extends AnyFunSuite {
         m.contains("graft_band_artifact") || m.toLowerCase.contains("file")),
       s"stale read should surface the missing artifact files: ${messages(err)}")
     // fresh queries over the rebuilt store answer identically
-    graft.queries.TextQ.resetMaterializations(spark)
+    graft.SessionMemo.reset(spark)
     before.foreach { case (q, want) =>
       assert(result(q) == want, s"$q diverged across the rollover")
     }

@@ -96,7 +96,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // product — candidates come from the (chunk, ckey) equi-join — and
     // (b) read BOTH sides' fingerprints from the persisted simhash
     // artifact, never re-fingerprint corpus text per ingest.
-    graft.queries.TextQ.resetMaterializations(spark)
+    graft.SessionMemo.reset(spark)
     val p = plan("d18_simhash64_incremental")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"incremental hamming-ball candidates must come from an equi-join:\n$p")
@@ -130,7 +130,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // cached inputs print the build plan under InMemoryRelation).
     // d07/d12 checkpoint mid-query (lineage truncation hides the scan
     // from their FINAL plans) but consume the pinned sources.
-    graft.queries.TextQ.resetMaterializations(spark)
+    graft.SessionMemo.reset(spark)
     val src = graft.queries.TextQ.bandSigs(spark, dir)
       .queryExecution.executedPlan.toString
     assert(src.contains("graft_band_artifact"),
@@ -138,7 +138,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!src.contains("documents.parquet"),
       s"bandSigs must not re-band raw documents text:\n${src.take(4000)}")
     for (q <- Seq("d05_minhash_lsh_pairs", "d09_incremental_dedup")) {
-      graft.queries.TextQ.resetMaterializations(spark)
+      graft.SessionMemo.reset(spark)
       val p = plan(q)
       assert(p.contains("graft_band_artifact"),
         s"$q must FileScan the band artifact, not re-band raw text:\n${p.take(4000)}")
@@ -156,7 +156,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // signature store (r13's one superlinear cross-SF curve). The
     // batch-side key push happens in st6's foreachBatch; the static
     // shape it builds is pinned here directly.
-    graft.queries.TextQ.resetMaterializations(spark)
+    graft.SessionMemo.reset(spark)
     val probe = graft.queries.TextQ
       .prunedCorpusBands(spark, dir, Seq("x00", "x3f", "xab"))
     val p = probe.queryExecution.executedPlan.toString
@@ -180,7 +180,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the ingest's pair-candidate side reads the byclust/ copy of the
     // semantic artifact with the batch's touched clusters pushed as
     // PartitionFilters — members of touched clusters, never the corpus
-    graft.queries.TextQ.resetMaterializations(spark)
+    graft.SessionMemo.reset(spark)
     val probe = graft.queries.TextQ.prunedSemState(spark, dir, Seq(1, 3, 5))
     val p = probe.queryExecution.executedPlan.toString
     assert(p.contains("graft_sem_artifact"),
@@ -381,7 +381,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // inline would show a documents/band scan here instead of the
     // label artifact's FileScan. (d17's FINAL plan checkpoint-truncates
     // like d07, so the source is pinned directly, as bandSigs is.)
-    graft.queries.TextQ.resetMaterializations(spark)
+    graft.SessionMemo.reset(spark)
     val src = graft.queries.TextQ.prevClusters(spark, dir)
       .queryExecution.executedPlan.toString
     assert(src.contains("graft_cluster_artifact"),

@@ -59,7 +59,7 @@ class StreamingParitySpec extends AnyFunSuite {
   test("st7 multi-batch cluster maintenance: fixpoint == single-batch d17; untouched cluster ids stable") {
     import org.apache.spark.sql.functions.col
     val d = "/root/testdata/sf0.001"
-    graft.queries.TextQ.resetMaterializations(spark)
+    graft.SessionMemo.reset(spark)
     // the batch fixpoint the stream must reach (d17 = one-shot merge of
     // the whole src0 slice; hash-checked against the recursive oracle)
     val d17 = SparkEntry.queries("d17_incremental_cc")(spark, d)
