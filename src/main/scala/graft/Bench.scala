@@ -302,7 +302,13 @@ object Bench {
         // smaller query than the one Verify checks and users run.
         val ok = try {
           q.fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true
-        } catch { case _: Throwable => false }
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(
+              s"[bench] ${q.name} failed: ${e.getClass.getName}: ${e.getMessage}")
+            e.printStackTrace()
+            false
+        }
         val r = (q.name, (System.nanoTime() - t0) / 1e9, ok, cpuSec() - c0)
         val built = sources.ArtifactStore.builds.get - builds0
         if (built > 0) System.err.println(
@@ -378,7 +384,7 @@ object Bench {
         else s""","mcr":${String.format(java.util.Locale.ROOT, "%.3f",
           Double.box(ratios(ratios.size / 2)))},"mcrn":${ratios.size}"""
       }
-    } catch { case _: Throwable => "" }
+    } catch { case scala.util.control.NonFatal(_) => "" }
     // short ids here too: full names would re-grow the line exactly on
     // the multi-failure runs where the tail window matters most, and a
     // consumer cross-references errors against the queries keys

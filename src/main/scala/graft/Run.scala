@@ -167,7 +167,7 @@ object Run {
         // overflowing bucket means the capped audit/ingest tiers are
         // already truncating there — and since round 20 the engine
         // EXECUTES the route: the routed hybrid probe
-        // (Dedup.minhashCandidatesAgainstRouted, catalog row
+        // (Dedup.bandsRoutedByRank on the corpus side, catalog row
         // d26_routed_dedup) dispatches overflowing buckets through the
         // linear star branch and closes the under-merge window by
         // construction, so the recommendation names the executor

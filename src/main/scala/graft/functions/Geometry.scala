@@ -88,12 +88,6 @@ object Geometry {
     when(frame.rlike("^[0-9]+$"), format_string("%06d", frame.cast("int")))
       .otherwise(frame)
 
-  /** E10 — embedding join key `"{frame}_{id}"` (reference
-    * src/tracking.py:983-984). Composite `(frame, id)` join keys are
-    * preferred in-engine; this exists for interchange parity.
-    */
-  def embKey(frame: Column, id: Column): Column = concat_ws("_", frame, id)
-
   /** E14 — spatial-grid cell id `floor(center / cellSize)` (reference
     * src/tracking.py:497-507). The grid IS an equi-join key: quantizing
     * centers turns the radius join into a hash join (SURVEY §4 P1).
@@ -112,8 +106,4 @@ object Geometry {
       conv(substring(h, 3, 2), 16, 10).cast("int").as("g"),
       conv(substring(h, 5, 2), 16, 10).cast("int").as("b"))
   }
-
-  /** E8 — (x,y,w,h) → corner struct. */
-  def toCorners(x: Column, y: Column, w: Column, h: Column): Column =
-    struct(x.as("x1"), y.as("y1"), (x + w).as("x2"), (y + h).as("y2"))
 }

@@ -75,10 +75,4 @@ object Vectors {
     * similarity (feature_extraction.py:289-296).
     */
   def appearanceSim(a: Column, b: Column): Column = (cosine(a, b) + lit(1.0)) / lit(2.0)
-
-  /** Random-hyperplane LSH bucket: `planes` hyperplane coefficient columns
-    * are derived portably from md5, see SimilaritySearch. Bit b = 1 when
-    * dotQ(v, plane_b) > 0.
-    */
-  def signBit(dotQ: Column): Column = when(dotQ > 0L, 1L).otherwise(0L)
 }

@@ -82,37 +82,10 @@ object Dedup {
       .select("doc_id", "clean_text", "n_spans", "n_kept")
   }
 
-  /** MinHash + LSH banding: docs sharing ≥1 band bucket become candidate
-    * pairs (shingle → minhash → band → bucket-join). `numHashes` hashes
-    * in `bands` bands of `numHashes/bands` rows each.
-    *
-    * Pair generation is an equi-join on (band, bucket-signature): only
-    * near-duplicates collide, so the join fan-out stays tiny even at
-    * billions of docs (the LSH guarantee), and the dedup never goes
-    * quadratic.
-    */
-  /** Per-seed minhashes as COLUMNS `mh0..mh{n-1}`: min over tokens of
-    * md5("s{seed}_" + token). Computed as a PER-ROW projection
-    * (`array_min(transform(tokens, …))`) — zero shuffles: the earlier
-    * explode + groupBy form exchanged |tokens|×n rows to re-group what
-    * was already row-local. Token-less docs are dropped (the grouped
-    * form produced no group for them). Values are identical to the
-    * seed-exploded form: min over a doc's distinct tokens.
-    */
-  def minhashSignatures(docs: DataFrame, numHashes: Int,
-                        textCol: String = "text"): DataFrame = {
-    val withToks = docs
-      .withColumn("__mh_toks", Text.distinctTokens(col(textCol)))
-      .filter(size(col("__mh_toks")) > 0)
-    val mhCols = (0 until numHashes).map(s =>
-      array_min(transform(col("__mh_toks"),
-        t => Text.md5s(concat(lit(s"s${s}_"), t)))).as(s"mh$s"))
-    withToks.select(col("doc_id") +: mhCols: _*)
-  }
-
-  /** Per-doc band signatures `(doc_id, band, band_sig)` — the shared
-    * banding stage behind both the clique (`minhashCandidates`) and
-    * star (`minhashCandidatesStar`) candidate generators.
+  /** Per-doc band signatures `(doc_id, band, band_sig)` — the banding
+    * stage behind every band-table candidate generator below; the
+    * catalog persists its output once per corpus as the band artifact
+    * (TextQ.bandSigs) and the generators read that table back.
     *
     * Band signature: md5 of the band's sorted "seed:minhash" strings.
     * The sort is LEXICOGRAPHIC over the concatenated string (not
@@ -130,7 +103,7 @@ object Dedup {
     // assembly) is CodegenFallback all the way down — numHashes
     // interpreted passes over every token list per row. Values are
     // identical (FunctionsSpec pins native == lambda reference);
-    // token-less docs are dropped like the minhashSignatures form did.
+    // token-less docs have no minhash and are dropped.
     docs.withColumn("__toks", Text.tokens(col(textCol)))
       .filter(size(col("__toks")) > 0)
       .select(col("doc_id"),
@@ -138,32 +111,34 @@ object Dedup {
           col("__toks"), lit(numHashes), lit(bands))).as(Seq("band", "band_sig")))
   }
 
-  def minhashCandidates(docs: DataFrame, numHashes: Int, bands: Int,
-                        textCol: String = "text"): DataFrame =
-    minhashCandidatesFromBands(bandSignatures(docs, numHashes, bands, textCol))
-
-  /** Clique candidates from a PRECOMPUTED `(doc_id, band, band_sig)`
-    * table. At 100 TB the band table is a persisted artifact computed
-    * once per corpus (bandSignatures is deterministic), not re-derived
-    * from raw text by every consumer — callers that share one
-    * materialized band table (d05/d07/d09/d12/st6 here) tokenize and
-    * hash the corpus once instead of once per query.
+  /** MinHash + LSH clique candidates from a band table `(doc_id, band,
+    * band_sig)`: docs sharing ≥1 band bucket become candidate pairs
+    * (doc_a < doc_b). Pair generation is an equi-join on (band,
+    * bucket-signature): only near-duplicates collide, so the join
+    * fan-out stays tiny even at billions of docs (the LSH guarantee),
+    * and the dedup never goes quadratic outside a duplicate cluster.
     *
-    * WHY THE CLUSTERING TIERS (d07/d17's verified edges) STAY ON THIS
-    * UNCAPPED FORM while the audit tier (d05) runs the capped one:
-    * capping a bucket DROPS candidate edges past the cap, and for
-    * connected components a dropped edge can silently SPLIT a true
-    * duplicate cluster — an under-merge that ships duplicates, worse
-    * for a dedup pass than a bounded pair report missing rows. The
-    * clique-within-bucket semantic is exactly what the clustering tier
-    * verifies (each edge Jaccard-checked before it merges anything),
-    * so its bound cannot come from truncation; the scale path for a
-    * pathological mega-bucket is the STAR form
-    * ([[minhashCandidatesStar]], d12 — linear per bucket, hub edges
-    * keep the bucket connected) or exact-hash grouping (d01), both of
-    * which bound the bucket without disconnecting it. A caller that
-    * wants the clique semantic AND a hard bound accepts the under-
-    * merge explicitly by calling [[minhashCandidatesFromBandsCapped]].
+    * The band table is a persisted artifact computed once per corpus
+    * ([[bandSignatures]] is deterministic), not re-derived from raw
+    * text by every consumer — callers that share one materialized band
+    * table (d05/d07/d09/d12/st6 here) tokenize and hash the corpus once
+    * instead of once per query.
+    *
+    * WHY THE CLUSTERING TIERS (d07/d17's verified edges) STAY UNCAPPED
+    * while the audit tier (d05) caps its buckets: capping a bucket
+    * DROPS candidate edges past the cap, and for connected components
+    * a dropped edge can silently SPLIT a true duplicate cluster — an
+    * under-merge that ships duplicates, worse for a dedup pass than a
+    * bounded pair report missing rows. The clique-within-bucket
+    * semantic is exactly what the clustering tier verifies (each edge
+    * Jaccard-checked before it merges anything), so its bound cannot
+    * come from truncation; the scale path for a pathological
+    * mega-bucket is the STAR form ([[minhashCandidatesStarFromBands]],
+    * d12 — linear per bucket, hub edges keep the bucket connected) or
+    * exact-hash grouping (d01), both of which bound the bucket without
+    * disconnecting it. A caller that wants the clique semantic AND a
+    * hard bound accepts the under-merge explicitly by passing the band
+    * table through [[bandsKeptByRank]] first (d05).
     */
   def minhashCandidatesFromBands(banded: DataFrame): DataFrame = {
     val a = banded.select(col("band"), col("band_sig"), col("doc_id").as("doc_a"))
@@ -230,113 +205,53 @@ object Dedup {
       .select("doc_a", "doc_b").distinct()
   }
 
-  /** [[minhashCandidatesFromBands]] with a per-bucket blow-up GUARD —
-    * the audit-tier safety the no-silent-caps rule's dual demands (no
-    * silent blow-ups): the bucket self-join is quadratic in bucket
-    * size, so one pathological band bucket (a boilerplate page
-    * duplicated 10⁶ times) silently emits ~10¹² pairs. Here each
-    * (band, band_sig) bucket contributes pairs from its first
-    * `maxDocsPerBucket` docs ONLY (doc_id order — deterministic), and
-    * the truncation is OBSERVABLE, never silent: the returned plan
-    * carries an `observe("graft_lsh_bucket_guard", truncated_doc_slots,
-    * doc_slots)` metric the caller's QueryExecutionListener (or the
-    * driver UI) reads after any action. Pairs among the kept docs are
-    * unaffected; a nonzero `truncated_doc_slots` is the signal to
-    * route the bucket to the exact tiers (d01/d12) instead of
-    * pairwise audit.
-    *
-    * The rank window shuffles on the same (band, band_sig) keys the
-    * join itself needs, so the guard adds no new shuffle stage shape.
+  /** Attach `metrics` to `df` as an observed metric: through the
+    * caller's Observation (which blocks on `get` after an action — the
+    * spec and maintenance-CLI read path) or under `metricName` (which
+    * feeds QueryExecutionListeners and the SQL UI). CollectMetrics
+    * names must be unique per query: two guards over DIFFERENT inputs
+    * composed into one plan fail at action time with duplicate names,
+    * so a second call site in one query passes its own `metricName`
+    * (or an Observation).
     */
-  def minhashCandidatesFromBandsCapped(banded: DataFrame,
-                                       maxDocsPerBucket: Int,
-                                       observation: Option[org.apache.spark.sql.Observation] = None,
-                                       metricName: String = "graft_lsh_bucket_guard"): DataFrame = {
-    require(maxDocsPerBucket >= 2,
-      s"maxDocsPerBucket must be >= 2 to emit any pair, got $maxDocsPerBucket")
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("band", "band_sig").orderBy("doc_id")
-    val withR = banded.select(col("band"), col("band_sig"), col("doc_id"))
-      .withColumn("__r", row_number().over(w))
-    val metrics = Seq(
-      sum(when(col("__r") > maxDocsPerBucket, 1L).otherwise(0L))
-        .as("truncated_doc_slots"),
-      count(lit(1)).as("doc_slots"))
-    // the Observation overload blocks on `get` after an action — the
-    // spec's read path; the named form feeds listeners/the SQL UI.
-    // CollectMetrics names must be unique per query: two capped calls
-    // over DIFFERENT inputs composed into one plan fail at action time
-    // with duplicate names (ADVICE r17) — a second call site in one
-    // query passes its own metricName (or an Observation).
-    val ranked = observation
-      .map(o => withR.observe(o, metrics.head, metrics.tail: _*))
-      .getOrElse(withR.observe(metricName,
-        metrics.head, metrics.tail: _*))
-      .filter(col("__r") <= maxDocsPerBucket)
-    val a = ranked.select(col("band"), col("band_sig"), col("doc_id").as("doc_a"))
-    val b = ranked.select(col("band"), col("band_sig"), col("doc_id").as("doc_b"))
-    a.join(b, Seq("band", "band_sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-  }
-
-  /** A band table capped per (band, band_sig) bucket — the CORPUS-side
-    * guard of the asymmetric ingest probes (d09/d15/st6), extending
-    * the d05 audit-tier guard to the shape every crawl batch runs at
-    * 100 TB: a pathological corpus bucket (boilerplate duplicated 10⁶
-    * times) otherwise multiplies EVERY colliding batch doc by the
-    * whole bucket. Keeps each bucket's first `maxDocsPerBucket` docs
-    * (doc_id order — deterministic), truncation OBSERVABLE via the
-    * same observe-metric pattern as the clique guard (`metricName`
-    * must be unique per plan — the composability rule).
-    *
-    * Semantics under truncation: the BATCH side is never cut — every
-    * new doc still probes every bucket it lands in; what a truncated
-    * bucket can do is undercount a new doc's `n_dups` (in the extreme,
-    * mark it `kept` though its only verified dups sat past the cap).
-    * A bucket only overflows when its signature is mass-duplicated
-    * boilerplate, where matching one of the first `maxDocsPerBucket`
-    * members is overwhelmingly likely — and the nonzero
-    * `truncated_doc_slots` metric is the signal to route that bucket
-    * to the exact tier (d01) instead. The rank window shuffles on the
-    * probe join's own keys, so no new shuffle shape at scale; the
-    * rank is bucket-local, so it commutes with any partition-pruned
-    * read of the same table (st6's prefix-pruned static side ranks
-    * identically to the full table).
-    */
-  def bandsCappedPerBucket(banded: DataFrame, maxDocsPerBucket: Int,
-                           observation: Option[org.apache.spark.sql.Observation] = None,
-                           metricName: String = "graft_lsh_corpus_guard"): DataFrame = {
-    require(maxDocsPerBucket >= 1,
-      s"maxDocsPerBucket must be >= 1, got $maxDocsPerBucket")
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("band", "band_sig").orderBy("doc_id")
-    val withR = banded.withColumn("__r", row_number().over(w))
-    val metrics = Seq(
-      sum(when(col("__r") > maxDocsPerBucket, 1L).otherwise(0L))
-        .as("truncated_doc_slots"),
-      count(lit(1)).as("doc_slots"))
+  private def observed(df: DataFrame,
+                       observation: Option[org.apache.spark.sql.Observation],
+                       metricName: String, metrics: Seq[Column]): DataFrame =
     observation
-      .map(o => withR.observe(o, metrics.head, metrics.tail: _*))
-      .getOrElse(withR.observe(metricName, metrics.head, metrics.tail: _*))
-      .filter(col("__r") <= maxDocsPerBucket)
-      .drop("__r")
-  }
+      .map(o => df.observe(o, metrics.head, metrics.tail: _*))
+      .getOrElse(df.observe(metricName, metrics.head, metrics.tail: _*))
 
-  /** The guard filter over a band table whose per-bucket rank is
-    * PRECOMPUTED (a stored column — graft's band artifact carries
-    * `bucket_rank` over all rows and `corpus_rank` over the corpus
-    * slice, written once per generation): keeps `rankCol <=
-    * maxDocsPerBucket` with the same observable-truncation metric as
-    * the window forms, but at probe time this is a scan-level filter
-    * plus a metric aggregation — ZERO windows, zero new shuffles.
-    * This is the form every artifact-backed catalog consumer uses
-    * (d05's clique via bucket_rank; d09/d15/st6's corpus side via
-    * corpus_rank); the window forms above remain for callers without
-    * a ranked table (and as the reference semantics the stored ranks
-    * must agree with — DedupGuardSpec pins the equivalence).
-    */
-  /** `extraMetrics` ride the same observe pass — the maintenance CLI
+  /** The per-bucket blow-up GUARD (the cap filter) over a band table
+    * whose per-bucket rank is PRECOMPUTED: keeps `rankCol <=
+    * maxDocsPerBucket`. graft's band artifact stores `bucket_rank`
+    * over all rows and `corpus_rank` over the corpus slice, each a
+    * `row_number` over the bucket in doc_id order written once per
+    * generation (DedupGuardSpec pins the stored ranks against a fresh
+    * window), so at probe time the guard is a scan-level filter plus a
+    * metric aggregation — zero windows, zero new shuffles.
+    *
+    * Why a cap: a bucket self-join is quadratic in bucket size, so one
+    * pathological band bucket (a boilerplate page duplicated 10⁶
+    * times) silently emits ~10¹² clique pairs, and on the asymmetric
+    * ingest probe multiplies EVERY colliding batch doc by the whole
+    * bucket. Capped, each bucket contributes its first
+    * `maxDocsPerBucket` docs only (doc_id order — deterministic), and
+    * the truncation is OBSERVABLE, never silent: the plan carries
+    * `truncated_doc_slots` and `doc_slots` (see [[observed]]); a
+    * nonzero `truncated_doc_slots` is the signal to route the bucket
+    * ([[bandsRoutedByRank]]) or to the exact tier (d01).
+    *
+    * Composition: d05 caps the clique by `bucket_rank`; d09/d15/st6
+    * cap only the CORPUS side of the ingest probe by `corpus_rank`.
+    * There the batch side is never cut — every new doc still probes
+    * every bucket it lands in; a truncated bucket can only undercount
+    * a new doc's `n_dups` (in the extreme, mark it `kept` though its
+    * only verified dups sat past the cap). The rank is bucket-local,
+    * so the filter commutes with any partition-pruned read of the same
+    * table (st6's prefix-pruned static side keeps exactly the full
+    * table's rows for its buckets).
+    *
+    * `extraMetrics` ride the same observe pass — the maintenance CLI
     * folds its mega-bucket stats (max rank, overflowing-bucket count)
     * into the guard's one scan instead of re-reading the band table
     * for a second aggregation.
@@ -352,38 +267,38 @@ object Dedup {
       sum(when(col(rankCol) > maxDocsPerBucket, 1L).otherwise(0L))
         .as("truncated_doc_slots"),
       count(lit(1)).as("doc_slots")) ++ extraMetrics
-    observation
-      .map(o => banded.observe(o, metrics.head, metrics.tail: _*))
-      .getOrElse(banded.observe(metricName, metrics.head, metrics.tail: _*))
+    observed(banded, observation, metricName, metrics)
       .filter(col(rankCol) <= maxDocsPerBucket)
   }
 
-  /** ROUTED asymmetric LSH candidates — the EXECUTOR for the
-    * maintenance report's `route=` recommendation (round 20; the
-    * recommendation was advisory through r19): buckets whose corpus
-    * side OVERFLOWS the cap are routed through the linear star shape —
-    * each colliding batch doc probes the overflowing bucket's FULL
-    * corpus membership, |bucket| candidates per (batch doc, bucket)
-    * like d12's hub stars are |bucket| edges per bucket — while every
-    * other bucket takes the capped tier, and the two branches union
-    * into one candidate set. By construction this closes the capped
-    * probe's under-merge window: a batch doc whose only true
+  /** The ROUTED corpus side `(band, band_sig, doc_id)` of the ingest
+    * probe (the route filter) — the EXECUTOR for the maintenance
+    * report's `route=` recommendation: buckets whose corpus side
+    * OVERFLOWS the cap keep their FULL membership, so each colliding
+    * batch doc probes the whole bucket — |bucket| candidates per
+    * (batch doc, bucket), linear like d12's hub stars — while every
+    * other bucket is capped as in [[bandsKeptByRank]], and the two
+    * branches union into one corpus side. Feeding it to
+    * [[minhashCandidatesAgainstFromBands]] (d26; st12 per trigger over
+    * its partition-pruned artifact read) closes the capped probe's
+    * under-merge window by construction: a batch doc whose only true
     * duplicates rank past the cap still meets them, because a bucket
     * deep enough to hold rank > cap necessarily overflowed and was
     * routed (the dispatching-cascade posture of the reference's filter
-    * chain, /root/reference/src/detection.py:1043-1118 — dispatch,
-    * don't advise).
+    * chain, src/detection.py:1043-1118 — dispatch, don't advise).
     *
     * `rankCol` is the PRECOMPUTED corpus-side bucket rank (the band
     * artifact's `corpus_rank` — consecutive from 1 within each bucket
     * in doc_id order), so both the routing decision (`rank == cap+1`
     * marks each overflowing bucket exactly once) and the capped branch
-    * are scan-level filters — zero probe-time windows. The overflow
-    * key set is broadcast BY CONTRACT: overflowing buckets are the
-    * pathological exception the route exists for (a store where they
-    * are the common case needs re-banding, which the maintenance
-    * report's overflow_buckets count exposes long before this join
-    * could hurt).
+    * are scan-level filters — zero probe-time windows. The decision is
+    * bucket-local like the rank itself, so it COMMUTES with any
+    * bucket-complete pruning of the table (DedupGuardSpec pins it, the
+    * st6 static-side argument). The overflow key set is broadcast BY
+    * CONTRACT: overflowing buckets are the pathological exception the
+    * route exists for (a store where they are the common case needs
+    * re-banding, which the maintenance report's overflow_buckets count
+    * exposes long before this join could hurt).
     *
     * Scale honesty: the routed branch is linear in bucket size per
     * colliding batch doc — bounded because ingest batches are bounded
@@ -392,22 +307,6 @@ object Dedup {
     * `routed_doc_slots` ride an observe over the routed branch, the
     * operational cost the routing trades against the capped tier's
     * silent truncation.
-    */
-  def minhashCandidatesAgainstRouted(bandedNew: DataFrame,
-      bandedCorpus: DataFrame, rankCol: String, maxCorpusPerBucket: Int,
-      observation: Option[org.apache.spark.sql.Observation] = None,
-      metricName: String = "graft_lsh_route"): DataFrame =
-    minhashCandidatesAgainstFromBands(bandedNew,
-      bandsRoutedByRank(bandedCorpus, rankCol, maxCorpusPerBucket,
-        observation, metricName))
-
-  /** The ROUTED corpus side itself `(band, band_sig, doc_id)` —
-    * factored out of [[minhashCandidatesAgainstRouted]] so the
-    * streaming ingest gate's per-trigger static side (st12) builds the
-    * identical union over its partition-pruned artifact read. The
-    * routing decision (`rank == cap+1`) is bucket-local like the rank
-    * itself, so it COMMUTES with any bucket-complete pruning of the
-    * table (DedupGuardSpec pins it, the st6 static-side argument).
     */
   def bandsRoutedByRank(bandedCorpus: DataFrame, rankCol: String,
       maxCorpusPerBucket: Int,
@@ -427,9 +326,7 @@ object Dedup {
       count(lit(1)).as("routed_doc_slots"),
       coalesce(sum(when(col(rankCol) === maxCorpusPerBucket + 1, 1L)
         .otherwise(0L)), lit(0L)).as("routed_buckets"))
-    val routed = observation
-      .map(o => routedRaw.observe(o, metrics.head, metrics.tail: _*))
-      .getOrElse(routedRaw.observe(metricName, metrics.head, metrics.tail: _*))
+    val routed = observed(routedRaw, observation, metricName, metrics)
       .select("band", "band_sig", "doc_id")
     // capped branch EXCLUDES the routed buckets (the branches stay
     // disjoint, so the union carries no duplicate corpus rows into the
@@ -463,40 +360,21 @@ object Dedup {
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
       .toSeq
 
-  /** [[minhashCandidatesAgainstFromBands]] with the corpus side capped
-    * per bucket ([[bandsCappedPerBucket]]) — the guarded ingest probe.
-    */
-  def minhashCandidatesAgainstFromBandsCapped(bandedNew: DataFrame,
-      bandedCorpus: DataFrame, maxCorpusPerBucket: Int,
-      observation: Option[org.apache.spark.sql.Observation] = None,
-      metricName: String = "graft_lsh_ingest_guard"): DataFrame =
-    minhashCandidatesAgainstFromBands(bandedNew,
-      bandsCappedPerBucket(bandedCorpus, maxCorpusPerBucket, observation,
-        metricName))
-
   /** Asymmetric LSH candidates for INCREMENTAL dedup: band buckets of a
     * new batch joined against band buckets of an existing corpus —
     * `(doc_a = new, doc_b = corpus)` pairs only, never new×new or
     * corpus×corpus. This is the shape that dedups a fresh crawl against
     * a 100 TB training set: the corpus's band-signature table is a
-    * persisted artifact maintained across batches (bandSignatures is
-    * deterministic, so it never needs recomputing), and each ingest
+    * persisted artifact maintained across batches ([[bandSignatures]]
+    * is deterministic, so it never needs recomputing), and each ingest
     * computes signatures for ITS docs only and probes the bucket join —
-    * cost scales with the batch, not the corpus. Callers ensure the two
-    * inputs are disjoint; ids may overlap across sets without ambiguity
-    * because sides are fixed by position.
-    */
-  def minhashCandidatesAgainst(newDocs: DataFrame, corpus: DataFrame,
-                               numHashes: Int, bands: Int,
-                               textCol: String = "text"): DataFrame =
-    minhashCandidatesAgainstFromBands(
-      bandSignatures(newDocs, numHashes, bands, textCol),
-      bandSignatures(corpus, numHashes, bands, textCol))
-
-  /** Asymmetric candidates from precomputed band tables — the persisted-
-    * artifact form of [[minhashCandidatesAgainst]] (band signatures are
-    * per-row projections, so slicing one shared corpus band table by
-    * doc set gives values identical to banding each slice separately).
+    * cost scales with the batch, not the corpus. Band signatures are
+    * per-row projections, so slicing one shared band table by doc set
+    * gives values identical to banding each slice separately. Callers
+    * ensure the two inputs are disjoint; ids may overlap across sets
+    * without ambiguity because sides are fixed by position. The
+    * corpus side may first pass through [[bandsKeptByRank]] (the
+    * capped probe) or [[bandsRoutedByRank]] (the routed probe).
     */
   def minhashCandidatesAgainstFromBands(bandedNew: DataFrame,
                                         bandedCorpus: DataFrame): DataFrame = {
@@ -505,27 +383,21 @@ object Dedup {
     bn.join(bc, Seq("band", "band_sig")).select("doc_a", "doc_b").distinct()
   }
 
-  /** Star-reduced LSH candidates: per (band, bucket) emit only
-    * (hub = min doc_id, member) edges instead of the full clique.
+  /** Star-reduced LSH candidates from a band table: per (band, bucket)
+    * emit only (hub = min doc_id, member) edges instead of the full
+    * clique.
     *
-    * The clique form (`minhashCandidates`) is inherently quadratic in
-    * duplicate-CLUSTER size — a corpus with a 1 M-doc near-dup cluster
-    * yields 5·10¹¹ candidate pairs no matter how selective the banding
-    * is, because true duplicates always collide. Star edges cap the
-    * fan-out at |docs| × bands while preserving bucket connectivity
-    * (every member links to its bucket's hub), which is exactly what
-    * downstream connected-components clustering needs. This is the
-    * standard production-dedup shape for web-scale corpora; the cost
-    * is that two members of one bucket are never DIRECTLY compared, so
-    * a pair report derived from star edges lists hub–member pairs only.
-    */
-  def minhashCandidatesStar(docs: DataFrame, numHashes: Int, bands: Int,
-                            textCol: String = "text"): DataFrame =
-    minhashCandidatesStarFromBands(
-      bandSignatures(docs, numHashes, bands, textCol))
-
-  /** Star candidates from a precomputed band table (see
-    * [[minhashCandidatesFromBands]] for why the band table is shared).
+    * The clique form ([[minhashCandidatesFromBands]]) is inherently
+    * quadratic in duplicate-CLUSTER size — a corpus with a 1 M-doc
+    * near-dup cluster yields 5·10¹¹ candidate pairs no matter how
+    * selective the banding is, because true duplicates always collide.
+    * Star edges cap the fan-out at |docs| × bands while preserving
+    * bucket connectivity (every member links to its bucket's hub),
+    * which is exactly what downstream connected-components clustering
+    * needs. This is the standard production-dedup shape for web-scale
+    * corpora; the cost is that two members of one bucket are never
+    * DIRECTLY compared, so a pair report derived from star edges lists
+    * hub–member pairs only.
     */
   def minhashCandidatesStarFromBands(banded: DataFrame): DataFrame = {
     val hubs = banded.groupBy("band", "band_sig").agg(min("doc_id").as("doc_a"))

@@ -899,9 +899,9 @@ object TextQ {
       |)""".stripMargin)
 
   /** The per-bucket guard bound of BOTH LSH blow-up guards — d05's
-    * clique form (Dedup.minhashCandidatesFromBandsCapped) and the
-    * d09/d15/st6 ingest probes' corpus side
-    * (Dedup.bandsCappedPerBucket). Far above any real band bucket in
+    * clique (Dedup.bandsKeptByRank on bucket_rank) and the d09/d15/st6
+    * ingest probes' corpus side (Dedup.bandsKeptByRank on
+    * corpus_rank). Far above any real band bucket in
     * the catalog data (so every guarded hash is cap-invariant there)
     * while capping a pathological bucket's blow-up at ~8M clique
     * pairs / 4096 corpus partners per colliding batch doc instead of
@@ -2769,10 +2769,10 @@ object TextQ {
       (s, d) => {
         val banded = bandSigs(s, d)
         incrementalDedup(s, d,
-          Dedup.minhashCandidatesAgainstRouted(
+          Dedup.minhashCandidatesAgainstFromBands(
             banded.filter(col("source") === "src0"),
-            banded.filter(col("source") =!= "src0"),
-            "corpus_rank", RoutedCap))
+            Dedup.bandsRoutedByRank(banded.filter(col("source") =!= "src0"),
+              "corpus_rank", RoutedCap)))
       },
       Some(RoutedDedupSql)),
 

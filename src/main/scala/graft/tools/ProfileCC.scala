@@ -19,7 +19,7 @@ object ProfileCC {
       r
     }
     val docs = Tables.documents(spark, sfDir)
-    val cands = Dedup.minhashCandidates(docs, 16, 2)
+    val cands = Dedup.minhashCandidatesFromBands(Dedup.bandSignatures(docs, 16, 2, "text"))
     val edges = Dedup.jaccardPairs(docs, cands, n = 1, minJaccard = 0.5)
       .filter(col("jaccard") >= 0.9).select("doc_a", "doc_b").cache()
     t("edges materialize")(edges.count())

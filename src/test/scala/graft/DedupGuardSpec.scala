@@ -1,19 +1,32 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Observation
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.row_number
 import graft.operators.Dedup
 
-/** The d05 audit tier's per-bucket blow-up guard
-  * (Dedup.minhashCandidatesFromBandsCapped): a pathological band
-  * bucket produces CAPPED output plus a nonzero, observable
-  * truncation metric — never a silent quadratic blow-up — while any
-  * bucket under the cap is bit-identical to the unguarded form (the
-  * d05 catalog-hash-invariance claim in miniature).
+/** The LSH per-bucket blow-up guards (Dedup.bandsKeptByRank, the cap
+  * filter, and Dedup.bandsRoutedByRank, the route filter) over a band
+  * table with a per-bucket rank: a pathological band bucket produces
+  * CAPPED output plus a nonzero, observable truncation metric — never
+  * a silent quadratic blow-up — while any bucket under the cap is
+  * bit-identical to the unguarded form (the d05 catalog-hash-
+  * invariance claim in miniature). The fixtures rank inline with the
+  * same window the band artifact stores its ranks from.
   */
 class DedupGuardSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
+  /** The sf0.001 smoke dataset (TESTDATA.md). */
+  private val smoke = new java.io.File(sys.props("user.home"), "testdata/sf0.001").toString
+
+  private def rank(banded: DataFrame, rankCol: String = "bucket_rank"): DataFrame =
+    banded.withColumn(rankCol,
+      row_number().over(Window.partitionBy("band", "band_sig").orderBy("doc_id")))
+
+  private def pairs(df: DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   /** 100 docs colliding in ONE band bucket (the pathological cluster)
     * plus a 3-doc and a 2-doc healthy bucket.
@@ -26,16 +39,15 @@ class DedupGuardSpec extends AnyFunSuite {
 
   test("pathological bucket: pairs capped, truncation metric nonzero and exact") {
     val obs = Observation("d05_guard_patho")
-    val pairs = Dedup.minhashCandidatesFromBandsCapped(banded,
-        maxDocsPerBucket = 10, observation = Some(obs))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = pairs(Dedup.minhashCandidatesFromBands(
+      Dedup.bandsKeptByRank(rank(banded), "bucket_rank", 10, Some(obs))))
     // the big bucket contributes C(10,2)=45 pairs from its 10 smallest
     // doc_ids; the healthy buckets contribute C(3,2)+C(2,2)=3+1 intact
     val bigKept = (0L until 10L)
     val expected =
       (for (a <- bigKept; b <- bigKept if a < b) yield (a, b)).toSet ++
         Set((200L, 201L), (200L, 202L), (201L, 202L), (300L, 301L))
-    assert(pairs == expected)
+    assert(got == expected)
     val m = obs.get
     assert(m("truncated_doc_slots") == 90L,
       s"expected 90 truncated doc slots, got ${m("truncated_doc_slots")}")
@@ -44,11 +56,9 @@ class DedupGuardSpec extends AnyFunSuite {
 
   test("buckets under the cap: capped form is bit-identical to the unguarded form") {
     val obs = Observation("d05_guard_clean")
-    val capped = Dedup.minhashCandidatesFromBandsCapped(banded,
-        maxDocsPerBucket = 4096, observation = Some(obs))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val uncapped = Dedup.minhashCandidatesFromBands(banded)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val capped = pairs(Dedup.minhashCandidatesFromBands(
+      Dedup.bandsKeptByRank(rank(banded), "bucket_rank", 4096, Some(obs))))
+    val uncapped = pairs(Dedup.minhashCandidatesFromBands(banded))
     assert(capped == uncapped)
     assert(obs.get("truncated_doc_slots") == 0L,
       "cap above every bucket must truncate nothing")
@@ -69,15 +79,15 @@ class DedupGuardSpec extends AnyFunSuite {
 
   test("ingest probe: corpus bucket capped, batch side complete, truncation exact") {
     val obs = Observation("ingest_guard_patho")
-    val pairs = Dedup.minhashCandidatesAgainstFromBandsCapped(bandedBatch,
-        banded, maxCorpusPerBucket = 10, observation = Some(obs))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = pairs(Dedup.minhashCandidatesAgainstFromBands(bandedBatch,
+      Dedup.bandsKeptByRank(rank(banded, "corpus_rank"), "corpus_rank", 10,
+        Some(obs))))
     // each colliding batch doc sees the bucket's first 10 corpus docs
     // (doc_id order), never the full 100; the healthy bucket is intact
     val expected =
       (for (a <- Seq(1000L, 1001L); b <- 0L until 10L) yield (a, b)).toSet ++
         Set((1002L, 200L), (1002L, 201L), (1002L, 202L))
-    assert(pairs == expected)
+    assert(got == expected)
     val m = obs.get
     assert(m("truncated_doc_slots") == 90L,
       s"expected 90 truncated corpus slots, got ${m("truncated_doc_slots")}")
@@ -86,11 +96,10 @@ class DedupGuardSpec extends AnyFunSuite {
 
   test("ingest probe under the cap: identical to the unguarded asymmetric form") {
     val obs = Observation("ingest_guard_clean")
-    val capped = Dedup.minhashCandidatesAgainstFromBandsCapped(bandedBatch,
-        banded, maxCorpusPerBucket = 4096, observation = Some(obs))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val uncapped = Dedup.minhashCandidatesAgainstFromBands(bandedBatch, banded)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val capped = pairs(Dedup.minhashCandidatesAgainstFromBands(bandedBatch,
+      Dedup.bandsKeptByRank(rank(banded, "corpus_rank"), "corpus_rank", 4096,
+        Some(obs))))
+    val uncapped = pairs(Dedup.minhashCandidatesAgainstFromBands(bandedBatch, banded))
     assert(capped == uncapped)
     assert(obs.get("truncated_doc_slots") == 0L)
     // the unguarded probe really multiplies by the full bucket:
@@ -99,35 +108,36 @@ class DedupGuardSpec extends AnyFunSuite {
   }
 
   test("precomputed-rank guard equals the window guard (the artifact fast path)") {
-    // the catalog consumers filter a STORED rank column instead of
-    // running a probe-time window — the two forms must keep identical
-    // semantics: same kept rows, same pair sets, same truncation
-    // metric, for both the clique (bucket_rank) and the ingest
-    // (corpus-side) shapes
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.row_number
-    val w = Window.partitionBy("band", "band_sig").orderBy("doc_id")
-    val ranked = banded.withColumn("bucket_rank", row_number().over(w))
-    val obs = Observation("rank_guard_clique")
-    val viaRank = Dedup.minhashCandidatesFromBands(
-        Dedup.bandsKeptByRank(ranked, "bucket_rank", 10, Some(obs)))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaWindow = Dedup.minhashCandidatesFromBandsCapped(banded,
-        maxDocsPerBucket = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaRank == viaWindow)
-    val m = obs.get
-    assert(m("truncated_doc_slots") == 90L && m("doc_slots") == 105L)
-    // ingest shape: corpus side pre-ranked, batch side untouched
-    val obsI = Observation("rank_guard_ingest")
-    val viaRankI = Dedup.minhashCandidatesAgainstFromBands(bandedBatch,
-        Dedup.bandsKeptByRank(ranked, "bucket_rank", 10, Some(obsI)))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaWindowI = Dedup.minhashCandidatesAgainstFromBandsCapped(
-        bandedBatch, banded, maxCorpusPerBucket = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaRankI == viaWindowI)
-    assert(obsI.get("truncated_doc_slots") == 90L)
+    // the catalog guards filter the band artifact's STORED ranks
+    // instead of running a probe-time window, so each stored rank must
+    // be exactly the window it replaced, recomputed here from raw text:
+    // bucket_rank = row_number over (band, band_sig), corpus_rank =
+    // row_number over (band, band_sig, side) on the corpus side and
+    // null on the src0 (batch) rows
+    import org.apache.spark.sql.functions.{col, when}
+    val data = smoke
+    val docs = Tables.documents(spark, data)
+    val isCorpus = col("source") =!= "src0"
+    val fresh = Dedup.bandSignatures(docs, 16, 2, "text")
+      .join(docs.select("doc_id", "source"), Seq("doc_id"))
+      .withColumn("bucket_rank", row_number().over(
+        Window.partitionBy("band", "band_sig").orderBy("doc_id")))
+      .withColumn("corpus_rank", when(isCorpus, row_number().over(
+        Window.partitionBy(col("band"), col("band_sig"), isCorpus).orderBy("doc_id"))))
+    def rows(df: DataFrame) = df
+      .select("doc_id", "band", "band_sig", "source", "bucket_rank", "corpus_rank")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2),
+        r.getString(3), r.getInt(4), Option(r.get(5)).map(_.asInstanceOf[Int])))
+      .toSet
+    val stored = rows(graft.queries.TextQ.bandSigs(spark, data))
+    val want = rows(fresh)
+    assert(stored.size == want.size, s"${stored.size} stored rows vs ${want.size} recomputed")
+    assert(stored == want, (stored diff want).take(5).mkString("stored-only: ", ", ", ""))
+    val batch = stored.filter(_._4 == "src0")
+    assert(batch.nonEmpty, "fixture regression: no src0 rows")
+    assert(batch.forall(_._6.isEmpty), "corpus_rank must be null on src0 rows")
+    assert(stored.exists(_._5 > 1) && stored.exists(_._6.exists(_ > 1)),
+      "fixture regression: no multi-doc bucket to rank")
   }
 
   /** The ROUTED hybrid probe (round 20 — the executor for the
@@ -164,28 +174,25 @@ class DedupGuardSpec extends AnyFunSuite {
     // the routed probe dispatches the overflowing bucket's FULL
     // membership — both duplicates found, branch volume observable
     val obs = Observation("route_spec")
-    val routed = Dedup.minhashCandidatesAgainstRouted(batchBands,
-      corpusBands, "corpus_rank", 10, observation = Some(obs))
+    val routed = Dedup.minhashCandidatesAgainstFromBands(batchBands,
+      Dedup.bandsRoutedByRank(corpusBands, "corpus_rank", 10, Some(obs)))
     assert(nDups(routed) == 2L,
       "routed probe must merge the duplicates ranking past the cap")
     val m = obs.get
     assert(m("routed_doc_slots") == 100L && m("routed_buckets") == 1L, m.toString)
     // routed candidates == uncapped candidates (the by-construction
     // under-merge-window close)
-    val uncapped = Dedup.minhashCandidatesAgainstFromBands(batchBands,
-        corpusBands.drop("corpus_rank"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val routedSet = Dedup.minhashCandidatesAgainstRouted(batchBands,
-        corpusBands, "corpus_rank", 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val uncapped = pairs(Dedup.minhashCandidatesAgainstFromBands(batchBands,
+        corpusBands.drop("corpus_rank")))
+    val routedSet = pairs(Dedup.minhashCandidatesAgainstFromBands(batchBands,
+        Dedup.bandsRoutedByRank(corpusBands, "corpus_rank", 10)))
     assert(routedSet == uncapped)
     // a healthy store (cap above every bucket) routes NOTHING — the
     // routed form degenerates to the capped tier with a zero-row
     // routed branch, metrics reading 0 (not null)
     val obsH = Observation("route_spec_healthy")
-    val healthy = Dedup.minhashCandidatesAgainstRouted(batchBands,
-        corpusBands, "corpus_rank", 4096, observation = Some(obsH))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val healthy = pairs(Dedup.minhashCandidatesAgainstFromBands(batchBands,
+        Dedup.bandsRoutedByRank(corpusBands, "corpus_rank", 4096, Some(obsH))))
     assert(healthy == uncapped)
     val mh = obsH.get
     assert(mh("routed_doc_slots") == 0L && mh("routed_buckets") == 0L, mh.toString)
@@ -198,7 +205,7 @@ class DedupGuardSpec extends AnyFunSuite {
     // that cap, and the recommendation must flip, with the truncation
     // metric agreeing EXACTLY with an independent window recomputation
     // from raw text (never the artifact's own stored ranks)
-    val data = "/root/testdata/sf0.001"
+    val data = smoke
     val cap = 8
     val msg = Run.run(spark, "dedup-maintain", Seq(s"data=$data", s"cap=$cap"))
     val kvs = msg.split(' ').tail.map(_.split("=", 2))
@@ -240,9 +247,9 @@ class DedupGuardSpec extends AnyFunSuite {
     // table — the property that lets st6 cap its prefix-pruned
     // per-trigger static side and still match the full-table oracle
     val pruned = banded.filter($"band_sig" === "sigBIG")
-    val a = Dedup.bandsCappedPerBucket(pruned, 10)
+    val a = Dedup.bandsKeptByRank(rank(pruned), "bucket_rank", 10)
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
-    val b = Dedup.bandsCappedPerBucket(banded, 10)
+    val b = Dedup.bandsKeptByRank(rank(banded), "bucket_rank", 10)
       .filter($"band_sig" === "sigBIG")
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
     assert(a == b && a.size == 10)
@@ -253,11 +260,8 @@ class DedupGuardSpec extends AnyFunSuite {
     // rank, so routing a bucket-complete pruned slice must equal
     // pruning the routed table — what lets st12 route its prefix-
     // pruned per-trigger static side and still match the full oracle
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.row_number
-    val w = Window.partitionBy("band", "band_sig").orderBy("doc_id")
-    val ranked = banded.withColumn("corpus_rank", row_number().over(w))
-    def rows(df: org.apache.spark.sql.DataFrame) =
+    val ranked = rank(banded, "corpus_rank")
+    def rows(df: DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
     val a = rows(Dedup.bandsRoutedByRank(
       ranked.filter($"band_sig" === "sigBIG"), "corpus_rank", 10))
@@ -274,35 +278,26 @@ class DedupGuardSpec extends AnyFunSuite {
     // the pair SET must be identical to the reference self-join for
     // every block size, including ones that slice the 100-doc bucket
     // many ways and ones larger than any bucket
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.row_number
-    val w = Window.partitionBy("band", "band_sig").orderBy("doc_id")
-    val ranked = banded.withColumn("bucket_rank", row_number().over(w))
-    val reference = Dedup.minhashCandidatesFromBands(banded)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val ranked = rank(banded)
+    val reference = pairs(Dedup.minhashCandidatesFromBands(banded))
     for (bs <- Seq(1, 3, 7, 128)) {
-      val blocked = Dedup.minhashCandidatesFromRankedBands(ranked, blockSize = bs)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val blocked = pairs(Dedup.minhashCandidatesFromRankedBands(ranked, blockSize = bs))
       assert(blocked == reference, s"blockSize=$bs diverged from reference")
     }
     // and under the stored-rank guard (the exact d05 composition):
     // guard first, then blocked clique == guarded reference clique
-    val guardedRef = Dedup.minhashCandidatesFromBands(
-        Dedup.bandsKeptByRank(ranked, "bucket_rank", 10, metricName = "g_ref"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val guardedBlk = Dedup.minhashCandidatesFromRankedBands(
+    val guardedRef = pairs(Dedup.minhashCandidatesFromBands(
+        Dedup.bandsKeptByRank(ranked, "bucket_rank", 10, metricName = "g_ref")))
+    val guardedBlk = pairs(Dedup.minhashCandidatesFromRankedBands(
         Dedup.bandsKeptByRank(ranked, "bucket_rank", 10, metricName = "g_blk"),
-        blockSize = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        blockSize = 4))
     assert(guardedBlk == guardedRef)
     // gapped ranks (a filtered slice of an all-rows ranking, the
     // clusterArtifact composition) must also agree: monotone rank is
     // all the owner-block argument needs
     val gapped = ranked.filter($"doc_id" % 2 === 0)
-    val gapRef = Dedup.minhashCandidatesFromBands(gapped)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val gapBlk = Dedup.minhashCandidatesFromRankedBands(gapped, blockSize = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val gapRef = pairs(Dedup.minhashCandidatesFromBands(gapped))
+    val gapBlk = pairs(Dedup.minhashCandidatesFromRankedBands(gapped, blockSize = 3))
     assert(gapBlk == gapRef)
   }
 }

@@ -421,7 +421,8 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("dedup verify join: native sorted-merge intersect on a broadcast pair stream") {
     val docs = Tables.documents(spark, dir)
-    val cands = Dedup.minhashCandidates(docs, numHashes = 8, bands = 2)
+    val cands = Dedup.minhashCandidatesFromBands(
+      Dedup.bandSignatures(docs, numHashes = 8, bands = 2, textCol = "text"))
     val p = Dedup.jaccardPairs(docs, cands).queryExecution.executedPlan.toString
     assert(p.contains("graft_inter_size"), p)
     assert(p.contains("BroadcastHashJoin"), p)
