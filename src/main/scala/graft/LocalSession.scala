@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place for the local-session bootstrap shared by every runnable
-  * main (Bench / Verify / Prof / Anchor): master threads == shuffle
+  * main (Bench / Verify / Run / Anchor): master threads == shuffle
   * partitions (sized to the machine, not Spark's 200 default),
   * TIMESTAMP(NANOS) parquet reads, UTC, extensions registered. Keeping
   * it single-sourced means a new required flag lands everywhere at once.

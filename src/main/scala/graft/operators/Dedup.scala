@@ -942,10 +942,6 @@ object Dedup {
       case _ => Set.empty
     }
     val gen = new java.util.IdentityHashMap[DataFrame, Set[String]]
-    val ccT0 = System.nanoTime()
-    def dbg(msg: => String): Unit =
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] +${(System.nanoTime() - ccT0) / 1e9}%6.2fs $msg")
     val ckpt: DataFrame => DataFrame =
       if (ckptFs.isDefined) { df =>
         val before = listCkpts
@@ -971,7 +967,6 @@ object Dedup {
     // callers whose edge table is already pair-distinct (every LSH
     // pair table here — candidates end in `.distinct()`) skip it;
     // duplicate edges would only inflate round-1 volume, never labels.
-    dbg("start")
     // Materialize the UNDIRECTED edge table first (round 21): the
     // common small-graph route — iter-0 driver tail solve — never needs
     // the symmetric closure (union-find is direction-blind), so the 2×
@@ -990,7 +985,6 @@ object Dedup {
       if (distinctEdges) base.distinct() else base
     })
     val undCnt = und.count()
-    dbg(s"undirected edges done: $undCnt")
     // labels are initialized LAZILY (round 22): the common small-graph
     // route — the iter-0 driver tail solve — derives the full
     // (node, label) table from the collected fringe itself (every
@@ -1005,7 +999,6 @@ object Dedup {
       labels = ckpt(und
         .select(explode(array(col("src"), col("dst"))).as("node"))
         .distinct().withColumn("label", col("node")))
-      dbg("labels init done")
     }
     var iter = 0
     // one size job per round, shared by the loop guard, the tail-solve
@@ -1032,7 +1025,6 @@ object Dedup {
           struct(col("dst").as("src"), col("src").as("dst")))).as("se"))
         .select(col("se.src").as("src"), col("se.dst").as("dst")))
       release(und)
-      dbg("symmetric closure done")
     }
     // When the tail solve runs on the FIRST iteration, labels are still
     // the identity map, so coalesce(find(node), node) IS the union-find
@@ -1040,7 +1032,6 @@ object Dedup {
     // (one join + one stability check of pure overhead on the common
     // small-graph path; the sf0.1 dedup edge sets all take this route).
     var fixpointProven = false
-    dbg("initial count done")
     while (iter < maxIter && !drained) {
       if (tailSolvable && eCnt <= localSolveThreshold) {
         // HYBRID TAIL: the fringe is bounded — finish on the driver.
@@ -1092,13 +1083,11 @@ object Dedup {
             if (seen.add(a)) out += ((a, find(a)))
             if (seen.add(b)) out += ((b, find(b)))
           }
-          dbg(s"tail solve: ${fringe.length} edges, ${out.length} nodes labeled")
           labels = ckpt(out.toSeq.toDF("node", "label")
             .select(col("node").cast(nodeType).as("node"),
               col("label").cast(nodeType).as("label")))
         } else {
           val repMap = parent.keys.map(k => (k, find(k))).toSeq
-          dbg(s"tail solve: ${fringe.length} edges, ${repMap.size} reps merged")
           val repDf = broadcast(repMap.toDF("__rep", "__cmin")
             .select(col("__rep").cast(nodeType), col("__cmin").cast(nodeType).as("__cmin")))
           val solved = ckpt(labels
@@ -1133,7 +1122,6 @@ object Dedup {
           col("a.label") === col("b.dn"), "left")
         .select(col("a.node").as("node"),
           coalesce(col("dl"), col("a.label")).as("label")))
-      dbg(s"round ${iter+1}: doubled ckpt done")
       release(labels)
       labels = doubled
       // contract: rewrite edges into new-representative space and drop
@@ -1144,13 +1132,11 @@ object Dedup {
         .join(labels.select(col("node").as("dst"), col("label").as("ld")), Seq("dst"))
         .select(col("ls").as("src"), col("ld").as("dst"))
         .filter(col("src") =!= col("dst")).distinct())
-      dbg(s"round ${iter+1}: relabeled ckpt done")
       release(e)
       e = relabeled
       iter += 1
       eCnt = e.count()
       drained = eCnt == 0
-      dbg(s"round $iter: $eCnt edges remain")
       }
     }
     // a silent partial merge would be a wrong-but-plausible clustering;
@@ -1180,7 +1166,6 @@ object Dedup {
         .filter(col("n.label") < col("o.label")).isEmpty
       release(labels) // after the stable check, which reads the old labels
       labels = nxt
-      dbg(s"compress stable=$stable")
     }
     labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }

@@ -30,7 +30,8 @@ object SimilaritySearch {
     *     (expressions.CentroidScores) — generated code size CONSTANT
     *     in k, so paper-scale SemDeDup k (~10⁴ clusters) keeps the
     *     same tight whole-stage-codegen loop. The round-15 k-sweep
-    *     (tools.ProfileCentroid, 128k rows × 64 dims) measured it
+    *     (PLANS.md "Centroid assignment paths", 128k rows × 64
+    *     dims) measured it
     *     FLAT at ~0.7–1.1 µs/row·k from k=8 to 1024, and faster than
     *     the literal path at EVERY k — including k=8 (0.86 vs
     *     1.46 µs/row·k).

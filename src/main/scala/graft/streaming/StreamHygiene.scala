@@ -11,9 +11,10 @@ import org.apache.spark.sql.SparkSession
   * ~100k rows x 4 partitions at sf0.1). Neither is reachable by
   * `spark.catalog.clearCache()`, so across a 99-query bench they
   * accumulate into GC pressure that inflates LATER streaming queries:
-  * measured with ProfileStream, the identical st2 micro-batch degrades
-  * from ~1.2 s to ~3.5 s after ~14 drained streams, and recovers to a
-  * stable ~1.7 s once both leftovers are dropped between runs.
+  * measured at sf0.1 (PLANS.md "Streaming bench overhead"), the
+  * identical st2 micro-batch degrades from ~1.2 s to ~3.5 s after ~14
+  * drained streams, and recovers to a stable ~1.7 s once both
+  * leftovers are dropped between runs.
   *
   * `StateStore.unloadAll()` is Scala-`private[sql]` but public
   * bytecode, so the call goes through reflection; it only unloads

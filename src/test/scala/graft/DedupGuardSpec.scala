@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.row_number
 import graft.operators.Dedup
@@ -16,26 +16,16 @@ import graft.operators.Dedup
   * same window the band artifact stores its ranks from.
   */
 class DedupGuardSpec extends AnyFunSuite {
+  import DedupGuardSpec.rank
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
   /** The sf0.001 smoke dataset (TESTDATA.md). */
   private val smoke = new java.io.File(sys.props("user.home"), "testdata/sf0.001").toString
 
-  private def rank(banded: DataFrame, rankCol: String = "bucket_rank"): DataFrame =
-    banded.withColumn(rankCol,
-      row_number().over(Window.partitionBy("band", "band_sig").orderBy("doc_id")))
-
   private def pairs(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  /** 100 docs colliding in ONE band bucket (the pathological cluster)
-    * plus a 3-doc and a 2-doc healthy bucket.
-    */
-  private def banded = (
-    (0 until 100).map(i => (0, "sigBIG", i.toLong)) ++
-      Seq((1, "sigA", 200L), (1, "sigA", 201L), (1, "sigA", 202L),
-        (2, "sigB", 300L), (2, "sigB", 301L))
-  ).toDF("band", "band_sig", "doc_id")
+  private def banded = DedupGuardSpec.banded(spark)
 
   test("pathological bucket: pairs capped, truncation metric nonzero and exact") {
     val obs = Observation("d05_guard_patho")
@@ -299,5 +289,22 @@ class DedupGuardSpec extends AnyFunSuite {
     val gapRef = pairs(Dedup.minhashCandidatesFromBands(gapped))
     val gapBlk = pairs(Dedup.minhashCandidatesFromRankedBands(gapped, blockSize = 3))
     assert(gapBlk == gapRef)
+  }
+}
+
+object DedupGuardSpec {
+  def rank(banded: DataFrame, rankCol: String = "bucket_rank"): DataFrame =
+    banded.withColumn(rankCol,
+      row_number().over(Window.partitionBy("band", "band_sig").orderBy("doc_id")))
+
+  /** 100 docs colliding in ONE band bucket (the pathological cluster)
+    * plus a 3-doc and a 2-doc healthy bucket.
+    */
+  def banded(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    ((0 until 100).map(i => (0, "sigBIG", i.toLong)) ++
+      Seq((1, "sigA", 200L), (1, "sigA", 201L), (1, "sigA", 202L),
+        (2, "sigB", 300L), (2, "sigB", 301L))
+    ).toDF("band", "band_sig", "doc_id")
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.mot.MotCsv
 
@@ -14,31 +15,8 @@ class PipelinesSpec extends AnyFunSuite {
   private def tmp(name: String) =
     Files.createTempDirectory(name).toString
 
-  /** GT of 2 objects over 8 frames, detections = GT jittered, tracked
-    * into `track`: returns (dir, trackFile); dir holds gt.txt.
-    */
-  private def trackedFixture(name: String): (String, String) = {
-    import spark.implicits._
-    val dir = tmp(name)
-    // GT: 2 objects over 8 frames; detections = GT jittered; per-frame ids
-    val gtRows = for (f <- 1 to 8; o <- 1 to 2)
-      yield (f"$f%06d", o, 10.0 + o * 200 + f * 4, 20.0 + o * 100, 40.0, 36.0, 1.0, 1, -1, -1)
-    val detRows = gtRows.zipWithIndex.map { case ((fr, o, x, y, w, h, _, _, _, _), i) =>
-      (fr, o - 1, x + 1.5, y - 1.0, w, h, 0.9, 1, -1, -1) // det ids 0,1 per frame
-    }
-    def writeCsv(rows: Seq[(String, Int, Double, Double, Double, Double, Double, Int, Int, Int)],
-                 path: String): Unit =
-      Files.writeString(java.nio.file.Paths.get(path),
-        rows.map(r => r.productIterator.mkString(",")).mkString("", "\n", "\n"))
-    writeCsv(gtRows, s"$dir/gt.txt")
-    writeCsv(detRows, s"$dir/det.txt")
-    // embeddings: identical unit vectors (appearance gate passes)
-    val embs = detRows.map(r => (r._1, r._2, Array.fill(8)(1.0f)))
-      .toDF("frame", "id", "vector")
-
-    Pipelines.track(spark, s"$dir/det.txt", embs, s"$dir/track")
-    (dir, s"$dir/track")
-  }
+  private def trackedFixture(name: String): (String, String) =
+    PipelinesSpec.trackedFixture(spark, name)
 
   test("track -> eval -> metric tables end-to-end over files") {
     val (dir, trackFile) = trackedFixture("pipe")
@@ -658,5 +636,33 @@ class PipelinesSpec extends AnyFunSuite {
     val out = MotCsv.read(spark, s"$dir/det").collect()
     assert(out.length == 2) // boxes 1 and 5 survive
     assert(out.map(_.getInt(1)).sorted.toSeq == Seq(1, 2)) // per-frame ordinals
+  }
+}
+
+object PipelinesSpec {
+  /** GT of 2 objects over 8 frames, detections = GT jittered, tracked
+    * into `track`: returns (dir, trackFile); dir holds gt.txt.
+    */
+  def trackedFixture(spark: SparkSession, name: String): (String, String) = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory(name).toString
+    // GT: 2 objects over 8 frames; detections = GT jittered; per-frame ids
+    val gtRows = for (f <- 1 to 8; o <- 1 to 2)
+      yield (f"$f%06d", o, 10.0 + o * 200 + f * 4, 20.0 + o * 100, 40.0, 36.0, 1.0, 1, -1, -1)
+    val detRows = gtRows.zipWithIndex.map { case ((fr, o, x, y, w, h, _, _, _, _), i) =>
+      (fr, o - 1, x + 1.5, y - 1.0, w, h, 0.9, 1, -1, -1) // det ids 0,1 per frame
+    }
+    def writeCsv(rows: Seq[(String, Int, Double, Double, Double, Double, Double, Int, Int, Int)],
+                 path: String): Unit =
+      Files.writeString(java.nio.file.Paths.get(path),
+        rows.map(r => r.productIterator.mkString(",")).mkString("", "\n", "\n"))
+    writeCsv(gtRows, s"$dir/gt.txt")
+    writeCsv(detRows, s"$dir/det.txt")
+    // embeddings: identical unit vectors (appearance gate passes)
+    val embs = detRows.map(r => (r._1, r._2, Array.fill(8)(1.0f)))
+      .toDF("frame", "id", "vector")
+
+    Pipelines.track(spark, s"$dir/det.txt", embs, s"$dir/track")
+    (dir, s"$dir/track")
   }
 }
