@@ -93,9 +93,9 @@ object Run {
         s"visualize: $nImg annotated frames in $outDir, $nVid-frame video in $vidDir"
       case "dedup-maintain" =>
         // the corpus-maintenance job the dedup artifact posture
-        // documents: (re)build the persisted signature store for a
-        // documents dir — band signatures, gram fingerprints, corpus
-        // cluster labels — so a scheduled run after each data drop
+        // documents: (re)build every persisted store of a documents
+        // dir — band signatures, gram fingerprints, corpus cluster
+        // labels, frozen models — so a scheduled run after each data drop
         // keeps the ingest shapes (d09/d15/d17/st6) probing current
         // artifacts instead of lazily building them inside a query.
         // Idempotent: a generation that is already on disk (length+
@@ -124,13 +124,7 @@ object Run {
         // through them would silently derive gen-N+1 labels from gen-N
         // signatures. Maintenance must rebuild from current storage.
         SessionMemo.reset(spark)
-        val band = graft.queries.TextQ.bandArtifact(spark, dir)
-        val gram = graft.queries.TextQ.gramArtifact(spark, dir)
-        val clusters = graft.queries.TextQ.clusterArtifact(spark, dir)
-        val simhash = graft.queries.TextQ.simhashArtifact(spark, dir)
-        val dsir = graft.queries.TextQ.dsirArtifact(spark, dir)
-        val clf = graft.queries.TextQ.clfArtifact(spark, dir)
-        val decontam = graft.queries.TextQ.decontamArtifact(spark, dir)
+        val stores = resolveAll(spark, dir, "documents.parquet")
         // BUCKET-GUARD REPORT (the ann-maintain triad, dedup side —
         // VERDICT r18 #1): the capped tiers' truncation metric finally
         // gets a reader, and the deliberately-UNCAPPED clustering
@@ -184,23 +178,10 @@ object Run {
         val topOverflow = if (overflow == 0L) "none"
           else graft.operators.Dedup.topOverflowingBuckets(bands, "bucket_rank", cap, 3)
             .map { case (b, sig, n) => s"$b:$sig:$n" }.mkString(",")
-        // compaction report (VERDICT r19 #5): the builders compact
-        // their flat scan copies PRE-PUBLISH (no reader can observe
-        // the swap — Compaction.compactInPlace's safety contract) and
-        // record the result beside _SUCCESS; the CLI reads the stable
-        // per-generation records, so idempotent re-runs report
-        // identically. "none" = generation predates the record.
-        val compacted = Seq(
-          "band" -> band, "gram" -> gram, "clusters" -> clusters,
-          "simhash" -> simhash)
-          .map { case (k, p) =>
-            s"$k:${graft.sources.Compaction.compactionReportOf(spark, p)}" }
-          .mkString(",")
-        s"dedup-maintain: band=$band gram=$gram clusters=$clusters " +
-          s"simhash=$simhash dsir=$dsir clf=$clf decontam=$decontam " +
+        s"dedup-maintain: ${paths(stores)} " +
           s"cap=$cap max_bucket=$maxBucket overflow_buckets=$overflow " +
           s"truncated_doc_slots=$truncated doc_slots=$docSlots route=$route " +
-          s"top_overflow=$topOverflow compacted=$compacted"
+          s"top_overflow=$topOverflow compacted=${compacted(spark, stores)}"
       case "ann-maintain" =>
         // the EMBEDDING-side maintenance job: (re)build the
         // cell-partitioned IVF+PQ code table AND the semantic-dedup
@@ -211,9 +192,8 @@ object Run {
         // state.
         val dir = dataDirArg(mode, kvArgs, overrides, cfgFile,
           "embeddings.parquet")
-        val index = graft.queries.TextQ.annArtifact(spark, dir)
-        val sem = graft.queries.TextQ.semArtifact(spark, dir)
-        val corpus = graft.queries.TextQ.annCorpusArtifact(spark, dir)
+        val stores = resolveAll(spark, dir, "embeddings.parquet")
+        val index = stores.toMap.apply(graft.queries.TextQ.AnnStore)
         // delta growth check (VERDICT r16 #6): the corpus index covers
         // the non-batch slice only; the batch slice is the un-indexed
         // delta the s12/st11 probes union in. Past the fold-in ratio
@@ -242,7 +222,7 @@ object Run {
         // >= codebookSize rows), but an empty index must say so
         // instead of throwing an opaque empty.max (ADVICE r17)
         if (cellSizes.isEmpty)
-          f"ann-maintain: index=$index sem=$sem corpus=$corpus " +
+          f"ann-maintain: ${paths(stores)} " +
             f"delta_main_ratio=$ratio%.4f fold_in=$fold " +
             "max_cell_frac=NaN rebalance=no(empty_index)"
         else {
@@ -298,22 +278,43 @@ object Run {
           // callers that pass no explicit nprobe (TextQ.resolveNprobe)
           // pick it up — the sweep informs the engine, not just a human
           graft.queries.TextQ.writeSuggestedNprobe(spark, index, suggested)
-          // the sem store's compact state/ copy carries the build-time
-          // compaction record (dedup-maintain's compacted= pattern);
-          // the index tiers are cell-partitioned — one file per
-          // partition directory by construction, nothing to compact
-          val compacted =
-            s"sem:${graft.sources.Compaction.compactionReportOf(spark, sem)}"
-          f"ann-maintain: index=$index sem=$sem corpus=$corpus " +
+          f"ann-maintain: ${paths(stores)} " +
             f"delta_main_ratio=$ratio%.4f fold_in=$fold " +
             f"max_cell_frac=$maxCellFrac%.4f rebalance=$rebalance " +
-            f"$recallStr suggested_nprobe=$suggested compacted=$compacted"
+            f"$recallStr suggested_nprobe=$suggested compacted=${compacted(spark, stores)}"
         }
       case other =>
         throw new IllegalArgumentException(
           s"unknown mode: $other (track|eval|features|visualize|dedup-maintain|ann-maintain)")
     }
   }
+
+  /** The stores a maintenance mode owns: every TextQ store that reads
+    * exactly `table` of the data dir, in declaration order.
+    */
+  private[graft] def maintained(table: String): Seq[graft.sources.Artifact] =
+    graft.queries.TextQ.stores.filter(_.sources == Seq(table))
+
+  private def resolveAll(spark: SparkSession, dir: String,
+                         table: String): Seq[(graft.sources.Artifact, String)] =
+    maintained(table).map(a => a -> a.resolve(spark, dir))
+
+  private def paths(stores: Seq[(graft.sources.Artifact, String)]): String =
+    stores.map { case (a, p) => s"${a.name}=$p" }.mkString(" ")
+
+  /** The compaction report (VERDICT r19 #5): the store compacts the
+    * sub-path an artifact declares before publishing (no reader can
+    * observe the swap — Compaction.compactInPlace's safety contract)
+    * and records the result in the generation; this reads the stable
+    * per-generation records, so idempotent re-runs report identically.
+    * "none" = generation predates the record. Partitioned layouts are
+    * one file per partition directory by construction and declare none.
+    */
+  private def compacted(spark: SparkSession,
+                        stores: Seq[(graft.sources.Artifact, String)]): String =
+    stores.collect { case (a, p) if a.compacts.isDefined =>
+      s"${a.name}:${graft.sources.Compaction.compactionReportOf(spark, p)}"
+    }.mkString(",")
 
   /** Shared `data=<dir>` extraction for the maintenance modes. Takes
     * the RAW token, not the Yaml-inferred scalar: a numeric-looking

@@ -442,7 +442,7 @@ object Dedup {
   /** The per-doc sorted gram-fingerprint table `(doc_id, grams)` the
     * verify stage consumes — exposed so callers can PERSIST it (a
     * deterministic per-row projection, so an on-disk copy is
-    * bit-identical to the recompute; see TextQ.gramArtifact): at
+    * bit-identical to the recompute; see TextQ.GramStore): at
     * corpus scale tokenize+hash+sort per consumer is the dominant
     * verify cost, and a signature store computes it once.
     */
@@ -619,7 +619,7 @@ object Dedup {
   /** Asymmetric hamming-ball pairs for INCREMENTAL simhash dedup — the
     * daily-ingest shape at production width: a new batch's 64-bit
     * fingerprints probe the corpus's PERSISTED fingerprint table
-    * (`(doc_id, simhash64)` — see TextQ.simhashArtifact), emitting
+    * (`(doc_id, simhash64)` — see TextQ.SimhashStore), emitting
     * `(doc_a = new, doc_b = corpus)` pairs within `maxHamming`. Same
     * Manku masked-chunk pigeonhole as [[simhash64BallPairs]], but the
     * chunk equi-join is batch-vs-corpus only — never new×new or

@@ -638,7 +638,7 @@ object SimilaritySearch {
     * map-side projection of the corpus (no join, no shuffle). At scale
     * this table IS the ANN index, persisted partitioned BY CELL so a
     * probe's FileScan prunes to its nprobe cells (see
-    * TextQ.annArtifact); the float vectors stay in the base table and
+    * TextQ.AnnStore); the float vectors stay in the base table and
     * are only joined back for the rerank tail.
     */
   def ivfPqEncode(corpus: DataFrame, model: IvfPqModel,

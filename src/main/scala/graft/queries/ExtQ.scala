@@ -135,7 +135,7 @@ object ExtQ {
     val docs = Tables.documents(s, d)
     val fp = (t: org.apache.spark.sql.Column) =>
       sort_array(transform(Text.distinctTokens(t), g => xxhash64(g)))
-    TextQ.bandArtifact(s, d)  // build/refresh at batch parallelism
+    TextQ.BandStore.resolve(s, d)  // build/refresh at batch parallelism
     val gramsB = TextQ.gramSetsOf(s, d)  // memoized gram artifact
       .select(col("doc_id").as("doc_b"), col("grams").as("grams_b"))
     val outDir = boundedSink(outKind, d)
@@ -274,7 +274,7 @@ object ExtQ {
 
   /** The st8 micro-batch ANN probe loop, shared with the multi-batch
     * parity spec: each arriving batch of query vectors probes the
-    * PERSISTED cell-partitioned PQ index (TextQ.annArtifact), pushing
+    * PERSISTED cell-partitioned PQ index (TextQ.AnnStore), pushing
     * its probed cells as partition filters on the index FileScan —
     * per-trigger cost scales with the batch's cell spread, never the
     * index. The per-query result depends only on that query's row (the
@@ -388,7 +388,7 @@ object ExtQ {
     import graft.operators.SimilaritySearch
     require(maxQueryBatch >= 1, s"maxQueryBatch must be >= 1, got $maxQueryBatch")
     val emb = Tables.embeddings(s, d)
-    val index = TextQ.annArtifact(s, d)  // build/refresh at batch parallelism
+    val index = TextQ.AnnStore.resolve(s, d)  // build/refresh at batch parallelism
     val np = TextQ.resolveNprobe(s, index, nprobe)
     val model = SimilaritySearch.ivfPqModel(
       emb, TextQ.AnnNlist, TextQ.AnnM, TextQ.AnnCb)
@@ -965,7 +965,7 @@ object ExtQ {
     // bucketed by doc_id for the same pruned-probe effect.)
     // Streaming ANN ingest probe — the embedding analogue of st6: each
     // arriving micro-batch of vectors probes the PERSISTED
-    // cell-partitioned PQ index (annArtifact) for its nearest
+    // cell-partitioned PQ index (AnnStore) for its nearest
     // neighbors, with the batch's probed cells pushed as partition
     // filters on the index FileScan — per-trigger cost scales with the
     // batch's cell spread, never the index. The query set (the vec_id
@@ -985,7 +985,7 @@ object ExtQ {
     Q("st9_stream_classify", Seq(TextQ.ClfStore),
       (s, d) => {
         val docs = Tables.documents(s, d)
-        TextQ.clfArtifact(s, d)  // build/refresh at batch parallelism
+        TextQ.ClfStore.resolve(s, d)  // build/refresh at batch parallelism
         streamClassify(s, d,
           s.readStream.schema(docs.schema)
             .option("pathGlobFilter", "documents.parquet").parquet(d)
@@ -1007,7 +1007,7 @@ object ExtQ {
     Q("st10_stream_decontam", Seq(TextQ.DecontamStore),
       (s, d) => {
         val docs = Tables.documents(s, d)
-        TextQ.decontamArtifact(s, d)  // build/refresh at batch parallelism
+        TextQ.DecontamStore.resolve(s, d)  // build/refresh at batch parallelism
         streamDecontam(s, d,
           s.readStream.schema(docs.schema)
             .option("pathGlobFilter", "documents.parquet").parquet(d)
@@ -1044,7 +1044,7 @@ object ExtQ {
     Q("st11_stream_ann_delta", Seq(TextQ.AnnCorpusStore),
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        TextQ.annCorpusArtifact(s, d)  // build/refresh at batch parallelism
+        TextQ.AnnCorpusStore.resolve(s, d)  // build/refresh at batch parallelism
         streamAnnDelta(s, d,
           s.readStream.schema(emb.schema)
             .option("pathGlobFilter", "embeddings.parquet").parquet(d)
@@ -1056,7 +1056,7 @@ object ExtQ {
     // Streaming incremental CLUSTER MAINTENANCE — st6 gates ingest;
     // this closes the loop: each micro-batch's verified duplicate
     // edges are star-merged into the maintained corpus cluster labels
-    // (Dedup.ccIncremental over the persisted clusterArtifact), so the
+    // (Dedup.ccIncremental over the persisted ClusterStore), so the
     // clustering is a LIVE table the stream keeps current, never a
     // batch job re-run over the corpus. Single-batch over the src0
     // slice ≡ d17 (the same oracle checks the fixpoint); the
@@ -1072,7 +1072,7 @@ object ExtQ {
         // label artifact (whose build runs full connected components)
         // are batch maintenance — only the per-micro-batch probe+merge
         // belongs inside the 4-partition stream scope
-        TextQ.bandArtifact(s, d)
+        TextQ.BandStore.resolve(s, d)
         TextQ.gramSetsOf(s, d)
         TextQ.prevClusters(s, d)
         // NOT withStreamShuffle: stateless stream (source →

@@ -806,50 +806,45 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
        |${anchorBaseSql(frames)}
        |) base${if (jitter) "\nWHERE (l_orderkey + l_suppkey) % 9 <> 0" else ""}""".stripMargin
 
+  /** m11's anchor base as a persisted on-disk artifact — the same
+    * posture as the Derived stores: the anchor gt/tracks stand in for
+    * the engine's input files (the reference READS its gt/track data
+    * from disk, then computes metrics — the 10–15 s estimate covers
+    * the metrics pipeline, not a synthetic-data derivation), so the
+    * deterministic derivation is written once per source-data
+    * generation and FileScanned thereafter. Keyed by lineitem's
+    * (length, mtime).
+    *
+    * One artifact KIND per frame count (the Derived store rule):
+    * frame counts are coexisting datasets, not params versions, so they
+    * must not be `sub` values, whose sibling GC would let `Anchor
+    * sweep`'s f10000 build delete m11's f1000 store.
+    */
+  private[graft] def anchorStore(frames: Int): Artifact =
+    Artifact(s"anchor_f$frames")(s"graft_anchor_f$frames",
+        Seq("lineitem.parquet")) { (s, d, dir) =>
+      graft.sources.ArtifactStore.retire(s, "graft_anchor_artifact")
+      graft.Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
+      s.sql(anchorBaseSql(frames)).write.mode("overwrite").parquet(dir)
+    }
+
   /** The m11 anchor pipeline (shared with `graft.Anchor`'s scaling
     * sweep): CLEAR/Identity metrics over the anchor derivation at any
     * frame count — 1000 frames ≈ 50k gt rows (the BASELINE.md shape),
     * 10000 frames ≈ 349k at sf0.1 (the 10× scaling point). One sequence,
     * so the metrics kernel runs it as a single task.
     */
-  /** m11's anchor base as a persisted on-disk artifact — the same
-    * posture as Derived.artifact: the anchor gt/tracks stand in for
-    * the engine's input files (the reference READS its gt/track data
-    * from disk, then computes metrics — the 10–15 s estimate covers
-    * the metrics pipeline, not a synthetic-data derivation), so the
-    * deterministic derivation is written once per source-data
-    * generation and FileScanned thereafter. Keyed by lineitem's
-    * (length, mtime); `_SUCCESS` gates readiness.
-    *
-    * One artifact KIND per frame count (the Derived.artifact rule):
-    * frame counts are coexisting datasets, not params versions, so they
-    * must not be `sub` values, whose sibling GC would let `Anchor
-    * sweep`'s f10000 build delete m11's f1000 store.
-    */
-  private[graft] def anchorArtifact(s: org.apache.spark.sql.SparkSession, d: String,
-                                    frames: Int): String = {
-    graft.sources.ArtifactStore.retire(s, "graft_anchor_artifact")
-    graft.sources.ArtifactStore.resolve(s, s"graft_anchor_f$frames",
-      Seq(new java.io.File(d, "lineitem.parquet"))) { dir =>
-      graft.Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
-      s.sql(anchorBaseSql(frames)).write.mode("overwrite").parquet(dir)
-    }
-  }
-
-  private[graft] def anchorStore(frames: Int): Artifact =
-    Artifact(s"anchor_f$frames")(anchorArtifact(_, _, frames))
-
   def anchorMetrics(s: org.apache.spark.sql.SparkSession, d: String,
                     frames: Int = 1000): org.apache.spark.sql.DataFrame = {
     // ONE cached artifact read (anchorBaseSql persisted once per data
-    // generation — see anchorArtifact) feeds both sides: gt/tracks as
+    // generation — see anchorStore) feeds both sides: gt/tracks as
     // separate spark.sql(anchorSql(..)) each cached their own copy,
     // paying the 600k-row scan + dedup window TWICE on every first
     // touch (the bench isolation reset makes every bench run a first
     // touch). The jitter projection and %9 drop are exact integer
     // arithmetic on DOUBLE columns, so results are bit-identical to the
     // oracle's standalone gt/tracks derivations.
-    val base = s.read.parquet(anchorArtifact(s, d, frames)).cache()
+    val base = s.read.parquet(anchorStore(frames).resolve(s, d)).cache()
     val gt = base.select(col("seq"), col("frameIdx"), col("id"),
       col("x"), col("y"), col("w"), col("h"))
     val tracks = base
@@ -918,14 +913,10 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
     * 60 s-apart modTimes — FileStreamSource processes oldest-first, so
     * batch order is deterministic.
     */
-  private[graft] def timedBatchArtifact(s: org.apache.spark.sql.SparkSession,
-                                        d: String): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_k10_batches",
-      Seq("lineitem.parquet", "embeddings.parquet").map(new java.io.File(d, _))) { dir =>
-      writeTimedBatches(s, Derived.artifact(s, d, "gt_emb"), dir)
-    }
-
-  val K10BatchStore: Artifact = Artifact("k10_batches")(timedBatchArtifact)
+  val K10BatchStore: Artifact = Artifact("k10_batches")("graft_k10_batches",
+      Seq("lineitem.parquet", "embeddings.parquet")) { (s, d, dir) =>
+    writeTimedBatches(s, Derived.GtEmbStore.resolve(s, d), dir)
+  }
 
   private def writeTimedBatches(s: org.apache.spark.sql.SparkSession,
                                 gtEmb: String, dir: String): Unit = {
@@ -955,15 +946,12 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
         .filter(_.getName.endsWith(".parquet"))
         .foreach { f =>
           // fail loudly: a silently-ignored mtime leaves batch order to
-          // near-tied write times, and the oracle premise is the order
-          require(f.setLastModified(t0 + b * 60000L),
+          // near-tied write times, and the oracle premise is the order.
+          // In the past, so no file is newer than the store's _SUCCESS.
+          require(f.setLastModified(t0 - (2 - b) * 60000L),
             s"could not set batch mtime on $f")
         }
     }
-    // publish only after all three batches and their mtimes landed
-    // (the stream source skips `_`-prefixed files)
-    require(new java.io.File(dir, "_SUCCESS").createNewFile(),
-      s"could not publish $dir")
   }
 
   // ONE config instance per tracker query, shared between the Spark
@@ -1110,7 +1098,7 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
     Q("k10_track_timed", Seq(K10BatchStore),
       (s, d) => ExtQ.withStreamShuffle(s) {
         import s.implicits._
-        val dir = timedBatchArtifact(s, d)
+        val dir = K10BatchStore.resolve(s, d)
         val name = ExtQ.sinkName("k10_timed_", d)
         val q = StreamingTracker.trackTimed(
             s.readStream.schema(org.apache.spark.sql.Encoders.product[TimedTrackerIn].schema)

@@ -236,24 +236,9 @@ object TextQ {
       |)""".stripMargin
   }
 
-  /** Jaccard-scored LSH near-dup pairs at J ≥ 0.5 — the near-dup
-    * report (d05). The dedup clustering (d07) verifies its own edges
-    * at J ≥ 0.9 via [[clusterEdges]] over the same persisted band/gram
-    * artifacts, so the artifact store (not a session cache) is what
-    * keeps the corpus tokenized/hashed once.
-    *
-    * Banding is 16 hashes in 2 bands of 8: the LSH S-curve threshold
-    * (1/b)^(1/r) = 0.5^(1/8) ≈ 0.917 sits AT the 0.9 dedup threshold,
-    * so candidate volume tracks the true near-dup count instead of the
-    * mid-similarity bulk (the r4 config, 2 bands of 4, thresholded at
-    * 0.84 and admitted ~30% of ALL pairs on this shared-vocabulary
-    * corpus — 3.8 M candidates at sf0.1, 39% of total bench time).
-    * jaccardPairs' size-ratio prefilter then drops colliding-but-
-    * dissimilar pairs before any gram array is shuffled.
-    */
   /** Recompute the corpus's MinHash band-signature table `(doc_id,
     * band, band_sig, source)` from raw text — used ONLY to build the
-    * on-disk artifact ([[bandArtifact]]); every query-time consumer
+    * on-disk artifact ([[BandStore]]); every query-time consumer
     * reads the artifact back instead. `source` rides along so the
     * incremental consumers can slice batch vs corpus without a second
     * join.
@@ -282,6 +267,28 @@ object TextQ {
       .withColumn("corpus_rank", when(isCorpus, row_number().over(wSide)))
   }
 
+  /** The band artifact's partition-prefix column: the first 2 hex
+    * chars of the md5 band signature, "x"-prefixed so the partition
+    * directory value can never be inferred as a numeric type on read
+    * (an all-digit sample would otherwise flip the column to int and
+    * break probe-side string equality). 256 uniform partitions — at
+    * 100 TB each still holds millions of signatures, but a streaming
+    * ingest's probe touches only the prefixes its micro-batch emits,
+    * so the static FileScan prunes ~99% of the store instead of
+    * re-scanning all of it every trigger (the st6 steady-state shape).
+    */
+  private[graft] def sigPfx(sig: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    concat(lit("x"), substring(sig, 1, 2))
+
+  /** Params/layout tag for [[BandStore]] (ArtifactStore `sub`):
+    * 16 hashes, 2 bands, dual layout (compact full-scan copy +
+    * 2-hex-char-prefix-partitioned probe copy), "r" = the precomputed
+    * bucket_rank/corpus_rank guard columns (round 18). Bump when the
+    * banding config or on-disk layout changes so stale-param artifacts
+    * are invalidated and GC'd like stale-data generations.
+    */
+  private[graft] val BandArtifactTag = "h16b2p2dualr"
+
   /** The persisted ON-DISK band-signature artifact — the cross-session
     * maintenance story the incremental-dedup docs promise: written ONCE
     * per distinct source-data generation, then FileScanned by every
@@ -296,67 +303,35 @@ object TextQ {
     * mtime), so a regenerated documents.parquet at the same path
     * invalidates the artifact instead of silently serving stale
     * signatures (the driver DOES regenerate testdata between rounds).
-    * Returns the artifact path; `_SUCCESS` gates readiness (a torn
-    * write is rewritten, never read).
-    */
-  /** The band artifact's partition-prefix column: the first 2 hex
-    * chars of the md5 band signature, "x"-prefixed so the partition
-    * directory value can never be inferred as a numeric type on read
-    * (an all-digit sample would otherwise flip the column to int and
-    * break probe-side string equality). 256 uniform partitions — at
-    * 100 TB each still holds millions of signatures, but a streaming
-    * ingest's probe touches only the prefixes its micro-batch emits,
-    * so the static FileScan prunes ~99% of the store instead of
-    * re-scanning all of it every trigger (the st6 steady-state shape).
-    */
-  private[graft] def sigPfx(sig: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    concat(lit("x"), substring(sig, 1, 2))
-
-  /** Params/layout tag for [[bandArtifact]] (ArtifactStore `sub`):
-    * 16 hashes, 2 bands, dual layout (compact full-scan copy +
-    * 2-hex-char-prefix-partitioned probe copy), "r" = the precomputed
-    * bucket_rank/corpus_rank guard columns (round 18). Bump when the
-    * banding config or on-disk layout changes so stale-param artifacts
-    * are invalidated and GC'd like stale-data generations.
-    */
-  private[graft] val BandArtifactTag = "h16b2p2dualr"
-
-  /** The band store is written in TWO layouts under one generation —
+    *
+    * The band store is written in TWO layouts under one generation —
     * the standard scan-vs-probe split of a production signature store:
     *   - `full/` — compact files for the batch consumers that scan the
     *     whole table anyway (d05/d07/d09/d12/d15/d17 via [[bandSigs]]);
     *     measured at sf0.1, a full scan of the 256-directory layout
     *     pays ~0.6 s of footer opens vs ~0.13 s compact — a pure
-    *     constant that multiplied across every consumer per bench.
+    *     constant that multiplied across every consumer per bench. The
+    *     store compacts it before publishing, so every full-scan
+    *     consumer pays one footer open per ~target-sized file instead
+    *     of one per shuffle partition.
     *   - `pfx/` — partitioned by [[sigPfx]] (256 directories, one
     *     writer task each) for the streaming probes (st6/st7), whose
     *     micro-batches push their signature prefixes as partition
     *     filters and read ~the batch's key spread, not the corpus.
-    * One compute, two writes, `_SUCCESS` at the generation root only
-    * after BOTH copies land (a torn write is rebuilt, never read).
+    *     One file per partition directory already (the repartition).
     */
-  private[graft] def bandArtifact(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_band_artifact",
-      Seq(new java.io.File(d, "documents.parquet")), sub = BandArtifactTag) { dir =>
-      val sigs = bandSigsCompute(s, d).cache()
-      try {
-        sigs.write.mode("overwrite").parquet(s"$dir/full")
-        sigs.withColumn("sig_pfx", sigPfx(col("band_sig")))
-          // one shuffle on the partition value: each directory is written
-          // by exactly one task (256 files total, not tasks×256)
-          .repartition(col("sig_pfx"))
-          .write.mode("overwrite").partitionBy("sig_pfx").parquet(s"$dir/pfx")
-      } finally sigs.unpersist()
-      // compact the scan copy BEFORE publishing (the _SUCCESS gate
-      // below): every full-scan consumer then pays one footer open per
-      // ~target-sized file instead of one per shuffle partition, and no
-      // reader can ever observe the swap. pfx/ stays as written — one
-      // file per partition directory already (the repartition above).
-      graft.sources.Compaction.recordCompaction(s, dir,
-        graft.sources.Compaction.compactInPlace(s, s"$dir/full"))
-      val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p, true).close()
-    }
+  val BandStore: Artifact = Artifact("band")("graft_band_artifact",
+      Seq("documents.parquet"), BandArtifactTag, compacts = Some("full")) { (s, d, dir) =>
+    val sigs = bandSigsCompute(s, d).cache()
+    try {
+      sigs.write.mode("overwrite").parquet(s"$dir/full")
+      sigs.withColumn("sig_pfx", sigPfx(col("band_sig")))
+        // one shuffle on the partition value: each directory is written
+        // by exactly one task (256 files total, not tasks×256)
+        .repartition(col("sig_pfx"))
+        .write.mode("overwrite").partitionBy("sig_pfx").parquet(s"$dir/pfx")
+    } finally sigs.unpersist()
+  }
 
   /** Session view of the band artifact (building it first if this
     * corpus generation has never been banded) — an UNCACHED memoized
@@ -368,25 +343,8 @@ object TextQ {
     */
   private[graft] def bandSigs(s: org.apache.spark.sql.SparkSession, d: String) =
     // batch consumers scan the whole table → the compact copy
-    storeRead(s, s"${bandArtifact(s, d)}/full")
+    storeRead(s, s"${BandStore.resolve(s, d)}/full")
 
-  /** The PARTITION-PRUNED corpus-side band probe: reads only the
-    * artifact partitions whose `sig_pfx` appears in `prefixes` (the
-    * distinct signature prefixes of one ingest micro-batch). This is
-    * the stream-static shape that survives 100×: the static FileScan's
-    * `PartitionFilters` (pinned in PlanShapeSpec) cut the scan to the
-    * ≤256ths of the signature store a batch can possibly collide with,
-    * so per-trigger cost scales with the batch's key spread, not the
-    * corpus (previously st6 re-scanned the whole cached corpus table
-    * every micro-batch — the one superlinear cross-SF curve in r13).
-    */
-  /** `withCorpusRank` additionally selects the artifact's precomputed
-    * `corpus_rank` guard column (st6's capped static side); default
-    * stays the bare 3-column shape st7's clustering unions expect —
-    * the clustering tier is deliberately UNCAPPED (see
-    * Dedup.minhashCandidatesFromBands), so it must not even see the
-    * column.
-    */
   /** Session-memoized UNCACHED read of one parquet store: reuses the
     * analyzed relation — and with it the listed file index — across
     * calls, without materializing any data. A partitioned store's
@@ -403,26 +361,40 @@ object TextQ {
                                path: String): org.apache.spark.sql.DataFrame =
     graft.SessionMemo(s, ("store", path))(s.read.parquet(path))
 
+  /** The PARTITION-PRUNED corpus-side band probe: reads only the
+    * artifact partitions whose `sig_pfx` appears in `prefixes` (the
+    * distinct signature prefixes of one ingest micro-batch). This is
+    * the stream-static shape that survives 100×: the static FileScan's
+    * `PartitionFilters` (pinned in PlanShapeSpec) cut the scan to the
+    * ≤256ths of the signature store a batch can possibly collide with,
+    * so per-trigger cost scales with the batch's key spread, not the
+    * corpus (previously st6 re-scanned the whole cached corpus table
+    * every micro-batch — the one superlinear cross-SF curve in r13).
+    *
+    * `withCorpusRank` additionally selects the artifact's precomputed
+    * `corpus_rank` guard column (st6's capped static side); default
+    * stays the bare 3-column shape st7's clustering unions expect —
+    * the clustering tier is deliberately UNCAPPED (see
+    * Dedup.minhashCandidatesFromBands), so it must not even see the
+    * column.
+    */
   private[graft] def prunedCorpusBands(s: org.apache.spark.sql.SparkSession,
                                        d: String, prefixes: Seq[String],
                                        withCorpusRank: Boolean = false) =
-    // resolveExisting, not resolve: this is the per-trigger probe the
+    // existing, not resolve: this is the per-trigger probe the
     // streaming ingests (st6/st7) run inside foreachBatch — a missing
     // store there is a maintenance outage and must fail loudly, never
     // silently rebuild the corpus banding inside a micro-batch trigger
     // (StreamBoundarySpec pins it; the queries' pre-stream resolve /
     // dedup-maintain own the build)
-    storeRead(s, graft.sources.ArtifactStore.resolveExisting(s,
-        "graft_band_artifact",
-        Seq(new java.io.File(d, "documents.parquet")),
-        sub = BandArtifactTag) + "/pfx")
+    storeRead(s, BandStore.existing(s, d) + "/pfx")
       .where(col("sig_pfx").isin(prefixes: _*))
       .filter(col("source") =!= "src0")
       .select("band", ("band_sig" :: "doc_id" ::
         (if (withCorpusRank) List("corpus_rank") else Nil)): _*)
 
   /** The persisted gram-fingerprint artifact `(doc_id, grams)` — the
-    * signature-store companion to [[bandArtifact]]: the Jaccard verify
+    * signature-store companion to [[BandStore]]: the Jaccard verify
     * stage's per-doc sorted 64-bit token fingerprints, a deterministic
     * per-row projection computed once per corpus generation and
     * FileScanned by every verify consumer (scoredPairs for d05/d07,
@@ -430,23 +402,18 @@ object TextQ {
     * re-running tokenize + xxhash64 + sort over the corpus per query.
     * Same (length, mtime) keying and `_SUCCESS` gating as the bands.
     */
-  private[graft] def gramArtifact(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_gram_artifact",
+  val GramStore: Artifact = Artifact("gram")("graft_gram_artifact",
       // params tag: unigram (n=1) xxhash64 fingerprints — a gram-order
       // or hash change must invalidate the store, not serve stale sets
-      Seq(new java.io.File(d, "documents.parquet")), sub = "g1x64") { dir =>
-      Dedup.gramSets(Tables.documents(s, d)).write.mode("overwrite").parquet(dir)
-      // still inside the store's build lock (in-JVM readers resolve
-      // through it), same maintenance window as the build itself
-      graft.sources.Compaction.recordCompaction(s, dir,
-        graft.sources.Compaction.compactInPlace(s, dir))
-    }
+      Seq("documents.parquet"), "g1x64", compacts = Some("")) { (s, d, dir) =>
+    Dedup.gramSets(Tables.documents(s, d)).write.mode("overwrite").parquet(dir)
+  }
 
   private[graft] def gramSetsOf(s: org.apache.spark.sql.SparkSession, d: String) =
     // uncached (round 21, same reasoning as bandSigs): the gram store
     // is ~100 KB; the verify joins reference it up to three times per
     // query, each a cheap re-scan through the memoized relation
-    storeRead(s, gramArtifact(s, d))
+    storeRead(s, GramStore.resolve(s, d))
 
   /** The persisted 64-bit SimHash fingerprint artifact `(doc_id,
     * simhash64, source)` — the fourth leg of the signature store: the
@@ -456,23 +423,20 @@ object TextQ {
     * re-fingerprints the corpus. Same (length, mtime) keying,
     * `_SUCCESS` gating and params-tag invalidation as the band store.
     */
-  private[graft] def simhashArtifact(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_simhash_artifact",
-      Seq(new java.io.File(d, "documents.parquet")), sub = "w64") { dir =>
-      val docs = Tables.documents(s, d)
-      Dedup.simhash64(docs)
-        .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .write.mode("overwrite").parquet(dir)
-      graft.sources.Compaction.recordCompaction(s, dir,
-        graft.sources.Compaction.compactInPlace(s, dir))
-    }
+  val SimhashStore: Artifact = Artifact("simhash")("graft_simhash_artifact",
+      Seq("documents.parquet"), "w64", compacts = Some("")) { (s, d, dir) =>
+    val docs = Tables.documents(s, d)
+    Dedup.simhash64(docs)
+      .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
+      .write.mode("overwrite").parquet(dir)
+  }
 
   private[graft] def simhashFps(s: org.apache.spark.sql.SparkSession, d: String) =
     // uncached (round 21, same reasoning as bandSigs)
-    storeRead(s, simhashArtifact(s, d))
+    storeRead(s, SimhashStore.resolve(s, d))
 
   /** The s08/s09 IVF+PQ configuration — single-sourced because the
-    * stored index (annArtifact) MUST be encoded with the same model the
+    * stored index ([[AnnStore]]) MUST be encoded with the same model the
     * probe rebuilds (the artifact key carries these params, so a retune
     * invalidates the store like a data change would).
     */
@@ -497,23 +461,22 @@ object TextQ {
     * the same generation, so probes rebuild them driver-side (a ≤
     * codebookSize-row collect) rather than reading them from disk.
     */
-  private[graft] def annArtifact(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_ann_artifact",
-      Seq(new java.io.File(d, "embeddings.parquet")),
+  val AnnStore: Artifact = Artifact("index")("graft_ann_artifact",
+      Seq("embeddings.parquet"),
       // "dcah" = dual codes-as-array layout + hash-drawn model seeds
       // (round 16): the per-subspace code columns became ONE array<int>
       // column when the encode went native, the residual tier's rcodes
       // joined them, and the centroid/codebook seeds moved to the
       // hash-gated draw — layout AND params changes, so the tag must
       // invalidate older stores
-      sub = s"nl${AnnNlist}m${AnnM}cb${AnnCb}dcah$annTrainSubTag") { dir =>
-      val emb = Tables.embeddings(s, d)
-      val model = SimilaritySearch.ivfPqModel(emb, AnnNlist, AnnM, AnnCb)
-      val rmodel = SimilaritySearch.ivfRPqModel(emb, AnnNlist, AnnM, AnnCb)
-      SimilaritySearch.ivfPqEncodeDual(emb, model, rmodel)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dir)
-    }
+      s"nl${AnnNlist}m${AnnM}cb${AnnCb}dcah$annTrainSubTag") { (s, d, dir) =>
+    val emb = Tables.embeddings(s, d)
+    val model = SimilaritySearch.ivfPqModel(emb, AnnNlist, AnnM, AnnCb)
+    val rmodel = SimilaritySearch.ivfRPqModel(emb, AnnNlist, AnnM, AnnCb)
+    SimilaritySearch.ivfPqEncodeDual(emb, model, rmodel)
+      .repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(dir)
+  }
 
   /** Engine default nprobe when neither the caller nor a maintenance
     * sweep has chosen one — the catalog serving budget.
@@ -619,7 +582,7 @@ object TextQ {
       d: String, queries: org.apache.spark.sql.DataFrame,
       nprobe: Option[Int] = None, k: Int = 5, refine: Int = 20): org.apache.spark.sql.DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val index = annArtifact(s, d)
+    val index = AnnStore.resolve(s, d)
     val np = resolveNprobe(s, index, nprobe)
     val model = SimilaritySearch.ivfPqModel(emb, AnnNlist, AnnM, AnnCb)
     val cells = SimilaritySearch.ivfPqProbedCells(queries, model, nprobe = np)
@@ -639,7 +602,7 @@ object TextQ {
       d: String, queries: org.apache.spark.sql.DataFrame,
       nprobe: Option[Int] = None, k: Int = 5, refine: Int = 20): org.apache.spark.sql.DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val index = annArtifact(s, d)
+    val index = AnnStore.resolve(s, d)
     val np = resolveNprobe(s, index, nprobe)
     val rmodel = SimilaritySearch.ivfRPqModel(emb, AnnNlist, AnnM, AnnCb)
     val cells = SimilaritySearch.ivfRPqProbedCells(queries, rmodel, nprobe = np)
@@ -662,7 +625,7 @@ object TextQ {
     val emb = Tables.embeddings(s, d)
     val corpus = emb.filter(!SemBatchPred)
     val model = SimilaritySearch.ivfPqModel(corpus, AnnNlist, AnnM, AnnCb)
-    val index = annCorpusArtifact(s, d)
+    val index = AnnCorpusStore.resolve(s, d)
     val np = resolveNprobe(s, index, nprobe)
     val delta = SimilaritySearch.ivfPqEncode(emb.filter(SemBatchPred), model)
     val cells = SimilaritySearch.ivfPqProbedCells(queries, model, nprobe = np)
@@ -676,49 +639,37 @@ object TextQ {
       k = k, nprobe = np, refine = refine)
   }
 
-  /** The (kind, sources, sub) key of the CORPUS-slice index store —
-    * the delta-ingest tier's main index (the clfStoreKey rule: one
-    * definition for build and probe). The sub carries the model
-    * params plus the batch-split residue: retuning either must
-    * invalidate the store (ADVICE r13 rule).
-    */
-  private def annCorpusStoreKey(d: String) = ("graft_ann_corpus_artifact",
-    Seq(new java.io.File(d, "embeddings.parquet")),
-    s"nl${AnnNlist}m${AnnM}cb${AnnCb}b7$annTrainSubTag")
-
   /** The delta-ingest tier's MAIN index: the raw-PQ code table of the
     * CORPUS slice only, encoded under a model whose seeds are drawn
     * from the corpus only (no lookahead into the arriving batch — the
     * d22/t18/d25 stance applied to the ANN model), cell-partitioned
-    * like [[annArtifact]]. This is the index that exists BEFORE a
+    * like [[AnnStore]]. This is the index that exists BEFORE a
     * batch arrives; s12/st11 encode the batch under the same frozen
     * model and union the delta codes into the probe, so new vectors
     * become searchable without touching (let alone rebuilding) this
     * store — between `ann-maintain` generations the index is
-    * append-only. `ann-maintain` owns the build.
+    * append-only. `ann-maintain` owns the build. The sub carries the
+    * model params plus the batch-split residue: retuning either must
+    * invalidate the store (ADVICE r13 rule).
     */
-  private[graft] def annCorpusArtifact(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val (kind, srcs, sub) = annCorpusStoreKey(d)
-    graft.sources.ArtifactStore.resolve(s, kind, srcs, sub = sub) { dir =>
-      val corpus = Tables.embeddings(s, d).filter(!SemBatchPred)
-      val model = SimilaritySearch.ivfPqModel(corpus, AnnNlist, AnnM, AnnCb)
-      SimilaritySearch.ivfPqEncode(corpus, model)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dir)
-    }
+  val AnnCorpusStore: Artifact = Artifact("corpus")("graft_ann_corpus_artifact",
+      Seq("embeddings.parquet"),
+      s"nl${AnnNlist}m${AnnM}cb${AnnCb}b7$annTrainSubTag") { (s, d, dir) =>
+    val corpus = Tables.embeddings(s, d).filter(!SemBatchPred)
+    val model = SimilaritySearch.ivfPqModel(corpus, AnnNlist, AnnM, AnnCb)
+    SimilaritySearch.ivfPqEncode(corpus, model)
+      .repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(dir)
   }
 
-  /** Probe-side locator of the corpus index — resolveExisting, never
-    * resolve (the clfModelOfStore rule): a missing store at probe time
+  /** Probe-side locator of the corpus index — `existing`, never
+    * `resolve` (the clfModelOfStore rule): a missing store at probe time
     * (above all inside st11's stream) means `ann-maintain` didn't run
     * for this generation, and it fails loudly naming that fix instead
     * of encoding the corpus inside a micro-batch.
     */
   private[graft] def annCorpusIndexOfStore(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val (kind, srcs, sub) = annCorpusStoreKey(d)
-    graft.sources.ArtifactStore.resolveExisting(s, kind, srcs, sub = sub)
-  }
+      d: String): String = AnnCorpusStore.existing(s, d)
 
   /** Fold-in recommendation threshold for the delta tier: when the
     * un-indexed delta outgrows this fraction of the main index,
@@ -753,20 +704,6 @@ object TextQ {
       .drop("__delta")
   }
 
-  /** The persisted CORPUS CLUSTER-LABEL artifact `(doc_id, cluster_id)`
-    * — batch connected components over the corpus slice's verified
-    * duplicate edges (source <> 'src0', Jaccard >= 0.9), written once
-    * per source-data generation. This is the third leg of the
-    * signature-store posture: at 100 TB the dedup cluster assignment is
-    * a MAINTAINED table, not something an ingest recomputes — each
-    * batch star-merges its verified edges into these labels
-    * (Dedup.ccIncremental), so d17's steady-state cost is the batch's
-    * candidate probe + verify + a star-forest CC, never a corpus-wide
-    * re-cluster. Candidates come from the corpus-only rows of the band
-    * artifact (band collisions between two corpus docs are unaffected
-    * by whether batch rows sit in the same table), so the labels are
-    * bit-identical to clustering the corpus inline.
-    */
   /** The Jaccard threshold the CLUSTERING tier verifies at — single-
     * sourced across the corpus label artifact, d07's batch clustering
     * and d17's batch edges, because the persisted labels MUST be built
@@ -788,28 +725,39 @@ object TextQ {
         minJaccard = ClusterJaccard)
       .select("doc_a", "doc_b")
 
-  private[graft] def clusterArtifact(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_cluster_artifact",
+  /** The persisted CORPUS CLUSTER-LABEL artifact `(doc_id, cluster_id)`
+    * — batch connected components over the corpus slice's verified
+    * duplicate edges (source <> 'src0', Jaccard >= 0.9), written once
+    * per source-data generation. This is the third leg of the
+    * signature-store posture: at 100 TB the dedup cluster assignment is
+    * a MAINTAINED table, not something an ingest recomputes — each
+    * batch star-merges its verified edges into these labels
+    * (Dedup.ccIncremental), so d17's steady-state cost is the batch's
+    * candidate probe + verify + a star-forest CC, never a corpus-wide
+    * re-cluster. Candidates come from the corpus-only rows of the band
+    * artifact (band collisions between two corpus docs are unaffected
+    * by whether batch rows sit in the same table), so the labels are
+    * bit-identical to clustering the corpus inline.
+    */
+  val ClusterStore: Artifact = Artifact("clusters")("graft_cluster_artifact",
       // params tag: the labels are only valid for edges verified at
       // THIS threshold over THIS banding config — retuning either must
       // invalidate the persisted clustering (ADVICE r13)
-      Seq(new java.io.File(d, "documents.parquet")),
-      sub = s"j${ClusterJaccard}_h16b2") { dir =>
-      // ranked-block form over the ALL-rows bucket_rank: within the
-      // corpus slice ranks stay doc_id-ordered (gaps only widen
-      // blocks), which is all the owner-block argument needs
-      val corpusEdges = clusterEdges(s, d,
-        Dedup.minhashCandidatesFromRankedBands(
-          bandSigs(s, d).filter(col("source") =!= "src0")))
-      Dedup.connectedComponents(corpusEdges, distinctEdges = false)
-        .write.mode("overwrite").parquet(dir)
-      graft.sources.Compaction.recordCompaction(s, dir,
-        graft.sources.Compaction.compactInPlace(s, dir))
-    }
+      Seq("documents.parquet"), s"j${ClusterJaccard}_h16b2",
+      compacts = Some("")) { (s, d, dir) =>
+    // ranked-block form over the ALL-rows bucket_rank: within the
+    // corpus slice ranks stay doc_id-ordered (gaps only widen
+    // blocks), which is all the owner-block argument needs
+    val corpusEdges = clusterEdges(s, d,
+      Dedup.minhashCandidatesFromRankedBands(
+        bandSigs(s, d).filter(col("source") =!= "src0")))
+    Dedup.connectedComponents(corpusEdges, distinctEdges = false)
+      .write.mode("overwrite").parquet(dir)
+  }
 
   private[graft] def prevClusters(s: org.apache.spark.sql.SparkSession, d: String) =
     // uncached (round 21, same reasoning as bandSigs)
-    storeRead(s, clusterArtifact(s, d))
+    storeRead(s, ClusterStore.resolve(s, d))
 
   /** Shared tail of the incremental-dedup queries (d09 memoized / d15
     * artifact): exact-Jaccard verify of the asymmetric candidates at
@@ -919,7 +867,22 @@ object TextQ {
     */
   private[graft] val RoutedCap = 8
 
-  /** d05's verified-pair pipeline — NOT memoized/cached (round 21):
+  /** Jaccard-scored LSH near-dup pairs at J ≥ 0.5 — the near-dup
+    * report (d05). The dedup clustering (d07) verifies its own edges
+    * at J ≥ 0.9 via [[clusterEdges]] over the same persisted band/gram
+    * artifacts, so the artifact store (not a session cache) is what
+    * keeps the corpus tokenized/hashed once.
+    *
+    * Banding is 16 hashes in 2 bands of 8: the LSH S-curve threshold
+    * (1/b)^(1/r) = 0.5^(1/8) ≈ 0.917 sits AT the 0.9 dedup threshold,
+    * so candidate volume tracks the true near-dup count instead of the
+    * mid-similarity bulk (the r4 config, 2 bands of 4, thresholded at
+    * 0.84 and admitted ~30% of ALL pairs on this shared-vocabulary
+    * corpus — 3.8 M candidates at sf0.1, 39% of total bench time).
+    * jaccardPairs' size-ratio prefilter then drops colliding-but-
+    * dissimilar pairs before any gram array is shuffled.
+    *
+    * d05's verified-pair pipeline — NOT memoized/cached (round 21):
     * d05 is its only consumer, so the old cache+count materialization
     * ran the whole pipeline once to fill the columnar cache and then
     * re-read ~2.25M cached rows inside the same timed action — pure
@@ -1116,14 +1079,6 @@ object TextQ {
   private[graft] val SemIters = 2
   private[graft] val SemTau = 0.40
 
-  /** Params/layout tag for the semantic artifact (ArtifactStore sub),
-    * single-sourced between the build ([[semArtifact]]) and the
-    * probe-side resolveExisting ([[prunedSemState]]) so the two can
-    * never address different stores. "dual" = compact + byclust
-    * layouts; "hs" = hash-gated k-means seeding (round 16).
-    */
-  private[graft] val SemArtifactTag = s"k${SemK}i${SemIters}t${SemTau}dualhs"
-
   /** Ingest split for the semantic tier: vec_id ≡ 7 (mod 10) plays the
     * arriving batch (≈10% of vectors, size-invariant across SFs),
     * everything else the existing corpus whose state the artifact
@@ -1201,61 +1156,55 @@ object TextQ {
     *     [[SemTau]].
     * d21 probes both: batch assignment is a projection under `cents`,
     * candidate pairs touch only the batch's clusters, verified edges
-    * star-merge into `state`'s labels (Dedup.ccIncremental). Same
-    * `_SUCCESS`-at-generation-root gating as the dual-layout band
-    * store: a torn write is rebuilt, never read.
+    * star-merge into `state`'s labels (Dedup.ccIncremental).
     */
-  private[graft] def semArtifact(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_sem_artifact",
-      Seq(new java.io.File(d, "embeddings.parquet")),
-      // layout tag: dual state layout (compact + cluster-partitioned);
-      // a param OR layout change must bump this sub (ADVICE r13 rule)
-      sub = SemArtifactTag) { dir =>
-      val emb = Tables.embeddings(s, d)
-      val cents = graft.operators.SimilaritySearch.kmeansCentroids(
-        emb, SemK, SemIters)
-      import s.implicits._
-      cents.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
-        .toDF("cid", "cvec")
-        .withColumn("cvec", col("cvec").cast("array<float>"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/cents")
-      val corpus = emb.filter(!SemBatchPred)
-      val assignC = graft.operators.SimilaritySearch
-        .assignWithCentroids(corpus, cents)
-      val withVec = assignC
-        .join(corpus.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      val edges = withVec
-        .select(col("cluster"), col("vec_id").as("id_a"), col("embedding").as("v_a"))
-        .join(withVec.select(col("cluster"), col("vec_id").as("id_b"),
-          col("embedding").as("v_b")), Seq("cluster"))
-        .filter(col("id_a") < col("id_b"))
-        .withColumn("cosine",
-          round(graft.functions.Vectors.cosineQNative(col("v_a"), col("v_b")), 9))
-        .filter(col("cosine") >= SemTau)
-        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-      val groups = graft.operators.Dedup
-        .connectedComponents(edges, distinctEdges = false)
-        .select(col("doc_id").as("vec_id"), col("cluster_id").as("dup_group"))
-      // DUAL state layout, the band-store pattern: `state/` compact for
-      // the full-table consumers (the output union + star labels are
-      // corpus-wide by semantics), `byclust/` partitioned by cluster
-      // for the ingest's pair probe — a batch touches few clusters at
-      // production k, and the probe's FileScan prunes to exactly those
-      val state = assignC.join(groups, Seq("vec_id"), "left")
-        .withColumn("dup_group", coalesce(col("dup_group"), col("vec_id")))
-        .cache()
-      try {
-        state.write.mode("overwrite").parquet(s"$dir/state")
-        state.repartition(col("cluster"))
-          .write.mode("overwrite").partitionBy("cluster").parquet(s"$dir/byclust")
-      } finally state.unpersist()
-      // compact the scan copy pre-publish (the band-store pattern);
-      // byclust/ is one file per partition directory already
-      graft.sources.Compaction.recordCompaction(s, dir,
-        graft.sources.Compaction.compactInPlace(s, s"$dir/state"))
-      val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p, true).close()
-    }
+  val SemStore: Artifact = Artifact("sem")("graft_sem_artifact",
+      Seq("embeddings.parquet"),
+      // params/layout tag: "dual" = compact + cluster-partitioned state
+      // layouts, "hs" = hash-gated k-means seeding (round 16); a param
+      // OR layout change must bump this sub (ADVICE r13 rule)
+      s"k${SemK}i${SemIters}t${SemTau}dualhs", compacts = Some("state")) { (s, d, dir) =>
+    val emb = Tables.embeddings(s, d)
+    val cents = graft.operators.SimilaritySearch.kmeansCentroids(
+      emb, SemK, SemIters)
+    import s.implicits._
+    cents.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
+      .toDF("cid", "cvec")
+      .withColumn("cvec", col("cvec").cast("array<float>"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/cents")
+    val corpus = emb.filter(!SemBatchPred)
+    val assignC = graft.operators.SimilaritySearch
+      .assignWithCentroids(corpus, cents)
+    val withVec = assignC
+      .join(corpus.select(col("vec_id"), col("embedding")), Seq("vec_id"))
+    val edges = withVec
+      .select(col("cluster"), col("vec_id").as("id_a"), col("embedding").as("v_a"))
+      .join(withVec.select(col("cluster"), col("vec_id").as("id_b"),
+        col("embedding").as("v_b")), Seq("cluster"))
+      .filter(col("id_a") < col("id_b"))
+      .withColumn("cosine",
+        round(graft.functions.Vectors.cosineQNative(col("v_a"), col("v_b")), 9))
+      .filter(col("cosine") >= SemTau)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
+    val groups = graft.operators.Dedup
+      .connectedComponents(edges, distinctEdges = false)
+      .select(col("doc_id").as("vec_id"), col("cluster_id").as("dup_group"))
+    // DUAL state layout, the band-store pattern: `state/` compact for
+    // the full-table consumers (the output union + star labels are
+    // corpus-wide by semantics; the store compacts it pre-publish),
+    // `byclust/` partitioned by cluster for the ingest's pair probe —
+    // a batch touches few clusters at production k, and the probe's
+    // FileScan prunes to exactly those (one file per partition
+    // directory already)
+    val state = assignC.join(groups, Seq("vec_id"), "left")
+      .withColumn("dup_group", coalesce(col("dup_group"), col("vec_id")))
+      .cache()
+    try {
+      state.write.mode("overwrite").parquet(s"$dir/state")
+      state.repartition(col("cluster"))
+        .write.mode("overwrite").partitionBy("cluster").parquet(s"$dir/byclust")
+    } finally state.unpersist()
+  }
 
   /** The PARTITION-PRUNED semantic-state probe: only the `byclust/`
     * partitions whose `cluster` appears in `clusters` (the distinct
@@ -1266,13 +1215,10 @@ object TextQ {
     */
   private[graft] def prunedSemState(s: org.apache.spark.sql.SparkSession,
                                     d: String, clusters: Seq[Int]) =
-    // resolveExisting: probe-side twin of the semArtifact build — d21
+    // existing: probe-side twin of the SemStore build — d21
     // resolves the artifact before probing, and a trigger-shaped
     // consumer must never own the corpus clustering build
-    storeRead(s, graft.sources.ArtifactStore.resolveExisting(s,
-        "graft_sem_artifact",
-        Seq(new java.io.File(d, "embeddings.parquet")),
-        sub = SemArtifactTag) + "/byclust")
+    storeRead(s, SemStore.existing(s, d) + "/byclust")
       .where(col("cluster").isin(clusters: _*))
       .select(col("cluster"), col("vec_id"))
 
@@ -1357,32 +1303,28 @@ object TextQ {
     *     time with one tiny agg rather than stored (they are a pure
     *     function of cb, and storing both invites drift).
     * d22 probes it: batch scoring is bigram-explode + two broadcast
-    * lookups per leg — no corpus scan, no retrain. Same
-    * `_SUCCESS`-at-root gating as every other artifact family.
+    * lookups per leg — no corpus scan, no retrain.
     */
-  private[graft] def dsirArtifact(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_dsir_artifact",
-      Seq(new java.io.File(d, "documents.parquet")),
+  val DsirStore: Artifact = Artifact("dsir")("graft_dsir_artifact",
+      Seq("documents.parquet"),
       // params tag: vocab size + batch-split residue — retuning either
       // must invalidate the store (ADVICE r13 rule)
-      sub = s"v${DsirVocab}b7") { dir =>
-      val corpus = Tables.documents(s, d).filter(!DocBatchPred)
-      def persist(sfx: String, train: org.apache.spark.sql.DataFrame): Unit = {
-        val m = graft.operators.TextAnalysis.bigramLmModel(train, DsirVocab)
-        import s.implicits._
-        m.vocab.toDF("tok").coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/vocab_$sfx")
-        m.cb.coalesce(1).write.mode("overwrite").parquet(s"$dir/cb_$sfx")
-      }
-      persist("t", corpus.filter(col("source") === "src1"))
-      persist("r", corpus)
-      val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p, true).close()
+      s"v${DsirVocab}b7") { (s, d, dir) =>
+    val corpus = Tables.documents(s, d).filter(!DocBatchPred)
+    def persist(sfx: String, train: org.apache.spark.sql.DataFrame): Unit = {
+      val m = graft.operators.TextAnalysis.bigramLmModel(train, DsirVocab)
+      import s.implicits._
+      m.vocab.toDF("tok").coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/vocab_$sfx")
+      m.cb.coalesce(1).write.mode("overwrite").parquet(s"$dir/cb_$sfx")
     }
+    persist("t", corpus.filter(col("source") === "src1"))
+    persist("r", corpus)
+  }
 
   /** Classifier tier parameters — single-sourced across t17 (full
     * train/holdout), t18 (frozen-artifact batch serving) and
-    * [[clfArtifact]]'s builder.
+    * [[ClfStore]]'s builder.
     */
   private[graft] val ClfHashHexChars = 4
   private[graft] val ClfGateHalf = graft.operators.TextAnalysis.SampleModulus / 2
@@ -1436,50 +1378,35 @@ object TextQ {
     * the arriving batch excluded (no lookahead — the d22 stance; the
     * oracle freezes the same slice). Labels and per-label totals are
     * re-derived at probe time (pure functions of the counts — the
-    * dsirArtifact `cp` principle). Same `_SUCCESS`-at-root gating and
-    * generation GC as every other artifact family.
+    * [[DsirStore]] `cp` principle). The sub is the params tag: bucket
+    * width + batch-split residue — retuning either must invalidate the
+    * store (ADVICE r13 rule).
     */
-  /** The (kind, sources, sub) key of the classifier store — ONE
-    * definition shared by the build ([[clfArtifact]]) and the probe
-    * ([[clfModelOfStore]]) so the two can never address different
-    * directories. The sub is the params tag: bucket width +
-    * batch-split residue — retuning either must invalidate the store
-    * (ADVICE r13 rule).
-    */
-  private def clfStoreKey(d: String) = ("graft_clf_artifact",
-    Seq(new java.io.File(d, "documents.parquet")), s"h${ClfHashHexChars}b7")
-
-  private[graft] def clfArtifact(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val (kind, srcs, sub) = clfStoreKey(d)
-    graft.sources.ArtifactStore.resolve(s, kind, srcs, sub = sub) { dir =>
-      import graft.operators.TextAnalysis.{SampleLcgA, SampleLcgC, SampleModulus}
-      val gate = pmod(col("doc_id") * lit(SampleLcgA) + lit(SampleLcgC),
-        lit(SampleModulus))
-      val train = Tables.documents(s, d)
-        .filter(gate < ClfGateHalf).filter(!DocBatchPred)
-      val m = graft.operators.TextAnalysis.hashClfTrain(
-        train, hashHexChars = ClfHashHexChars)
-      m.counts.coalesce(1).write.mode("overwrite").parquet(s"$dir/counts")
-      val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p, true).close()
-    }
+  val ClfStore: Artifact = Artifact("clf")("graft_clf_artifact",
+      Seq("documents.parquet"), s"h${ClfHashHexChars}b7") { (s, d, dir) =>
+    import graft.operators.TextAnalysis.{SampleLcgA, SampleLcgC, SampleModulus}
+    val gate = pmod(col("doc_id") * lit(SampleLcgA) + lit(SampleLcgC),
+      lit(SampleModulus))
+    val train = Tables.documents(s, d)
+      .filter(gate < ClfGateHalf).filter(!DocBatchPred)
+    val m = graft.operators.TextAnalysis.hashClfTrain(
+      train, hashHexChars = ClfHashHexChars)
+    m.counts.coalesce(1).write.mode("overwrite").parquet(s"$dir/counts")
   }
 
   /** Probe-side loader of the frozen classifier model —
-    * resolveExisting, never resolve: a missing store at probe time
+    * `existing`, never `resolve`: a missing store at probe time
     * (above all inside a streaming trigger, st9) means the maintenance
     * path (`dedup-maintain` or the query's own pre-stream
-    * [[clfArtifact]]) didn't run for this generation, and it fails
+    * [[ClfStore]] resolve) didn't run for this generation, and it fails
     * loudly naming that fix instead of training a model inside a
     * micro-batch. Labels/totals are re-derived from the counts
     * ([[graft.operators.TextAnalysis.hashClfModelOf]]).
     */
   private[graft] def clfModelOfStore(s: org.apache.spark.sql.SparkSession,
       d: String): graft.operators.TextAnalysis.HashClfModel = {
-    val (kind, srcs, sub) = clfStoreKey(d)
-    val dir = graft.sources.ArtifactStore.resolveExisting(s, kind, srcs, sub = sub)
     graft.operators.TextAnalysis.hashClfModelOf(
-      s.read.parquet(s"$dir/counts"), ClfHashHexChars)
+      s.read.parquet(s"${ClfStore.existing(s, d)}/counts"), ClfHashHexChars)
   }
 
   /** Decontamination tier parameters — single-sourced across d23/d24
@@ -1490,15 +1417,6 @@ object TextQ {
   private[graft] val DecontamSketchItems = 200000L
   private[graft] val DecontamSketchBits = 2000000L
 
-  /** The (kind, sources, sub) key of the decontamination store — one
-    * definition shared by build and probe (the clfStoreKey rule). The
-    * sub carries gram width, eval slice, and sketch size: retuning any
-    * of them must invalidate the store (ADVICE r13 rule).
-    */
-  private def decontamStoreKey(d: String) = ("graft_decontam_artifact",
-    Seq(new java.io.File(d, "documents.parquet")),
-    s"n${DecontamN}s19e200kb2m")
-
   /** The persisted frozen eval-gram model of the decontamination tier:
     * the held-out suite's distinct gram fingerprints (`grams/`, the
     * exact-verify relation) plus the Bloom sketch aggregated over them
@@ -1507,28 +1425,25 @@ object TextQ {
     * suites change when benchmarks do, not per ingest batch — so the
     * d25/st10 probes never re-tokenize the eval side. The sketch is
     * aggregated from the PERSISTED grams (not the source) so the two
-    * files can never disagree. Same `_SUCCESS`-at-root gating and
-    * generation GC as every artifact family.
+    * files can never disagree. The sub carries gram width, eval slice,
+    * and sketch size: retuning any of them must invalidate the store
+    * (ADVICE r13 rule).
     */
-  private[graft] def decontamArtifact(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val (kind, srcs, sub) = decontamStoreKey(d)
-    graft.sources.ArtifactStore.resolve(s, kind, srcs, sub = sub) { dir =>
-      import graft.operators.TextAnalysis
-      TextAnalysis.evalGramHashes(
-          Tables.documents(s, d).filter(col("source") === DecontamEvalSrc),
-          n = DecontamN)
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/grams")
-      s.read.parquet(s"$dir/grams")
-        .agg(call_function("graft_bloom_agg", col("g"),
-          lit(DecontamSketchItems), lit(DecontamSketchBits)).as("bf"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/bloom")
-      val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p, true).close()
-    }
+  val DecontamStore: Artifact = Artifact("decontam")("graft_decontam_artifact",
+      Seq("documents.parquet"), s"n${DecontamN}s19e200kb2m") { (s, d, dir) =>
+    import graft.operators.TextAnalysis
+    TextAnalysis.evalGramHashes(
+        Tables.documents(s, d).filter(col("source") === DecontamEvalSrc),
+        n = DecontamN)
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/grams")
+    s.read.parquet(s"$dir/grams")
+      .agg(call_function("graft_bloom_agg", col("g"),
+        lit(DecontamSketchItems), lit(DecontamSketchBits)).as("bf"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/bloom")
   }
 
   /** Probe-side loader of the frozen decontamination model —
-    * resolveExisting, never resolve (the clfModelOfStore rule): a
+    * `existing`, never `resolve` (the clfModelOfStore rule): a
     * missing store at probe time fails loudly naming the maintenance
     * fix instead of tokenizing the eval suite inside a micro-batch.
     * The sketch row is a bounded driver collect (≤ sketchBits/8
@@ -1537,32 +1452,12 @@ object TextQ {
     */
   private[graft] def decontamModelOfStore(s: org.apache.spark.sql.SparkSession,
       d: String): graft.operators.TextAnalysis.DecontamModel = {
-    val (kind, srcs, sub) = decontamStoreKey(d)
-    val dir = graft.sources.ArtifactStore.resolveExisting(s, kind, srcs, sub = sub)
+    val dir = DecontamStore.existing(s, d)
     graft.operators.TextAnalysis.DecontamModel(
       s.read.parquet(s"$dir/bloom").collect()(0).getAs[Array[Byte]](0),
       s.read.parquet(s"$dir/grams"))
   }
 
-  /** Shared IVF+PQ oracle — ONE replay of coarse-assign / encode /
-    * LUT / ADC / rerank for both its consumers: s08 (inline encode)
-    * and s09 (the cell-partitioned stored index) — the two must be
-    * row-identical because the code table is a deterministic
-    * projection, exactly the d09/d15 artifact-equivalence argument.
-    */
-  /** Residual IVF+PQ oracle (s10): same coarse-assign prefix as
-    * [[IvfPqOracleSql]], then residuals (exact double subtraction of
-    * the assigned centroid), a shared residual codebook (the first 16
-    * vectors' residuals to their own cells), per-subspace argmin
-    * encode, RAW-query LUTs, and the inner-product ADC
-    * `dotq(q, c_cell) + Σ LUT[code]` — the per-(query, probed-cell)
-    * constant is exactly `cellcos.dq`. Refine + exact rerank as s08.
-    */
-  /** d10/d23 shared oracle — the exact n-gram-overlap flags. d23's
-    * Bloom prefilter is a pure semi-join reduction (false positives
-    * die in the exact verify join), so both engines' answers — and
-    * therefore both queries' oracle — are IDENTICAL by construction.
-    */
   /** d10/d23/d25/st10 shared oracle scaffolding — ONE copy of the
     * tokenization, gram derivation, eval side, and hit count.
     * `trainWhere` filters the scored documents (d10/d23: the whole
@@ -1597,6 +1492,11 @@ object TextQ {
         |FROM documents d LEFT JOIN hits h ON h.hdoc = d.doc_id
         |WHERE $trainWhere""".stripMargin
 
+  /** d10/d23 shared oracle — the exact n-gram-overlap flags. d23's
+    * Bloom prefilter is a pure semi-join reduction (false positives
+    * die in the exact verify join), so both engines' answers — and
+    * therefore both queries' oracle — are IDENTICAL by construction.
+    */
   private[graft] lazy val DecontaminationOracleSql: String =
     decontamOracleSql("source <> 'src19'")
 
@@ -1878,6 +1778,14 @@ object TextQ {
     }
   }
 
+  /** Residual IVF+PQ oracle (s10): same coarse-assign prefix as
+    * [[IvfPqOracleSql]], then residuals (exact double subtraction of
+    * the assigned centroid), a shared residual codebook (the first 16
+    * vectors' residuals to their own cells), per-subspace argmin
+    * encode, RAW-query LUTs, and the inner-product ADC
+    * `dotq(q, c_cell) + Σ LUT[code]` — the per-(query, probed-cell)
+    * constant is exactly `cellcos.dq`. Refine + exact rerank as s08.
+    */
   private[graft] lazy val IvfRPqOracleSql: String = ivfRPqOracleSql()
 
   /** The residual-PQ oracle, parameterized by TRAINING MODE like
@@ -1977,6 +1885,12 @@ object TextQ {
         |  FROM cos) t
         |WHERE rank <= 5""".stripMargin
 
+  /** Shared IVF+PQ oracle — ONE replay of coarse-assign / encode /
+    * LUT / ADC / rerank for both its consumers: s08 (inline encode)
+    * and s09 (the cell-partitioned stored index) — the two must be
+    * row-identical because the code table is a deterministic
+    * projection, exactly the d09/d15 artifact-equivalence argument.
+    */
   private[graft] lazy val IvfPqOracleSql: String = ivfPqOracleSql("")
 
   /** The raw-PQ oracle, parameterized by the MODEL TRAINING slice:
@@ -2065,19 +1979,15 @@ object TextQ {
         |  FROM cos) t
         |WHERE rank <= 5""".stripMargin
 
-  // The persisted stores above, as the artifacts catalog rows declare
-  // in `needs` (built untimed by Bench's pre-touch, by the maintain
-  // commands, or by the query's own first resolve).
-  val BandStore = Artifact("band")(bandArtifact)
-  val GramStore = Artifact("gram")(gramArtifact)
-  val ClusterStore = Artifact("cluster")(clusterArtifact)
-  val SimhashStore = Artifact("simhash")(simhashArtifact)
-  val AnnStore = Artifact("ann")(annArtifact)
-  val AnnCorpusStore = Artifact("ann_corpus")(annCorpusArtifact)
-  val SemStore = Artifact("sem")(semArtifact)
-  val DsirStore = Artifact("dsir")(dsirArtifact)
-  val ClfStore = Artifact("clf")(clfArtifact)
-  val DecontamStore = Artifact("decontam")(decontamArtifact)
+  /** The persisted stores above, as catalog rows declare them in
+    * `needs` (built untimed by Bench's pre-touch, by the maintain
+    * commands, or by the query's own first resolve). `Run`'s maintain
+    * commands resolve the ones that read one source table each, in
+    * this order (their report order).
+    */
+  val stores: Seq[Artifact] = Seq(BandStore, GramStore, ClusterStore,
+    SimhashStore, AnnStore, SemStore, AnnCorpusStore, DsirStore, ClfStore,
+    DecontamStore)
 
   val defs: Seq[Q] = Seq(
 
@@ -2615,7 +2525,7 @@ object TextQ {
 
     // INCREMENTAL dedup clustering: the src0 slice plays a fresh ingest
     // batch, everything else the existing corpus. The corpus's cluster
-    // labels are read back from the PERSISTED artifact (clusterArtifact
+    // labels are read back from the PERSISTED artifact (ClusterStore
     // — maintained once per corpus generation, like the band/gram
     // tables), the batch's candidate pairs come from an asymmetric band
     // probe (every pair touching >=1 batch doc — cost scales with the
@@ -2725,7 +2635,7 @@ object TextQ {
 
     // d09's cross-SESSION form: the corpus band table is read back from
     // an ON-DISK parquet artifact (written once per source-data
-    // generation — see bandArtifact) instead of the per-session
+    // generation — see BandStore) instead of the per-session
     // memoized DataFrame, proving the maintenance story the docs claim:
     // an ingest probes a persisted artifact it did not compute. Same
     // verify chain, same oracle — the artifact path must answer
@@ -2733,7 +2643,7 @@ object TextQ {
     // pins the corpus side to a FileScan of the artifact).
     Q("d15_band_artifact", Seq(BandStore, GramStore),
       (s, d) => {
-        val corpusBands = s.read.parquet(s"${bandArtifact(s, d)}/full")
+        val corpusBands = s.read.parquet(s"${BandStore.resolve(s, d)}/full")
           .filter(col("source") =!= "src0")
         // The ingest bands ITS slice only — the whole point of the
         // artifact is that batch cost never includes re-banding the
@@ -2850,7 +2760,7 @@ object TextQ {
     Q("d25_decontam_incremental", Seq(DecontamStore),
       (s, d) => {
         val docs = Tables.documents(s, d)
-        decontamArtifact(s, d)  // build/refresh at batch parallelism
+        DecontamStore.resolve(s, d)  // build/refresh at batch parallelism
         TextAnalysis.decontaminateUnder(decontamModelOfStore(s, d),
           docs.filter(DocBatchPred && col("source") =!= DecontamEvalSrc),
           n = DecontamN)
@@ -3015,7 +2925,7 @@ object TextQ {
     // (mod 10) play the arriving batch; the corpus's FROZEN centroid
     // model and per-vector (cluster, cos_centroid, dup_group) state
     // are read back from the persisted semantic artifact
-    // (semArtifact — built once per embedding generation); the batch
+    // (SemStore — built once per embedding generation); the batch
     // assigns under the frozen centroids, pairs only within its
     // touched clusters, and star-merges its verified edges into the
     // persisted group labels (Dedup.ccIncremental) — no corpus
@@ -3028,7 +2938,7 @@ object TextQ {
     Q("d21_semdedup_incremental", Seq(SemStore),
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val art = semArtifact(s, d)
+        val art = SemStore.resolve(s, d)
         val cents = s.read.parquet(s"$art/cents")
           .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
           .sortBy(_._1)
@@ -3100,7 +3010,7 @@ object TextQ {
     // d21): documents with doc_id ≡ 7 (mod 10) play the arriving
     // batch; BOTH bigram LMs (target = the corpus's src1 slice, raw =
     // the whole corpus) are FROZEN in a persisted artifact built once
-    // per documents generation (dsirArtifact), and the batch is scored
+    // per documents generation (DsirStore), and the batch is scored
     // under them — pure batch-side work: a bigram explode + two
     // broadcast (V+2)²-bounded lookups + the LCG gate, no corpus scan,
     // no LM retrain. This is the production DSIR deployment shape
@@ -3113,7 +3023,7 @@ object TextQ {
       (s, d) => {
         import TextAnalysis.{SampleLcgA, SampleLcgC, SampleModulus}
         val docs = Tables.documents(s, d)
-        val art = dsirArtifact(s, d)
+        val art = DsirStore.resolve(s, d)
         def frozen(sfx: String): TextAnalysis.BigramLm = {
           // vocab is ≤ DsirVocab rows, counts ≤ (V+2)² — the bounded
           // model-artifact collect/broadcast tier (VERDICT anti-pattern
@@ -3383,7 +3293,7 @@ object TextQ {
 
     // s08's STORED-INDEX form — the ANN analogue of d15: the PQ code
     // table is read back from the cell-partitioned on-disk artifact
-    // (annArtifact, maintained once per embedding-store generation),
+    // (AnnStore, maintained once per embedding-store generation),
     // and the probe's nprobe cells — collected driver-side from the
     // tiny query set — become PartitionFilters on the index FileScan,
     // so the probe reads nprobe/nlist of the index and none of the
@@ -3420,7 +3330,7 @@ object TextQ {
     // priced (s10 inline-encoded the corpus every run, exactly the
     // cost s09 removed for raw PQ): the RESIDUAL codes ride the same
     // cell-partitioned dual-tier artifact as s09's raw codes
-    // (annArtifact `rcodes`), the probe's nprobe cells prune the
+    // (AnnStore `rcodes`), the probe's nprobe cells prune the
     // FileScan (PlanShapeSpec pins the PartitionFilters), and the
     // probe pays LUTs + cell constants + ADC + rerank — never the
     // encode. Same oracle as s10: the residual code table is a
@@ -3453,7 +3363,7 @@ object TextQ {
 
     // ANN DELTA INGEST — the serving shape that makes the stored index
     // APPEND-ONLY between maintenance generations: the corpus index
-    // (annCorpusArtifact) was built before the batch existed, under a
+    // (AnnCorpusStore) was built before the batch existed, under a
     // model whose seeds never saw the batch; the arriving vectors are
     // encoded under that frozen model (a batch-sized map-side
     // projection — never a retrain, never an index rebuild) and their
@@ -3545,7 +3455,7 @@ object TextQ {
     Q("t18_classifier_incremental", Seq(ClfStore),
       (s, d) => {
         val docs = Tables.documents(s, d)
-        clfArtifact(s, d)  // build/refresh at batch parallelism
+        ClfStore.resolve(s, d)  // build/refresh at batch parallelism
         TextAnalysis.hashClassifierScoreUnder(clfModelOfStore(s, d),
           docs.filter(DocBatchPred))
       },
@@ -3635,7 +3545,7 @@ object TextQ {
     // d16's INCREMENTAL form — the production daily-ingest shape at
     // 64-bit width: the 'src0' slice plays a fresh batch whose
     // fingerprints probe the corpus's PERSISTED simhash artifact
-    // (simhashArtifact — computed once per data generation, like the
+    // (SimhashStore — computed once per data generation, like the
     // band store), asymmetric chunk pigeonhole, hamming <= 3 WITH
     // distance 0 included (an ingest must see exact fingerprint hits).
     // Cost scales with the batch's distinct fingerprints, never the

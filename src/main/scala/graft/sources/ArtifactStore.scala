@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Shared resolver for persisted DERIVED-DATA artifacts (band
@@ -7,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * base): deterministic functions of source data, computed once per
   * source-data GENERATION and FileScanned by every consumer thereafter
   * — the steady-state production posture (compute-once maintenance vs
-  * per-query recompute).
+  * per-query recompute). Each store is declared once as an [[Artifact]].
   *
   * Layout: `<tmp>/<kind>/<datasetHash>/<sub?>/<genTag>` where
   * `datasetHash` identifies WHICH dataset (md5 of the source paths —
@@ -26,6 +27,18 @@ import org.apache.spark.sql.SparkSession
   * until the source data happened to regenerate. Only one sub value
   * exists per kind at any code version (params are code constants),
   * so stale sibling subs are GC'd alongside stale generations.
+  *
+  * STAGED PUBLISH: a build never writes at the generation path. It
+  * writes into `.<genTag>.staging` beside it; the store then compacts
+  * the sub-path the artifact declares (`Compaction.compactInPlace`,
+  * whose swap is only safe where no reader can look) and records the
+  * result, writes `_SUCCESS` as the generation's last file, and
+  * renames the staging directory onto the generation path. A reader
+  * therefore sees either no generation or a complete, compacted one —
+  * Spark's own `_SUCCESS` (written by a parquet commit at the build's
+  * root, before any compaction) is never visible at the generation
+  * path. A build that dies leaves only its staging directory, which
+  * the next resolve's GC deletes as a stale sibling.
   *
   * STALE-GENERATION GC: when a new generation's artifact is built, the
   * SAME dataset's superseded generation directories are deleted — the
@@ -58,8 +71,7 @@ object ArtifactStore {
     * code reads), if one is left in the store from an older version.
     */
   def retire(spark: SparkSession, kind: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(
-      s"${System.getProperty("java.io.tmpdir")}/$kind")
+    val root = new Path(s"${System.getProperty("java.io.tmpdir")}/$kind")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(root)) fs.delete(root, true)
   }
@@ -95,7 +107,7 @@ object ArtifactStore {
   def resolveExisting(spark: SparkSession, kind: String,
                       sources: Seq[java.io.File], sub: String = ""): String = {
     val (_, _, dir) = locate(kind, sources, sub)
-    val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
+    val p = new Path(dir, "_SUCCESS")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) throw new IllegalStateException(
       s"artifact $kind is not built for this data generation ($dir): " +
@@ -113,14 +125,17 @@ object ArtifactStore {
     * test suites the moment a sub bump invalidates a shared store).
     * In-JVM exclusion is the honest scope here: cross-process writers
     * (the driver vs a local shell) are serialized by the `_SUCCESS`
-    * re-check under the lock in the common case, and a real deployment
-    * puts the store on storage with atomic rename/commit semantics.
+    * re-check under the lock in the common case, the publish keeps a
+    * generation another writer renamed into place first, and a real
+    * deployment puts the store on storage with atomic rename semantics.
     */
   private val buildLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Returns the artifact directory, building it via `build(dir)` if
-    * this generation has not been (fully) written yet.
+  /** Returns the artifact directory, building it via `build(staging)`
+    * if this generation has not been (fully) published yet, then
+    * compacting the `compacts` sub-path ("" = the generation root) and
+    * publishing (see the header's STAGED PUBLISH).
     *
     * The monitor is keyed by the SUB-LEVEL BASE path (stable across
     * data generations), not the per-generation dir: a long-lived
@@ -131,29 +146,33 @@ object ArtifactStore {
     * mid-build if they ran concurrently.
     */
   def resolve(spark: SparkSession, kind: String, sources: Seq[java.io.File],
-              sub: String = "")(build: String => Unit): String =
+              sub: String = "", compacts: Option[String] = None)(
+              build: String => Unit): String =
     buildLocks.computeIfAbsent(locate(kind, sources, sub)._2, _ => new Object)
-      .synchronized { resolveLocked(spark, kind, sources, sub)(build) }
+      .synchronized { resolveLocked(spark, kind, sources, sub, compacts)(build) }
 
   private def resolveLocked(spark: SparkSession, kind: String,
-                            sources: Seq[java.io.File], sub: String)(
+                            sources: Seq[java.io.File], sub: String,
+                            compacts: Option[String])(
                             build: String => Unit): String = {
     val (dsDir, base, dir) = locate(kind, sources, sub)
-    val basePath = new org.apache.hadoop.fs.Path(base)
+    val basePath = new Path(base)
+    val genPath = new Path(dir)
     val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
+    if (!fs.exists(new Path(genPath, "_SUCCESS"))) {
       // GC superseded generations of THIS dataset before building the
       // new one (never after: a concurrent reader of the old artifact
       // finishes its FileScan off already-open handles either way, but
-      // deleting first keeps peak disk at ~one generation)
+      // deleting first keeps peak disk at ~one generation). A dead
+      // build's staging directory is a stale sibling too.
       if (fs.exists(basePath))
         fs.listStatus(basePath).map(_.getPath)
-          .filter(_.getName != dir.substring(dir.lastIndexOf('/') + 1))
+          .filter(_.getName != genPath.getName)
           .foreach(p => fs.delete(p, true))
       // GC stale PARAM/LAYOUT subs (and pre-sub flat generations) of
       // this dataset: a params change retires the whole old sub tree
       if (sub.nonEmpty) {
-        val dsPath = new org.apache.hadoop.fs.Path(dsDir)
+        val dsPath = new Path(dsDir)
         if (fs.exists(dsPath))
           fs.listStatus(dsPath).map(_.getPath)
             .filter(_.getName != sub)
@@ -166,23 +185,61 @@ object ArtifactStore {
       // a length-12 legacy tag survives, which is merely bounded waste.
       // (base may include a sub level, so derive the kind root from
       // the tmp dir + kind, not from basePath's parent.)
-      val kindRoot = new org.apache.hadoop.fs.Path(
-        s"${System.getProperty("java.io.tmpdir")}/$kind")
+      val kindRoot = new Path(s"${System.getProperty("java.io.tmpdir")}/$kind")
       if (fs.exists(kindRoot))
         fs.listStatus(kindRoot).map(_.getPath)
           .filter(p => p.getName.length != 12)
           .foreach(p => fs.delete(p, true))
       builds.incrementAndGet()
-      build(dir)
+      val staging = new Path(basePath, s".${genPath.getName}.staging")
+      build(staging.toString)
+      compacts.foreach { rel =>
+        Compaction.recordCompaction(spark, staging.toString,
+          Compaction.compactInPlace(spark,
+            if (rel.isEmpty) staging.toString else s"$staging/$rel"))
+      }
+      // the generation's last file: overwrite the one a parquet commit
+      // at the staging root may have written before the compaction
+      fs.create(new Path(staging, "_SUCCESS"), true).close()
+      if (fs.exists(new Path(genPath, "_SUCCESS")))
+        fs.delete(staging, true)  // another writer published first: keep theirs
+      else {
+        fs.delete(genPath, true)  // a torn generation, if one is there
+        if (!fs.rename(staging, genPath)) throw new java.io.IOException(
+          s"could not publish $staging as $dir")
+      }
     }
     dir
   }
 }
 
-/** A persisted input a catalog query reads (see `Q.needs`): `resolve`
-  * returns its directory for a source dir, building it first if this
-  * data generation lacks it. Equal by name, so `distinct` over the
-  * declarations of many queries resolves each artifact once.
+/** One persisted store: its `name` (the key of the maintain commands'
+  * reports and of Bench's build messages), its `kind`, the source
+  * files it derives from (relative to the data dir), its params/layout
+  * tag `sub`, the sub-path it compacts ("" = the generation root), and
+  * its `build`, which writes the store into the directory it is given
+  * and touches neither `_SUCCESS` nor compaction ([[ArtifactStore]]
+  * publishes). Catalog queries declare the stores they read in
+  * `Q.needs`; equal by name, so `distinct` over many declarations
+  * resolves each store once.
   */
 final case class Artifact(name: String)(
-    val resolve: (SparkSession, String) => String)
+    val kind: String, val sources: Seq[String], val sub: String = "",
+    val compacts: Option[String] = None)(
+    build: (SparkSession, String, String) => Unit) {
+
+  private def files(d: String) = sources.map(new java.io.File(d, _))
+
+  /** The store's directory for data dir `d`, built first if this data
+    * generation lacks it.
+    */
+  def resolve(s: SparkSession, d: String): String =
+    ArtifactStore.resolve(s, kind, files(d), sub, compacts)(build(s, d, _))
+
+  /** The store's directory for data dir `d`, failing loudly if this
+    * generation was never built — for probes that must never own a
+    * build ([[ArtifactStore.resolveExisting]]).
+    */
+  def existing(s: SparkSession, d: String): String =
+    ArtifactStore.resolveExisting(s, kind, files(d), sub)
+}

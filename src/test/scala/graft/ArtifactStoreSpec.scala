@@ -10,6 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class ArtifactStoreSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
+  private def rm(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+  }
+
   private def withTempSource(body: java.io.File => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("artifact_spec_").toFile
     try body(dir)
@@ -65,7 +69,8 @@ class ArtifactStoreSpec extends AnyFunSuite {
     // probes answer differently from the batch consumers; and a
     // partition value that stops matching sigPfx(band_sig) would make
     // the probe's partition filter silently prune the WRONG directories
-    val art = graft.queries.TextQ.bandArtifact(spark, "/root/testdata/sf0.001")
+    val art = graft.queries.TextQ.BandStore.resolve(spark,
+      s"${sys.props("user.home")}/testdata/sf0.001")
     val cols = Seq("doc_id", "band", "band_sig", "source").map(col)
     val full = spark.read.parquet(s"$art/full").select(cols: _*)
     val pfx = spark.read.parquet(s"$art/pfx")
@@ -76,6 +81,59 @@ class ArtifactStoreSpec extends AnyFunSuite {
     assert(full.count() == p.count())
     assert(full.exceptAll(p).isEmpty && p.exceptAll(full).isEmpty,
       "scan and probe copies diverged")
+  }
+
+  test("a build that dies after a parquet commit publishes nothing; the next resolve rebuilds") {
+    withTempSource { tmp =>
+      val src = new java.io.File(tmp, "data.txt")
+      java.nio.file.Files.writeString(src.toPath, "gen1")
+      val kind = s"graft_test_artifact_${System.nanoTime()}"
+      var builds = 0
+      def resolve(fail: Boolean): String =
+        sources.ArtifactStore.resolve(spark, kind, Seq(src)) { dir =>
+          builds += 1
+          // a parquet write at the build's root: Spark's committer
+          // leaves its own _SUCCESS there
+          spark.range(4).write.parquet(dir)
+          if (fail) throw new IllegalStateException("build died")
+        }
+      intercept[IllegalStateException](resolve(fail = true))
+      intercept[IllegalStateException](
+        sources.ArtifactStore.resolveExisting(spark, kind, Seq(src)))
+      val dir = resolve(fail = false)
+      assert(builds == 2, "a dead build must not leave a published generation")
+      assert(spark.read.parquet(dir).count() == 4)
+      assert(new java.io.File(dir).getParentFile.list().toSeq ==
+        Seq(new java.io.File(dir).getName), "the dead build's staging must be GC'd")
+      rm(new java.io.File(System.getProperty("java.io.tmpdir"), kind))
+    }
+  }
+
+  test("a compacting store is invisible while it builds; _SUCCESS is its newest file") {
+    withTempSource { tmp =>
+      val src = new java.io.File(tmp, "data.txt")
+      java.nio.file.Files.writeString(src.toPath, "gen1")
+      val kind = s"graft_test_artifact_${System.nanoTime()}"
+      var listedDuringBuild = Seq.empty[String]
+      val dir = sources.ArtifactStore.resolve(spark, kind, Seq(src),
+          compacts = Some("")) { staging =>
+        // eight small files at the root: the compaction acts
+        spark.range(0, 1000, 1, 8).write.parquet(staging)
+        listedDuringBuild = new java.io.File(staging).getParentFile.list().toSeq
+      }
+      val gen = new java.io.File(dir)
+      assert(!listedDuringBuild.contains(gen.getName),
+        s"generation $dir was visible during its build: $listedDuringBuild")
+      assert(sources.Compaction.compactionReportOf(spark, dir) == "8->1")
+      val success = new java.io.File(gen, "_SUCCESS").lastModified()
+      val later = gen.listFiles().toSeq
+        .filter(f => f.getName.endsWith(".parquet") ||
+          f.getName == sources.Compaction.CompactionRecord)
+        .filter(_.lastModified() > success)
+      assert(later.isEmpty, s"files newer than _SUCCESS: ${later.mkString(", ")}")
+      assert(spark.read.parquet(dir).count() == 1000)
+      rm(new java.io.File(System.getProperty("java.io.tmpdir"), kind))
+    }
   }
 
   test("different datasets never GC each other") {

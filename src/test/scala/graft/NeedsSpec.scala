@@ -90,6 +90,16 @@ class NeedsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"artifact builds inside query runs: ${offenders.mkString(", ")}")
   }
 
+  test("the maintain commands resolve exactly the declared stores of their source table") {
+    for ((table, reportKeys) <- Seq(
+        "documents.parquet" -> Seq("band", "gram", "clusters", "simhash", "dsir", "clf", "decontam"),
+        "embeddings.parquet" -> Seq("index", "sem", "corpus"))) {
+      val maintained = Run.maintained(table)
+      assert(maintained.map(_.name) == reportKeys, table)
+      assert(maintained.toSet == declared.filter(_.sources == Seq(table)).toSet, table)
+    }
+  }
+
   test("a derived table's resolve deletes the legacy sub-keyed derived root") {
     val legacy = tmp.resolve("graft_derived_artifact")
     Files.createDirectories(legacy.resolve("0123456789ab").resolve("gt"))

@@ -36,7 +36,7 @@ class SemIncrementalPropertySpec extends AnyFunSuite {
   }
 
   /** The semantic-artifact state over a corpus slice under frozen
-    * centroids — the test-side replica of TextQ.semArtifact's build
+    * centroids — the test-side replica of TextQ.SemStore's build
     * (assign, within-cluster edges at Tau, CC, left-join labels).
     */
   private def stateOf(corpus: org.apache.spark.sql.DataFrame,

@@ -40,7 +40,7 @@ class StreamBoundarySpec extends AnyFunSuite {
       graft.queries.TextQ.prunedCorpusBands(spark, d, Seq("00"))
     }
     // after the maintenance build, the same probe serves
-    graft.queries.TextQ.bandArtifact(spark, d)
+    graft.queries.TextQ.BandStore.resolve(spark, d)
     assert(graft.queries.TextQ.prunedCorpusBands(spark, d, Seq("00", "01"))
       .columns.toSeq == Seq("band", "band_sig", "doc_id"))
   }
@@ -52,7 +52,7 @@ class StreamBoundarySpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("graft_sem_artifact"),
       s"missing-store probe must name the artifact: ${e.getMessage}")
-    graft.queries.TextQ.semArtifact(spark, d)
+    graft.queries.TextQ.SemStore.resolve(spark, d)
     assert(graft.queries.TextQ.prunedSemState(spark, d, Seq(0, 1))
       .columns.toSeq == Seq("cluster", "vec_id"))
   }
@@ -64,7 +64,7 @@ class StreamBoundarySpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("graft_ann_corpus_artifact"),
       s"missing-store probe must name the artifact: ${e.getMessage}")
-    val built = graft.queries.TextQ.annCorpusArtifact(spark, d)
+    val built = graft.queries.TextQ.AnnCorpusStore.resolve(spark, d)
     assert(graft.queries.TextQ.annCorpusIndexOfStore(spark, d) == built)
   }
 
@@ -94,7 +94,7 @@ class StreamBoundarySpec extends AnyFunSuite {
     // different store than the build wrote (path-derivation drift
     // would turn every probe into a false maintenance outage)
     val d = freshDir("sbound_same", "documents.parquet")
-    val built = graft.queries.TextQ.bandArtifact(spark, d)
+    val built = graft.queries.TextQ.BandStore.resolve(spark, d)
     // the tag comes from the single source, not a copied literal — a
     // layout-tag bump must not silently turn this into a stale-sub
     // probe (it did in round 18's rank-column bump)

@@ -145,7 +145,7 @@ class StreamingParitySpec extends AnyFunSuite {
     locally {
       import graft.operators.SimilaritySearch
       val emb = Tables.embeddings(spark, d)
-      val index = graft.queries.TextQ.annArtifact(spark, d)
+      val index = graft.queries.TextQ.AnnStore.resolve(spark, d)
       val model = SimilaritySearch.ivfPqModel(
         emb, graft.queries.TextQ.AnnNlist, graft.queries.TextQ.AnnM,
         graft.queries.TextQ.AnnCb)
