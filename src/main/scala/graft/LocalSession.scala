@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.sources.LocalFs
 
 /** One place for the local-session bootstrap shared by every runnable
   * main (Bench / Verify / Run / Anchor): master threads == shuffle
   * partitions (sized to the machine, not Spark's 200 default),
-  * TIMESTAMP(NANOS) parquet reads, UTC, extensions registered. Keeping
+  * TIMESTAMP(NANOS) parquet reads, UTC, extensions registered, `file:`
+  * through graft's process-free local filesystem. Keeping
   * it single-sourced means a new required flag lands everywhere at once.
   */
 object LocalSession {
@@ -23,6 +25,23 @@ object LocalSession {
     */
   val CodegenCacheEntries: Int = 1000
 
+  /** `file:` is graft's [[graft.sources.LocalFs]] for both Hadoop APIs:
+    * `fs.file.impl` (`FileSystem`: CSV/parquet writes, the artifact
+    * stores) and `fs.AbstractFileSystem.file.impl` (`FileContext`:
+    * streaming offset, commit and source logs, the state store). Without
+    * libhadoop, Hadoop's stock local filesystem starts a `chmod` process
+    * for every file and directory it creates and a `readlink` process for
+    * every `FileContext` rename; counted with `PATH` wrappers on a 4-core
+    * box, that was 27 processes per `mot_short` request (9 per CSV
+    * write), about 95 per `mot_stream` trigger, in series on the driver
+    * for the logs, and 4368 in a full sf0.01 `graft.Bench`. Through
+    * `LocalFs` all of them are 0, with the same permission bits and
+    * `.crc` files.
+    */
+  val LocalFileSystem: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFs.Checksummed].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Context].getName)
+
   def build(cpus: String, logLevel: String = "WARN"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -31,6 +50,7 @@ object LocalSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config(LocalFileSystem)
       // Let AQE re-optimize (coalesce tiny post-shuffle partitions)
       // INSIDE cached-plan fragments and below them. The default
       // (false) freezes a cached plan's output partitioning so

@@ -147,7 +147,7 @@ object Run {
         val bands = graft.queries.TextQ.bandSigs(spark, dir)
         val guardObs = org.apache.spark.sql.Observation("graft_dedup_maintain_guard")
         graft.operators.Dedup.bandsKeptByRank(bands, "bucket_rank", cap,
-          Some(guardObs), extraMetrics = Seq(
+          Some(guardObs), guardObs.name, extraMetrics = Seq(
             coalesce(max(col("bucket_rank")), lit(0)).as("max_bucket"),
             coalesce(sum(when(col("bucket_rank") === cap + 1, 1L)
               .otherwise(0L)), lit(0L)).as("overflow_buckets")))

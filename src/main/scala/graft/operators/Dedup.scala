@@ -251,6 +251,11 @@ object Dedup {
     * table (st6's prefix-pruned static side keeps exactly the full
     * table's rows for its buckets).
     *
+    * `metricName` names the metric when no `observation` collects it
+    * (an `Observation` carries its own name); there is no default, so
+    * each caller's guard reads under its own name (d05
+    * `graft_lsh_bucket_guard`, d09/d15/st6 `graft_lsh_ingest_guard`).
+    *
     * `extraMetrics` ride the same observe pass — the maintenance CLI
     * folds its mega-bucket stats (max rank, overflowing-bucket count)
     * into the guard's one scan instead of re-reading the band table
@@ -259,7 +264,7 @@ object Dedup {
   def bandsKeptByRank(banded: DataFrame, rankCol: String,
                       maxDocsPerBucket: Int,
                       observation: Option[org.apache.spark.sql.Observation] = None,
-                      metricName: String = "graft_lsh_rank_guard",
+                      metricName: String,
                       extraMetrics: Seq[Column] = Nil): DataFrame = {
     require(maxDocsPerBucket >= 1,
       s"maxDocsPerBucket must be >= 1, got $maxDocsPerBucket")
@@ -891,8 +896,8 @@ object Dedup {
     * needed by the returned DataFrame — remove the directory when done
     * with the result. Note `setCheckpointDir` is context-global and
     * stays set after the call.
-    */
-  /** `localSolveThreshold`: once the CONTRACTED edge fringe shrinks to
+    *
+    * `localSolveThreshold`: once the CONTRACTED edge fringe shrinks to
     * at most this many edges (and node ids are integral), the
     * remaining components are solved in one pass on the driver
     * (union-find over the collected fringe — a bounded model-artifact

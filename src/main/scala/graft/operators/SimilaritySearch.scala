@@ -473,8 +473,8 @@ object SimilaritySearch {
     * work — the plan shape (map-side encode, per-query LUT, integer
     * lookups, bounded rerank) is identical, so swapping it in is an
     * encode/LUT change, not an operator redesign.
-    */
-  /** The IVF+PQ "trained" model: coarse centroids + per-subspace
+    *
+    * The IVF+PQ "trained" model: coarse centroids + per-subspace
     * codebooks + their integer norms — a tiny driver-side artifact
     * (nlist + codebookSize vectors), deterministic-sampled like
     * [[ivfTopK]]'s centroids so any engine can rebuild it exactly.
@@ -1029,10 +1029,6 @@ object SimilaritySearch {
       k, nprobe, refine, idCol, vecCol)
   }
 
-  /** ANN via LSH buckets + exact rerank. Multi-probe is the `numTables`
-    * axis (vary the plane seed offset) — see `lshTables`; one table with
-    * `numPlanes` bits already demonstrates the scale path.
-    */
   /** Lloyd k-means over the embedding column with fully deterministic
     * arithmetic — the clustering backbone for corpus-diversity analysis
     * and SemDeDup-style semantic selection.
@@ -1140,6 +1136,10 @@ object SimilaritySearch {
       .select(col(idCol), col("__b.cid").as("cluster"),
         col("__b.ccos").as("cos_centroid"))
 
+  /** ANN via LSH buckets + exact rerank. Multi-probe is the `numTables`
+    * axis (vary the plane seed offset) — see `lshTables`; one table with
+    * `numPlanes` bits already demonstrates the scale path.
+    */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int, numPlanes: Int,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val q = lshSignature(queries, numPlanes, vecCol = vecCol)

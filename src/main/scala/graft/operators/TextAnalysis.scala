@@ -335,6 +335,21 @@ object TextAnalysis {
       .withColumn("pos_in_shard", expr(s"(rnk - 1) div $nShards"))
   }
 
+  /** The DISTRIBUTED half of the allocation: per-source token capacity
+    * + doc count + weight — the only corpus-side work (one groupBy
+    * with map-side partial aggregation; PlanShapeSpec pins that
+    * shape). Exposed so the plan can be asserted independently of the
+    * driver-side solver below.
+    */
+  private[graft] def perSourceCaps(docs: DataFrame, sourceCol: String,
+                                   weightExpr: Column,
+                                   textCol: String = "text"): DataFrame =
+    docs
+      .groupBy(col(sourceCol))
+      .agg(sum(size(Text.tokens(col(textCol)))).cast("long").as("cap_tokens"),
+        count(lit(1)).as("n_docs"))
+      .withColumn("weight", weightExpr.cast("long"))
+
   /** Domain-mixing token-budget allocation (water-filling): given a
     * target mixture weight per source and a global token budget,
     * allocate tokens so each source gets budget·w/W — except sources
@@ -371,21 +386,6 @@ object TextAnalysis {
     * rational `budgetNum/budgetDen` of the corpus's total tokens,
     * kept exact as `(total · num) div den`.
     */
-  /** The DISTRIBUTED half of the allocation: per-source token capacity
-    * + doc count + weight — the only corpus-side work (one groupBy
-    * with map-side partial aggregation; PlanShapeSpec pins that
-    * shape). Exposed so the plan can be asserted independently of the
-    * driver-side solver below.
-    */
-  private[graft] def perSourceCaps(docs: DataFrame, sourceCol: String,
-                                   weightExpr: Column,
-                                   textCol: String = "text"): DataFrame =
-    docs
-      .groupBy(col(sourceCol))
-      .agg(sum(size(Text.tokens(col(textCol)))).cast("long").as("cap_tokens"),
-        count(lit(1)).as("n_docs"))
-      .withColumn("weight", weightExpr.cast("long"))
-
   def domainMixAllocation(docs: DataFrame, sourceCol: String,
                           weightExpr: Column, budgetNum: Long, budgetDen: Long,
                           textCol: String = "text"): DataFrame = {

@@ -60,22 +60,25 @@ final case class SeqTrackOut(
     x: Double, y: Double, w: Double, h: Double, conf: Double, detId: Int
 )
 
-/** Serializable track-state snapshot for the streaming host's
-  * `GroupState` (bounded: no history list — SURVEY §7.3 item 6).
+/** The streaming host's per-sequence `GroupState`: the last frame
+  * stepped, the next track id and the live tracks (bounded: no history
+  * list — SURVEY §7.3 item 6), the tracks as one binary value that
+  * `Tracker.snapshotCore` writes and `Tracker.restoreCore` reads. Not an
+  * array of structs: that decodes through `MapObjects`, whose lambda
+  * variables are new in every micro-batch, so each trigger compiled the
+  * state's projection again instead of hitting the codegen cache. A
+  * checkpoint written with the array-of-struct state fails Spark's
+  * state schema check on restart.
   */
-final case class TrackSnapshot(
-    trackId: Int,
-    kfX: Array[Double], kfP: Array[Double],
-    predX: Double, predY: Double, predW: Double, predH: Double,
-    lastX: Double, lastY: Double, lastW: Double, lastH: Double,
-    lastConf: Double, lastDetId: Int,
-    emb: Array[Float],
-    hits: Int, age: Int, timeSinceUpdate: Int)
-
 final case class SeqState(
     lastFrame: String,
     nextTrackId: Int,
-    tracks: Array[TrackSnapshot])
+    tracks: Array[Byte])
+
+object SeqState {
+  /** A sequence's state before its first frame. */
+  val Initial: SeqState = SeqState("", 1, Array.emptyByteArray)
+}
 
 object Tracker {
 
@@ -194,26 +197,61 @@ object Tracker {
     private val tracks = mutable.ArrayBuffer.empty[Trk]
     private var nextTrackId = 1
 
+    // SeqState.tracks: a track count, then per track its id, Kalman x
+    // and P (length -1 when the track has no filter), predicted and
+    // last box, last conf and det id, embedding (length -1 when null),
+    // hits, age and timeSinceUpdate; doubles as raw bits, so a restore
+    // is exact
     private[operators] def restore(s: SeqState): Unit = {
       tracks.clear()
-      s.tracks.foreach { t =>
-        tracks += new Trk(t.trackId,
-          if (t.kfX != null) KalmanState(t.kfX, t.kfP) else null,
-          Bbox(t.predX, t.predY, t.predW, t.predH),
-          Bbox(t.lastX, t.lastY, t.lastW, t.lastH),
-          t.lastConf, t.lastDetId, t.emb, t.hits, t.age, t.timeSinceUpdate)
+      if (s.tracks.nonEmpty) {
+        val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(s.tracks))
+        def doubles(): Array[Double] = in.readInt() match {
+          case -1 => null
+          case n => Array.fill(n)(in.readDouble())
+        }
+        def box(): Bbox = Bbox(in.readDouble(), in.readDouble(), in.readDouble(), in.readDouble())
+        (0 until in.readInt()).foreach { _ =>
+          val id = in.readInt()
+          val kfX = doubles()
+          val kfP = doubles()
+          val predicted = box()
+          val last = box()
+          val conf = in.readDouble()
+          val detId = in.readInt()
+          val emb = in.readInt() match {
+            case -1 => null
+            case n => Array.fill(n)(in.readFloat())
+          }
+          tracks += new Trk(id, if (kfX != null) KalmanState(kfX, kfP) else null,
+            predicted, last, conf, detId, emb, in.readInt(), in.readInt(), in.readInt())
+        }
       }
       nextTrackId = s.nextTrackId
     }
 
-    private[operators] def snapshot(lastFrame: String): SeqState =
-      SeqState(lastFrame, nextTrackId, tracks.map { t =>
-        TrackSnapshot(t.trackId,
-          if (t.kf != null) t.kf.x else null, if (t.kf != null) t.kf.p else null,
-          t.predicted.x, t.predicted.y, t.predicted.w, t.predicted.h,
-          t.lastBbox.x, t.lastBbox.y, t.lastBbox.w, t.lastBbox.h,
-          t.lastConf, t.lastDetId, t.emb, t.hits, t.age, t.timeSinceUpdate)
-      }.toArray)
+    private[operators] def snapshot(lastFrame: String): SeqState = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.DataOutputStream(bytes)
+      def doubles(a: Array[Double]): Unit =
+        if (a == null) out.writeInt(-1) else { out.writeInt(a.length); a.foreach(out.writeDouble) }
+      def box(b: Bbox): Unit = Seq(b.x, b.y, b.w, b.h).foreach(out.writeDouble)
+      out.writeInt(tracks.size)
+      tracks.foreach { t =>
+        out.writeInt(t.trackId)
+        doubles(if (t.kf != null) t.kf.x else null)
+        doubles(if (t.kf != null) t.kf.p else null)
+        box(t.predicted)
+        box(t.lastBbox)
+        out.writeDouble(t.lastConf)
+        out.writeInt(t.lastDetId)
+        if (t.emb == null) out.writeInt(-1)
+        else { out.writeInt(t.emb.length); t.emb.foreach(out.writeFloat(_)) }
+        Seq(t.hits, t.age, t.timeSinceUpdate).foreach(out.writeInt)
+      }
+      out.flush()
+      SeqState(lastFrame, nextTrackId, bytes.toByteArray)
+    }
 
     /** One frame step (reference `_track_frame`, src/tracking.py:764-854):
       * predict → index → match → update → delete → create → emit.

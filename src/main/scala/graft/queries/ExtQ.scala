@@ -314,8 +314,8 @@ object ExtQ {
     * still duplicate, same as any trigger retry; values are unaffected
     * either way — per-query rows are identical on replay, and an
     * exactly-once consumer dedups on (query_id, corpus_id)).
-    */
-  /** One st8 trigger: chunk the persisted batch, probe each chunk into
+    *
+    * One st8 trigger: chunk the persisted batch, probe each chunk into
     * the per-trigger staging dir, publish staged part files into the
     * sink with one rename pass, drop staging. Exposed private[graft]
     * so StreamingParitySpec can replay a trigger AFTER an injected

@@ -59,8 +59,8 @@ object KernelQ {
     * i iff no already-KEPT box suppresses it (`list_intersect` of the
     * kept list with box i's precomputed suppressor list). MATERIALIZED
     * stops DuckDB re-inlining the group table into every iteration.
-    */
-  /** CTE chain replaying greedy NMS over `input` (columns seq, frame,
+    *
+    * CTE chain replaying greedy NMS over `input` (columns seq, frame,
     * id, x1..y2, score), every relation suffixed with `sfx` so chains
     * can stack stages in one WITH RECURSIVE (f04 runs NMS then nested
     * removal, exactly the reference's merge). Ends with
@@ -124,8 +124,8 @@ object KernelQ {
     * `rmv`-flagged kept entries with ordinal < first blocking kept
     * ordinal, and appends i only when no blocker was hit
     * (reference src/detection.py:1120-1198 exactly).
-    */
-  /** CTE chain replaying nested-detection removal over `input` —
+    *
+    * CTE chain replaying nested-detection removal over `input` —
     * suffixed like `nmsCtes`; ends with `nkept$sfx(seq, frame, id,
     * score)`.
     */
@@ -243,14 +243,6 @@ object KernelQ {
     |SELECT k.seq AS img, k.id, k.score, t.x1, t.y1, t.x2, t.y2
     |FROM nkept2 k JOIN tdets t ON t.seq = k.seq AND t.id = k.id""".stripMargin
 
-  /** The similarity cascade of `Tracker.similarity` under
-    * `useKalman=false` (predicted == lastBbox, so the Kalman and
-    * Euclidean distance terms coincide), as SQL text over two struct
-    * refs carrying (x, y, w, h, e1, e2). Gates return NULL (the
-    * kernel's NaN); every arithmetic step mirrors the Scala
-    * double-precision order of operations exactly, so threshold
-    * comparisons and argmax decisions are bit-identical.
-    */
   /** Render a config constant so DuckDB computes with it in DOUBLE.
     * Bare decimal literals parse as DECIMAL and stay exact through
     * arithmetic (e.g. 0.2+0.2+0.5+0.1 = 1.0 exactly), while the kernel
@@ -273,7 +265,15 @@ object KernelQ {
     s"sqrt((($t.x + $t.w / 2) - ($d.x + $d.w / 2)) * (($t.x + $t.w / 2) - ($d.x + $d.w / 2)) " +
       s"+ (($t.y + $t.h / 2) - ($d.y + $d.h / 2)) * (($t.y + $t.h / 2) - ($d.y + $d.h / 2)))"
 
-  /** Gated no-Kalman similarity. With `radiusGated` the spatial-index
+  /** The similarity cascade of `Tracker.similarity` under
+    * `useKalman=false` (predicted == lastBbox, so the Kalman and
+    * Euclidean distance terms coincide), as SQL text over two struct
+    * refs carrying (x, y, w, h, e1, e2). Gates return NULL (the
+    * kernel's NaN); every arithmetic step mirrors the Scala
+    * double-precision order of operations exactly, so threshold
+    * comparisons and argmax decisions are bit-identical.
+    *
+    * Gated no-Kalman similarity. With `radiusGated` the spatial-index
     * distance gate rides as the FIRST NULL branch of the SAME flat CASE
     * chain the ungated replay uses (k09's 14/14-stable shape) — NOT a
     * nested CASE around it, which re-trips the DuckDB 1.0
@@ -775,8 +775,8 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
     * rows from lineitem). SHARED TEXT: Spark runs it via spark.sql
     * (nested subqueries — see Derived for why not WITH) and the oracle
     * embeds the same text as gt/tracks CTEs.
-    */
-  /** The shared deduped anchor base (one lineitem scan + one dedup
+    *
+    * The shared deduped anchor base (one lineitem scan + one dedup
     * window), keeping the jitter key columns so BOTH gt and tracks
     * derive from it — gt is a plain projection, tracks adds the jitter
     * offsets and drops every 9th row. Spark caches ONE materialization

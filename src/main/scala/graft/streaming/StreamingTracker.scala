@@ -11,7 +11,7 @@ import graft.operators.{SeqState, SeqTrackOut, Tracker, TrackerConfig, TrackerIn
   * boundary, src/tracking.py:687-690), events = detection rows, event
   * time = frame order. Each micro-batch's rows are grouped by frame and
   * stepped in frame order; state carries the full track set between
-  * batches as plain serializable rows.
+  * batches as one binary value per sequence (`SeqState`).
   *
   * Late-data policy (T7, documented extension — the reference assumes
   * strictly ordered input): frames older than the newest frame already
@@ -33,7 +33,7 @@ object StreamingTracker {
       .flatMapGroupsWithState[SeqState, SeqTrackOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (seq: String, rows: Iterator[TrackerIn], state: GroupState[SeqState]) =>
-          val prior = state.getOption.getOrElse(SeqState("", 1, Array.empty))
+          val prior = state.getOption.getOrElse(SeqState.Initial)
           val core = Tracker.restoreCore(cfg, prior)
           val byFrame = rows.toArray.groupBy(_.frame).toArray.sortBy(_._1)
           val out = byFrame.iterator
@@ -90,7 +90,7 @@ object StreamingTracker {
             Iterator.empty
           } else {
             val wmMs = state.getCurrentWatermarkMs()
-            val prior = state.getOption.getOrElse(SeqState("", 1, Array.empty))
+            val prior = state.getOption.getOrElse(SeqState.Initial)
             val core = Tracker.restoreCore(cfg, prior)
             val kept = rows.filter(_.et.getTime >= wmMs).toArray // late drop
             val byFrame = kept.groupBy(_.frame).toArray.sortBy(_._1)

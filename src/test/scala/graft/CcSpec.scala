@@ -122,7 +122,7 @@ class CcSpec extends AnyFunSuite {
   test("reliable-checkpoint path (checkpointDir) matches the local path") {
     // the executor-loss-tolerant variant a real cluster should use:
     // same fixpoint, and checkpoint files actually land in the dir
-    val dir = java.nio.file.Files.createTempDirectory("cc_ckpt_").toString
+    val dir = SparkTestBase.tempDir("cc_ckpt_").toString
     val edges = (0L until 25L).map(i => (i, i + 1)) ++
       Seq((100L, 101L), (101L, 102L), (50L, 60L))
     val df = edges.toDF("doc_a", "doc_b")

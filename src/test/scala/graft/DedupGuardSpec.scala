@@ -30,7 +30,7 @@ class DedupGuardSpec extends AnyFunSuite {
   test("pathological bucket: pairs capped, truncation metric nonzero and exact") {
     val obs = Observation("d05_guard_patho")
     val got = pairs(Dedup.minhashCandidatesFromBands(
-      Dedup.bandsKeptByRank(rank(banded), "bucket_rank", 10, Some(obs))))
+      Dedup.bandsKeptByRank(rank(banded), "bucket_rank", 10, Some(obs), obs.name)))
     // the big bucket contributes C(10,2)=45 pairs from its 10 smallest
     // doc_ids; the healthy buckets contribute C(3,2)+C(2,2)=3+1 intact
     val bigKept = (0L until 10L)
@@ -47,7 +47,7 @@ class DedupGuardSpec extends AnyFunSuite {
   test("buckets under the cap: capped form is bit-identical to the unguarded form") {
     val obs = Observation("d05_guard_clean")
     val capped = pairs(Dedup.minhashCandidatesFromBands(
-      Dedup.bandsKeptByRank(rank(banded), "bucket_rank", 4096, Some(obs))))
+      Dedup.bandsKeptByRank(rank(banded), "bucket_rank", 4096, Some(obs), obs.name)))
     val uncapped = pairs(Dedup.minhashCandidatesFromBands(banded))
     assert(capped == uncapped)
     assert(obs.get("truncated_doc_slots") == 0L,
@@ -71,7 +71,7 @@ class DedupGuardSpec extends AnyFunSuite {
     val obs = Observation("ingest_guard_patho")
     val got = pairs(Dedup.minhashCandidatesAgainstFromBands(bandedBatch,
       Dedup.bandsKeptByRank(rank(banded, "corpus_rank"), "corpus_rank", 10,
-        Some(obs))))
+        Some(obs), obs.name)))
     // each colliding batch doc sees the bucket's first 10 corpus docs
     // (doc_id order), never the full 100; the healthy bucket is intact
     val expected =
@@ -88,7 +88,7 @@ class DedupGuardSpec extends AnyFunSuite {
     val obs = Observation("ingest_guard_clean")
     val capped = pairs(Dedup.minhashCandidatesAgainstFromBands(bandedBatch,
       Dedup.bandsKeptByRank(rank(banded, "corpus_rank"), "corpus_rank", 4096,
-        Some(obs))))
+        Some(obs), obs.name)))
     val uncapped = pairs(Dedup.minhashCandidatesAgainstFromBands(bandedBatch, banded))
     assert(capped == uncapped)
     assert(obs.get("truncated_doc_slots") == 0L)
@@ -237,9 +237,9 @@ class DedupGuardSpec extends AnyFunSuite {
     // table — the property that lets st6 cap its prefix-pruned
     // per-trigger static side and still match the full-table oracle
     val pruned = banded.filter($"band_sig" === "sigBIG")
-    val a = Dedup.bandsKeptByRank(rank(pruned), "bucket_rank", 10)
+    val a = Dedup.bandsKeptByRank(rank(pruned), "bucket_rank", 10, metricName = "g_pruned")
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
-    val b = Dedup.bandsKeptByRank(rank(banded), "bucket_rank", 10)
+    val b = Dedup.bandsKeptByRank(rank(banded), "bucket_rank", 10, metricName = "g_full")
       .filter($"band_sig" === "sigBIG")
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
     assert(a == b && a.size == 10)

@@ -93,7 +93,7 @@ class HashClassifierSpec extends AnyFunSuite {
     val model = TextAnalysis.hashClfTrain(docs.filter(g < half))
     val direct = TextAnalysis.hashClassifierScoreUnder(model, docs.filter(g >= half))
       .collect().map(_.toString).sorted.toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_clf_rt").toString
+    val dir = SparkTestBase.tempDir("graft_clf_rt").toString
     model.counts.write.mode("overwrite").parquet(s"$dir/counts")
     val rebuilt = TextAnalysis.hashClfModelOf(
       spark.read.parquet(s"$dir/counts"), model.hashHexChars)

@@ -13,7 +13,7 @@ class IoSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
   test("S2 lenient read drops malformed lines, keeps first 6 cols") {
-    val dir = Files.createTempDirectory("mot_lenient").toFile
+    val dir = SparkTestBase.tempDir("mot_lenient").toFile
     val f = new java.io.File(dir, "det.txt")
     Files.writeString(f.toPath,
       """1,1,10.0,20.0,30.0,40.0,0.9,1,-1,-1
@@ -32,7 +32,7 @@ class IoSpec extends AnyFunSuite {
     // The reference parses only the first six fields: short MOT gt
     // layouts (6–9 cols) and unparseable trailing columns all survive;
     // only a failure within the first six fields drops the line.
-    val dir = Files.createTempDirectory("mot_lenient_short").toFile
+    val dir = SparkTestBase.tempDir("mot_lenient_short").toFile
     val f = new java.io.File(dir, "gt.txt")
     Files.writeString(f.toPath,
       """1,1,10,20,30,40
@@ -53,7 +53,7 @@ class IoSpec extends AnyFunSuite {
     // parse_annotations never rejects on the frame field: int() failure
     // falls back to the original string (reference
     // src/utils/helpers.py:368-373), so "" and "cam_a" both survive.
-    val dir = Files.createTempDirectory("mot_lenient_frame").toFile
+    val dir = SparkTestBase.tempDir("mot_lenient_frame").toFile
     val f = new java.io.File(dir, "gt.txt")
     Files.writeString(f.toPath,
       """,1,10,20,30,40
@@ -65,7 +65,7 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("S1 strict read zero-pads numeric frames") {
-    val dir = Files.createTempDirectory("mot_strict").toFile
+    val dir = SparkTestBase.tempDir("mot_strict").toFile
     val f = new java.io.File(dir, "det.txt")
     Files.writeString(f.toPath,
       "7,2,1.0,2.0,3.0,4.0,0.5,1,-1,-1\nframe_x,3,1.0,2.0,3.0,4.0,0.5,1,-1,-1\n")
@@ -76,7 +76,7 @@ class IoSpec extends AnyFunSuite {
 
   test("S4 write: one file sorted by (id, frame) from a multi-partition input") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("mot_write").toString
+    val dir = SparkTestBase.tempDir("mot_write").toString
     val rows = for (f <- 1 to 12; id <- Seq(3, 1, 2)) yield (f"$f%06d", id, f * 1.0, id * 1.0, 5.0, 5.0, 0.9)
     MotCsv.write(scala.util.Random.shuffle(rows).toDF("frame", "id", "x", "y", "w", "h", "conf")
       .repartition(4), dir)
@@ -88,7 +88,7 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("S3 candidates: frame -> sorted id list") {
-    val dir = Files.createTempDirectory("mot_cand").toFile
+    val dir = SparkTestBase.tempDir("mot_cand").toFile
     val f = new java.io.File(dir, "det.txt")
     Files.writeString(f.toPath,
       "1,5,1,1,1,1,0.5,1,-1,-1\n1,2,1,1,1,1,0.5,1,-1,-1\n2,9,1,1,1,1,0.5,1,-1,-1\n")
@@ -99,7 +99,7 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("S10 media directory scan sniffs modality from extension") {
-    val dir = Files.createTempDirectory("media").toFile
+    val dir = SparkTestBase.tempDir("media").toFile
     Files.write(new java.io.File(dir, "a.jpg").toPath, Array[Byte](1, 2, 3))
     Files.write(new java.io.File(dir, "b.wav").toPath, Array[Byte](4, 5))
     Files.write(new java.io.File(dir, "c.mp4").toPath, Array[Byte](6))
@@ -109,7 +109,7 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("multimodal featurize: batched stub decode is deterministic") {
-    val dir = Files.createTempDirectory("media2").toFile
+    val dir = SparkTestBase.tempDir("media2").toFile
     Files.write(new java.io.File(dir, "a.jpg").toPath, Array.tabulate(100)(_.toByte))
     val media = Multimodal.readMediaDir(spark, dir.getAbsolutePath)
     val f1 = Multimodal.featurize(media, dim = 8).collect().head

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -16,7 +15,7 @@ class PartitionPruningSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("partitioned write + filtered read: partition filters prune directories") {
-    val dir = Files.createTempDirectory("pp").toString
+    val dir = SparkTestBase.tempDir("pp").toString
     (0 until 1000).map(i => (i.toLong, s"t${i % 5}", i * 1.5))
       .toDF("id", "event_type", "value")
       .write.partitionBy("event_type").mode("overwrite").parquet(dir)
@@ -43,7 +42,7 @@ class PartitionPruningSpec extends AnyFunSuite {
   }
 
   test("dynamic partition count: one directory per key, stats see the split") {
-    val dir = Files.createTempDirectory("pp2").toString
+    val dir = SparkTestBase.tempDir("pp2").toString
     (0 until 100).map(i => (i, s"p${i % 4}")).toDF("v", "k")
       .write.partitionBy("k").mode("overwrite").parquet(dir)
     val parts = new java.io.File(dir).listFiles().count(_.getName.startsWith("k="))

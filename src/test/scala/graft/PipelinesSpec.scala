@@ -13,7 +13,7 @@ class PipelinesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
   private def tmp(name: String) =
-    Files.createTempDirectory(name).toString
+    SparkTestBase.tempDir(name).toString
 
   private def trackedFixture(name: String): (String, String) =
     PipelinesSpec.trackedFixture(spark, name)
@@ -645,7 +645,7 @@ object PipelinesSpec {
     */
   def trackedFixture(spark: SparkSession, name: String): (String, String) = {
     import spark.implicits._
-    val dir = Files.createTempDirectory(name).toString
+    val dir = SparkTestBase.tempDir(name).toString
     // GT: 2 objects over 8 frames; detections = GT jittered; per-frame ids
     val gtRows = for (f <- 1 to 8; o <- 1 to 2)
       yield (f"$f%06d", o, 10.0 + o * 200 + f * 4, 20.0 + o * 100, 40.0, 36.0, 1.0, 1, -1, -1)

@@ -332,8 +332,7 @@ class PlanShapeSpec extends AnyFunSuite {
     }
     val emb = rows.toDF("vec_id", "embedding")
     val model = SimilaritySearch.ivfPqModel(emb, nlist = 4, m = 4, codebookSize = 8)
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_hotcell_store").toString
+    val store = SparkTestBase.tempDir("graft_hotcell_store").toString
     SimilaritySearch.ivfPqEncode(emb, model)
       .write.mode("overwrite").partitionBy("cell").parquet(store)
     // the fixture must actually be skewed, or the pin proves nothing

@@ -122,7 +122,7 @@ class RenderSpec extends AnyFunSuite {
 
   test("exportImages: one zero-padded file per frame, manifest returned") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("render_export").toString
+    val dir = SparkTestBase.tempDir("render_export").toString
     val frames = Seq(("s0", 1, basePng(16, 16)), ("s1", 12, basePng(16, 16)))
       .toDF("seq", "frame", "content")
     val manifest = Render.exportImages(frames, dir).collect()
@@ -135,7 +135,7 @@ class RenderSpec extends AnyFunSuite {
 
   test("video round-trip: renderVideo GIF decodes back via Multimodal.gifFrames") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("render_roundtrip").toString
+    val dir = SparkTestBase.tempDir("render_roundtrip").toString
     def solidPng(gray: Int): Array[Byte] = {
       val img = new BufferedImage(16, 16, BufferedImage.TYPE_INT_RGB)
       val rgb = (gray << 16) | (gray << 8) | gray
@@ -169,7 +169,7 @@ class RenderSpec extends AnyFunSuite {
 
   test("renderVideo: mismatched frame dims resize to the first frame's") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("render_mixdims").toString
+    val dir = SparkTestBase.tempDir("render_mixdims").toString
     def png(w: Int, h: Int): Array[Byte] = {
       val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
       val baos = new ByteArrayOutputStream()
@@ -193,7 +193,7 @@ class RenderSpec extends AnyFunSuite {
   test("renderVideo: codec chain picks a JVM-available writer; per-seq frame counts round-trip") {
     import spark.implicits._
     assert(Render.pickCodec() == "gif") // stock JDK: no mp4/avi writer
-    val dir = Files.createTempDirectory("render_video").toString
+    val dir = SparkTestBase.tempDir("render_video").toString
     val frames = Seq(
       ("s0", 2, basePng(20, 20)), ("s0", 1, basePng(20, 20)),
       ("s0", 3, basePng(20, 20)), ("s1", 1, basePng(20, 20)))

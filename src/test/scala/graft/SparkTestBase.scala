@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import org.apache.hadoop.fs.FileUtil
+import org.apache.hadoop.util.ShutdownHookManager
 import org.apache.spark.sql.SparkSession
 
 /** Shared local session for specs (forked JVM gets the add-opens flags
@@ -8,14 +11,24 @@ import org.apache.spark.sql.SparkSession
 object SparkTestBase {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    .config("spark.sql.warehouse.dir", tempDir("graft_wh").toString)
     .config("spark.sql.shuffle.partitions", "2")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.codegen.cache.maxEntries", LocalSession.CodegenCacheEntries.toString)
+    .config(LocalSession.LocalFileSystem)
     .getOrCreate()
 
   GraftExtensions.register(spark)
+
+  /** A new directory under `java.io.tmpdir`, deleted with everything in
+    * it when the JVM exits. The hook runs after Spark's own (Hadoop
+    * priority 40), so no session or streaming query still writes there.
+    */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    ShutdownHookManager.get().addShutdownHook(() => FileUtil.fullyDelete(dir.toFile), 20)
+    dir
+  }
 }

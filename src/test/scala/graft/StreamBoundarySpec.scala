@@ -16,8 +16,7 @@ class StreamBoundarySpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
   private def freshDir(name: String, table: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_$name").toFile
-    dir.deleteOnExit()
+    val dir = SparkTestBase.tempDir(s"graft_$name").toFile
     val src = spark.read.parquet(s"/root/testdata/sf0.001/$table")
     src.coalesce(1).write.mode("overwrite")
       .parquet(new java.io.File(dir, table).getAbsolutePath)

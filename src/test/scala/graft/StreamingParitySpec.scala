@@ -1,9 +1,9 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.streaming.Trigger
-import graft.operators.{Tracker, TrackerConfig, TrackerIn}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQueryException, Trigger}
+import graft.operators.{SeqTrackOut, Tracker, TrackerConfig, TrackerIn}
 import graft.streaming.StreamingTracker
 
 /** True streaming parity: the tracker fed through a FILE STREAM with
@@ -27,7 +27,7 @@ class StreamingParitySpec extends AnyFunSuite {
       (1 to 2).map(f => det(f, 2, 300, 300)) ++
       (7 to 9).map(f => det(f, 2, 300, 300))
 
-    val dir = Files.createTempDirectory("stream_dets").toString
+    val dir = SparkTestBase.tempDir("stream_dets").toString
     // one file per frame-triple -> 3 micro-batches in arrival order
     val groups = dets.groupBy(d => (d.frame.toInt - 1) / 3).toSeq.sortBy(_._1)
     groups.foreach { case (g, ds) =>
@@ -56,6 +56,67 @@ class StreamingParitySpec extends AnyFunSuite {
       s"batch=${batch.mkString(";")} streamed=${streamed.mkString(";")}")
   }
 
+  test("tracker state: triggers after the first state restore compile 0 classes") {
+    import spark.implicits._
+    val dir = SparkTestBase.tempDir("stream_compiles").toString
+    def land(b: Int): Unit = spark.createDataset((3 * b + 1 to 3 * b + 3).flatMap(f =>
+      Seq(det(f, 0, 5.0 * f, 10), det(f, 1, 600.0, 600 + 5.0 * f))))
+      .coalesce(1).write.parquet(s"$dir/batch=$b")
+    land(0)
+    val q = StreamingTracker.track(
+        spark.readStream.schema(spark.createDataset(Seq(det(1, 0, 0, 0))).schema)
+          .parquet(dir).as[TrackerIn])
+      .writeStream.format("memory").queryName("stream_compiles_out")
+      .outputMode("append").start()
+    // trigger 1 plans the query and writes the first state; trigger 2
+    // compiles the state deserializer, which Spark builds lazily on the
+    // first state read; every later trigger must hit the codegen cache
+    q.processAllAvailable()
+    val compiles = (1 to 3).map { b =>
+      land(b)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      q.processAllAvailable()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    q.stop()
+    assert(spark.table("stream_compiles_out").count() == 24L)
+    assert(compiles.tail == Seq(0L, 0L), s"compiles in triggers 2-4: $compiles")
+  }
+
+  test("a checkpoint written with the array-of-struct tracker state fails loudly") {
+    import spark.implicits._
+    import StreamingParitySpec.{OldSeqState, OldTrackSnapshot}
+    val dir = SparkTestBase.tempDir("old_state_dets").toString
+    val ckpt = SparkTestBase.tempDir("old_state_ckpt").toString
+    spark.createDataset(Seq(det(1, 0, 5, 10))).coalesce(1).write.parquet(s"$dir/batch=0")
+    val schema = spark.createDataset(Seq(det(1, 0, 5, 10))).schema
+    def source = spark.readStream.schema(schema).parquet(dir).as[TrackerIn]
+    // the state shape before SeqState.tracks became one binary value
+    val e8 = Array.fill(8)(1.0f)
+    source.groupByKey(_.seq)
+      .flatMapGroupsWithState[OldSeqState, SeqTrackOut](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (_: String, _: Iterator[TrackerIn], state: GroupState[OldSeqState]) =>
+          state.update(OldSeqState("000001", 2, Array(OldTrackSnapshot(1,
+            Array.fill(8)(0.0), Array.fill(64)(0.0), 5, 10, 30, 30, 5, 10, 30, 30,
+            0.9, 0, e8, 1, 1, 0))))
+          Iterator.empty
+      }
+      .writeStream.format("noop")
+      .option("checkpointLocation", ckpt)
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+    spark.createDataset(Seq(det(2, 0, 10, 10))).coalesce(1).write.parquet(s"$dir/batch=1")
+    val e = intercept[StreamingQueryException] {
+      StreamingTracker.track(source)
+        .writeStream.format("noop")
+        .option("checkpointLocation", ckpt)
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+    }
+    assert(e.getMessage.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"), e.getMessage)
+  }
+
   test("st7 multi-batch cluster maintenance: fixpoint == single-batch d17; untouched cluster ids stable") {
     import org.apache.spark.sql.functions.col
     val d = "/root/testdata/sf0.001"
@@ -72,7 +133,7 @@ class StreamingParitySpec extends AnyFunSuite {
     val ids = src0.select("doc_id").collect().map(_.getLong(0)).sorted
     assert(ids.length >= 2, "need a non-trivial ingest slice")
     val mid = ids(ids.length / 2)
-    val dir = Files.createTempDirectory("st7_batches").toString
+    val dir = SparkTestBase.tempDir("st7_batches").toString
     src0.filter(col("doc_id") < mid).coalesce(1).write.parquet(s"$dir/b=0")
     src0.filter(col("doc_id") >= mid).coalesce(1).write.parquet(s"$dir/b=1")
     val multi = graft.queries.ExtQ.streamClusterMaintain(spark, d,
@@ -105,7 +166,7 @@ class StreamingParitySpec extends AnyFunSuite {
     val batch = SparkEntry.queries("s09_ivf_pq_store")(spark, d)
       .collect().map(_.toString).sorted.toSeq
     val queries = Tables.embeddings(spark, d).filter(col("vec_id") < 10).cache()
-    val dir = Files.createTempDirectory("st8_batches").toString
+    val dir = SparkTestBase.tempDir("st8_batches").toString
     // split the query set into TWO micro-batches — per-query results
     // depend only on the frozen index, so the split must be invisible
     queries.filter(col("vec_id") < 5).coalesce(1).write.parquet(s"$dir/b=0")
@@ -149,7 +210,7 @@ class StreamingParitySpec extends AnyFunSuite {
       val model = SimilaritySearch.ivfPqModel(
         emb, graft.queries.TextQ.AnnNlist, graft.queries.TextQ.AnnM,
         graft.queries.TextQ.AnnCb)
-      val out = Files.createTempDirectory("st8_retry").toString
+      val out = SparkTestBase.tempDir("st8_retry").toString
       val trigger = graft.queries.ExtQ.annProbeTrigger(
         spark, emb, index, model, np = 2, maxQueryBatch = 3, outDir = out) _
       // first (failed) attempt: simulate "chunk 0 staged, then crash"
@@ -178,7 +239,7 @@ class StreamingParitySpec extends AnyFunSuite {
       assert(rows.size == before + batch.size,
         s"retry duplicated or dropped rows: ${rows.size} vs $before + ${batch.size}")
       // and a clean-sink replay equals the batch fixpoint exactly
-      val out2 = Files.createTempDirectory("st8_retry2").toString
+      val out2 = SparkTestBase.tempDir("st8_retry2").toString
       graft.queries.ExtQ.annProbeTrigger(
         spark, emb, index, model, np = 2, maxQueryBatch = 3, outDir = out2)(
         queries, 7L)
@@ -199,7 +260,7 @@ class StreamingParitySpec extends AnyFunSuite {
     assert(batch.nonEmpty)
     val docs = Tables.documents(spark, d)
       .filter(graft.queries.TextQ.DocBatchPred).cache()
-    val dir = Files.createTempDirectory("st9_batches").toString
+    val dir = SparkTestBase.tempDir("st9_batches").toString
     // split the batch slice into TWO micro-batches — per-doc scores
     // depend only on the frozen model, so the split must be invisible
     docs.filter(col("doc_id") < 250).coalesce(1).write.parquet(s"$dir/b=0")
@@ -223,7 +284,7 @@ class StreamingParitySpec extends AnyFunSuite {
     val docs = Tables.documents(spark, d)
       .filter(graft.queries.TextQ.DocBatchPred && col("source") =!= "src19")
       .cache()
-    val dir = Files.createTempDirectory("st10_batches").toString
+    val dir = SparkTestBase.tempDir("st10_batches").toString
     // split the batch slice into TWO micro-batches — per-doc flags
     // depend only on the frozen model, so the split must be invisible
     docs.filter(col("doc_id") < 250).coalesce(1).write.parquet(s"$dir/b=0")
@@ -249,7 +310,7 @@ class StreamingParitySpec extends AnyFunSuite {
     val mid = vecs.agg(org.apache.spark.sql.functions
       .percentile_approx(col("vec_id"), org.apache.spark.sql.functions.lit(0.5),
         org.apache.spark.sql.functions.lit(100))).collect()(0).getLong(0)
-    val dir = Files.createTempDirectory("st11_batches").toString
+    val dir = SparkTestBase.tempDir("st11_batches").toString
     // split the batch slice into TWO micro-batches — codes are per-row
     // functions of the frozen model, so the split must be invisible
     vecs.filter(col("vec_id") < mid).coalesce(1).write.parquet(s"$dir/b=0")
@@ -281,7 +342,7 @@ class StreamingParitySpec extends AnyFunSuite {
       Seq(("a", 30 * min), ("a", 33 * min)),
       Seq(("sentinel", 120 * min)))
 
-    val dir = java.nio.file.Files.createTempDirectory("sess_batches").toString
+    val dir = SparkTestBase.tempDir("sess_batches").toString
     batches.zipWithIndex.foreach { case (rows, i) =>
       rows.toDF("user_id", "ms")
         .withColumn("et", timestamp_millis(col("ms"))).drop("ms")
@@ -333,7 +394,7 @@ class StreamingParitySpec extends AnyFunSuite {
       Seq(("a", 2 * min)), // late: watermark is already 61m - 1s
       Seq(("z", 120 * min)))
 
-    val dir = java.nio.file.Files.createTempDirectory("late_batches").toString
+    val dir = SparkTestBase.tempDir("late_batches").toString
     batches.zipWithIndex.foreach { case (rows, i) =>
       rows.toDF("user_id", "ms")
         .withColumn("et", timestamp_millis(col("ms"))).drop("ms")
@@ -388,7 +449,7 @@ class StreamingParitySpec extends AnyFunSuite {
       Seq(tdet("a", 2, 0, 10, 10, 1002), tdet("a", 2, 1, 600, 600, 1002),
         tdet("d", 1, 0, 100, 100, 5)))
 
-    val dir = Files.createTempDirectory("timed_dets").toString
+    val dir = SparkTestBase.tempDir("timed_dets").toString
     batches.zipWithIndex.foreach { case (ds, i) =>
       spark.createDataset(ds).coalesce(1).write.parquet(s"$dir/batch=$i")
     }
@@ -420,4 +481,20 @@ class StreamingParitySpec extends AnyFunSuite {
     assert(out.count(r => r.seq == "a" && r.frame <= "000003" &&
       r.trackId == 1) >= 3)
   }
+}
+
+object StreamingParitySpec {
+  /** `SeqState` and its track snapshot as they were before the tracks
+    * became one binary value.
+    */
+  final case class OldTrackSnapshot(
+      trackId: Int,
+      kfX: Array[Double], kfP: Array[Double],
+      predX: Double, predY: Double, predW: Double, predH: Double,
+      lastX: Double, lastY: Double, lastW: Double, lastH: Double,
+      lastConf: Double, lastDetId: Int,
+      emb: Array[Float],
+      hits: Int, age: Int, timeSinceUpdate: Int)
+
+  final case class OldSeqState(lastFrame: String, nextTrackId: Int, tracks: Array[OldTrackSnapshot])
 }

@@ -62,8 +62,8 @@ class TilingCompactionSpec extends AnyFunSuite {
 
   test("compaction: many small files -> few size-targeted files, data preserved") {
     import spark.implicits._
-    val in = Files.createTempDirectory("compact_in").toString
-    val out = Files.createTempDirectory("compact_out").toString
+    val in = SparkTestBase.tempDir("compact_in").toString
+    val out = SparkTestBase.tempDir("compact_out").toString
     spark.range(10000).toDF("id").repartition(40).write.mode("overwrite").parquet(in)
     val (nIn, nOut) = Compaction.compact(spark, in, out, targetFileBytes = 64 * 1024)
     assert(nIn == 40)
@@ -75,7 +75,7 @@ class TilingCompactionSpec extends AnyFunSuite {
 
   test("compactInPlace: swaps small files for size-targeted ones, idempotent, sidecars untouched") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("compact_inplace").toString
+    val dir = SparkTestBase.tempDir("compact_inplace").toString
     spark.range(10000).toDF("id").repartition(16)
       .write.mode("overwrite").parquet(dir)
     // a non-parquet sidecar (the _SUCCESS convention) must survive
@@ -95,7 +95,7 @@ class TilingCompactionSpec extends AnyFunSuite {
     assert(Compaction.compactInPlace(spark, dir,
       smallBytes = 1024 * 1024, targetFileBytes = 8 * 1024 * 1024).isEmpty)
     // threshold honesty: big-enough files never trip
-    val big = Files.createTempDirectory("compact_big").toString
+    val big = SparkTestBase.tempDir("compact_big").toString
     spark.range(10000).toDF("id").repartition(4)
       .write.mode("overwrite").parquet(big)
     assert(Compaction.compactInPlace(spark, big,
