@@ -12,24 +12,46 @@ import graft.operators._
   *
   * File layout follows the reference convention: det.txt + embeddings →
   * track.txt → eval.txt → metric tables.
+  *
+  * One sequence's MOT file per call, as in the reference's CLI (the
+  * steps that read MOT files stamp `seq0`), so each input is coalesced
+  * to ONE partition right after its read. A one-partition plan reports `SinglePartition`, which already
+  * satisfies the clustering the per-group kernels (`groupByKey`,
+  * `flatMapSortedGroups`, `cogroup`) and the embedding join require, so
+  * Catalyst plans every step with no exchange: `detectPostprocess` and
+  * `track` run one Spark job each, `eval` three (eval.txt, the metrics
+  * row, the COMBINED row). At this size the job and exchange overhead,
+  * not the operators, is the cost of a call. Multi-sequence Datasets
+  * call the operators directly and keep their parallel plans.
   */
 object Pipelines {
 
-  private def withFrameIdx(df: DataFrame): DataFrame =
+  /** A MOT file of the call's sequence with its detection-shaped key
+    * columns `frameIdx` and `seq`.
+    */
+  private def motSeq(spark: SparkSession, file: String): DataFrame =
     // reference gap math requires int-castable frames
     // (src/utils/eval.py:308 — same limitation, documented)
-    df.withColumn("frameIdx", col("frame").cast("int"))
+    MotCsv.read(spark, file).coalesce(1)
+      .select(col("*"), col("frame").cast("int").as("frameIdx"), lit("seq0").as("seq"))
+
+  /** The embeddings table (frame, id, vector: array<float>) as the
+    * nullable `emb` column to left-join onto a sequence's rows.
+    */
+  private def embColumn(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("frame"), col("id"), col("vector").as("emb")).coalesce(1)
 
   /** §3.1 `track` — det.txt + embeddings table (frame, id,
     * vector: array<float>) → track.txt. Embeddings are joined onto
-    * detections (not broadcast wholesale, SURVEY P8 at scale).
+    * detections (not broadcast wholesale, SURVEY P8 at scale): a
+    * shuffled hash join, which over two one-partition sides needs no
+    * exchange and no broadcast job.
     */
   def track(spark: SparkSession, detFile: String, embeddings: DataFrame,
             outFile: String, cfg: TrackerConfig = TrackerConfig()): Unit = {
     import spark.implicits._
-    val dets = MotCsv.read(spark, detFile)
-      .join(embeddings.select(col("frame"), col("id"),
-        col("vector").as("emb")), Seq("frame", "id"), "left")
+    val dets = MotCsv.read(spark, detFile).coalesce(1)
+      .join(embColumn(embeddings).hint("shuffle_hash"), Seq("frame", "id"), "left")
       .select(lit("seq0").as("seq"), col("frame"), col("id"),
         col("x"), col("y"), col("w"), col("h"), col("conf"), col("emb"))
       .as[TrackerIn]
@@ -47,15 +69,12 @@ object Pipelines {
     */
   def eval(spark: SparkSession, gtFile: String, trackFile: String,
            evalFile: String, iouThreshold: Double = 0.3): (DataFrame, DataFrame) = {
-    val gt = withFrameIdx(MotCsv.read(spark, gtFile)).withColumn("seq", lit("seq0"))
-    val tr = withFrameIdx(MotCsv.read(spark, trackFile)).withColumn("seq", lit("seq0"))
-    val filtered = MotEval.gtFilteredTracks(gt, tr, iouThreshold)
+    val gt = motSeq(spark, gtFile)
+    val filtered = MotEval.gtFilteredTracks(gt, motSeq(spark, trackFile), iouThreshold)
     MotCsv.write(filtered.select("frame", "id", "x", "y", "w", "h", "conf"), evalFile)
-    val evalTracks = withFrameIdx(MotCsv.read(spark, evalFile))
-      .withColumn("seq", lit("seq0"))
     // the per-sequence rows come back as a local relation: collecting
     // perSeq runs no job, and combine aggregates the collected rows
-    val metrics = MotEval.metrics(gt, evalTracks, iouThreshold)
+    val metrics = MotEval.metrics(gt, motSeq(spark, evalFile), iouThreshold)
     val perSeq = spark.createDataFrame(java.util.Arrays.asList(metrics.collect(): _*), metrics.schema)
     // one partition: the global aggregate then needs no exchange
     (perSeq, MotEval.combine(perSeq.coalesce(1)))
@@ -64,38 +83,38 @@ object Pipelines {
   /** §3 entry point 4 `features` — GT-derived matching thresholds. */
   def gtThresholds(spark: SparkSession, gtFile: String,
                    embeddings: DataFrame): DataFrame = {
-    val gt = withFrameIdx(MotCsv.read(spark, gtFile))
-      .withColumn("seq", lit("seq0"))
-      .join(embeddings.select(col("frame"), col("id"), col("vector").as("emb")),
-        Seq("frame", "id"), "left")
+    val gt = motSeq(spark, gtFile)
+      .join(embColumn(embeddings), Seq("frame", "id"), "left")
     GtThresholds.thresholds(GtThresholds.pairFeatures(gt))
   }
 
   /** §3.2 `detect` post-processing — raw model outputs (corner boxes +
     * scores) → filter cascade → NMS → nested removal → det.txt with
     * per-frame ordinals (reference src/detection.py:1392-1423, 641).
+    * One kernel call per frame runs `Nms.suppressFrame` and numbers the
+    * kept boxes from 1 in `Nms.RankOrder`, the order a `row_number`
+    * window over (score desc, id asc) would give them.
     */
   def detectPostprocess(spark: SparkSession, raw: DataFrame, outFile: String,
                         imgW: Int, imgH: Int,
                         confThreshold: Double = 0.1, minSize: Double = 0.0,
                         edgeTol: Double = 0.0, nmsThreshold: Double = 0.5): Unit = {
     import spark.implicits._
-    val filtered = DetectFilters.cascade(raw, col("score"),
+    val filtered = DetectFilters.cascade(raw.coalesce(1), col("score"),
       col("x1"), col("y1"), col("x2"), col("y2"),
       lit(imgW), lit(imgH), confThreshold, minSize, edgeTol)
     val boxes = filtered.select(col("seq"), col("frame"), col("id"),
       col("x1"), col("y1"), col("x2"), col("y2"), col("score")).as[DetBox]
-    val kept = Nms.removeNested(Nms.nms(boxes, nmsThreshold), nmsThreshold)
     // per-frame detection ordinals from 1 (reference detection.py:641)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("seq", "frame").orderBy(col("score").desc, col("id").asc)
+    val ranked = boxes.groupByKey(d => (d.seq, d.frame)).flatMapGroups { (_, it) =>
+      Nms.suppressFrame(it.toSeq, nmsThreshold).sorted(Nms.RankOrder).iterator
+        .zipWithIndex.map { case (d, k) => d.copy(id = k + 1) }
+    }
     MotCsv.write(
-      kept.toDF()
-        .withColumn("det_id", row_number().over(w))
-        .select(col("frame"), col("det_id").as("id"),
-          col("x1").as("x"), col("y1").as("y"),
-          (col("x2") - col("x1")).as("w"), (col("y2") - col("y1")).as("h"),
-          col("score").as("conf")),
+      ranked.toDF().select(col("frame"), col("id"),
+        col("x1").as("x"), col("y1").as("y"),
+        (col("x2") - col("x1")).as("w"), (col("y2") - col("y1")).as("h"),
+        col("score").as("conf")),
       outFile)
   }
 

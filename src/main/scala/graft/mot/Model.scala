@@ -1,62 +1,13 @@
 package graft.mot
 
-/** Typed data model for the MOT-Challenge relations (SURVEY §1).
-  *
-  * One row per object instance per frame; the 10-column layout mirrors
-  * the reference's universal interchange format (reference
-  * src/utils/helpers.py:421-439, README.md:66-71). `frame` is the
-  * canonical zero-padded string, `frameIdx` its dense numeric order.
+/** Typed values of the tracker kernel (SURVEY §1); the MOT-Challenge
+  * row layout itself is `MotCsv.schema`. A box is its top-left corner
+  * and size.
   */
 final case class Bbox(x: Double, y: Double, w: Double, h: Double)
-
-final case class MotRow(
-    frame: String,
-    id: Int,
-    x: Double,
-    y: Double,
-    w: Double,
-    h: Double,
-    conf: Double,
-    mx: Int, // MOT filler x (always 1 on write, reference src/tracking.py:1170)
-    my: Int, // filler y (-1)
-    mz: Int  // filler z (-1)
-)
-
-final case class EmbeddingRow(frame: String, id: Int, vector: Array[Float])
 
 /** Kalman filter state: 6-vector [x, y, vx, vy, w, h] plus 6×6 covariance
   * stored row-major (reference src/tracking.py:248-301). Never a public
   * column — internal to the tracker kernel.
   */
 final case class KalmanState(x: Array[Double], p: Array[Double])
-
-/** Mutable-per-track state evolving over the frame stream (reference
-  * IcebergTrack, src/tracking.py:158-435). `history` keeps only the last
-  * matched (frame, detId) — all the reference ever *reads* is
-  * `history[-1]` (src/tracking.py:983), so unbounded history is dropped
-  * by design for bounded streaming state (SURVEY §7.3 item 6).
-  */
-final case class TrackState(
-    trackId: Int,
-    var kalman: KalmanState,
-    var hits: Int,
-    var age: Int,
-    var timeSinceUpdate: Int,
-    var lastFrame: String,
-    var lastDetId: Int,
-    var lastBbox: Bbox,
-    var lastConf: Double
-)
-
-/** One emitted tracking result row (matched tracks only, reference
-  * src/tracking.py:841-853).
-  */
-final case class TrackOut(
-    frame: String,
-    trackId: Int,
-    x: Double,
-    y: Double,
-    w: Double,
-    h: Double,
-    conf: Double
-)

@@ -78,11 +78,15 @@ object MotCsv {
   def candidates(df: DataFrame): DataFrame =
     df.groupBy("frame").agg(sort_array(collect_list("id")).as("ids"))
 
-  /** S4/S5/S6 — MOT CSV write with the reference's `(id, frame)` output
-    * sort (sort_file, reference src/utils/helpers.py:293-336 — the actual
-    * key is `(int(id), frame)` despite the docstring). `singleFile`
-    * matches the reference's single-file layout; callers at scale write
-    * partitioned instead.
+  /** S4/S5/S6/S7 — MOT CSV write with the reference's `(id, frame)`
+    * output sort (sort_file, reference src/utils/helpers.py:293-336 — the
+    * actual key is `(int(id), frame)` despite the docstring).
+    * `singleFile` matches the reference's single-file layout: the rows
+    * are coalesced to one partition and sorted within it, adding no
+    * exchange. The one writing task then also runs the narrow work above
+    * it, back to the last exchange or the scan, so a caller with a wide
+    * or large upstream passes `singleFile = false` and gets a
+    * range-partitioned, globally sorted output.
     */
   def write(df: DataFrame, path: String, singleFile: Boolean = true): Unit = {
     val out = df
@@ -90,10 +94,7 @@ object MotCsv {
         col("frame"), col("id"),
         col("x"), col("y"), col("w"), col("h"), col("conf"),
         lit(1).as("mx"), lit(-1).as("my"), lit(-1).as("mz"))
-    // one file: a single-partition exchange + local sort writes what a
-    // range-partitioned sort coalesced to one partition writes, minus the
-    // range partitioner's sampling job
-    (if (singleFile) out.repartition(1).sortWithinPartitions(col("id"), col("frame"))
+    (if (singleFile) out.coalesce(1).sortWithinPartitions(col("id"), col("frame"))
      else out.orderBy(col("id"), col("frame")))
       .write.mode("overwrite").option("header", "false").csv(path)
   }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, Encoders, KeyValueGroupedDataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, KeyValueGroupedDataset, Row}
 import org.apache.spark.sql.functions._
 
 /** One per-sequence CLEAR / Identity / Count row (`MotEval.metrics`). */
@@ -77,6 +77,11 @@ object MotEval {
     val live: Array[Boolean] = liveB.result()
     def n: Int = id.length
   }
+
+  // built once: Encoders.product reflects over the case class on every call
+  private val SeqMetricsEnc = Encoders.product[SeqMetrics]
+  private val FrameMatchEnc = Encoders.product[FrameMatch]
+  private val FrameKeyEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaInt)
 
   /** Column positions of frameIdx, id, x, y, w, h in `boxCols` rows. */
   private val BoxAt = Array(1, 2, 3, 4, 5, 6)
@@ -176,8 +181,7 @@ object MotEval {
   private def byFrame(df: DataFrame): KeyValueGroupedDataset[(String, Int), Row] = {
     val (s, f) = (df.schema.fieldIndex("seq"), df.schema.fieldIndex("frameIdx"))
     df.filter(col("seq").isNotNull && col("frameIdx").isNotNull)
-      .groupByKey((r: Row) => (r.getString(s), r.getInt(f)))(
-        Encoders.tuple(Encoders.STRING, Encoders.scalaInt))
+      .groupByKey((r: Row) => (r.getString(s), r.getInt(f)))(FrameKeyEnc)
   }
 
   /** J5 — per-frame greedy IoU argmax: for each GT id in a frame the best
@@ -193,7 +197,7 @@ object MotEval {
         out += FrameMatch(seq, frame, gid, t.id(j), v)
       }
       out
-    }(Encoders.product[FrameMatch]).toDF()
+    }(FrameMatchEnc).toDF()
 
   /** S6/O8 — the eval.txt filter (match_tracking_to_gt, reference
     * src/utils/eval.py:701-794): strict-threshold match, then every track
@@ -343,34 +347,31 @@ object MotEval {
     def bySeq(df: DataFrame) = boxCols(df).groupByKey((r: Row) => r.getString(0))(Encoders.STRING)
     bySeq(gt).cogroup(bySeq(tracks)) { (seq, gIt, tIt) =>
       sequenceMetrics(seq, gIt, tIt, iouThreshold)
-    }(Encoders.product[SeqMetrics]).toDF()
+    }(SeqMetricsEnc).toDF()
   }
 
   /** A6 — COMBINED row across sequences (combine_metrics, reference
     * src/utils/eval.py:460-508): sum the 14 count metrics, recompute the
-    * ratios, CLR_TP-weighted mean of LocA.
+    * ratios, CLR_TP-weighted mean of LocA. One aggregate and one
+    * projection over it.
     */
   def combine(perSeq: DataFrame): DataFrame = {
     val counts = Seq("Dets", "GT_Dets", "IDs", "GT_IDs", "CLR_TP", "CLR_FN",
       "IDSW", "Frag", "MT", "PT", "ML", "IDTP", "IDFN", "IDFP")
+    def ratio(num: Column, den: Column): Column = when(den > 0, num / den).otherwise(0.0)
+    val (tp, idtp) = (col("CLR_TP"), col("IDTP"))
     perSeq.groupBy().agg(
         sum(counts.head).as(counts.head),
-        counts.tail.map(c => sum(c).as(c)) :+
-          (sum(col("LocA") * col("CLR_TP"))).as("locaNum"): _*)
-      .withColumn("seq", lit("COMBINED"))
-      .withColumn("LocA", when(col("CLR_TP") > 0, col("locaNum") / col("CLR_TP"))
-        .otherwise(0.0)).drop("locaNum")
-      .withColumn("CLR_Re",
-        when(col("GT_Dets") > 0, col("CLR_TP") / col("GT_Dets")).otherwise(0.0))
-      .withColumn("MTR", when(col("GT_IDs") > 0, col("MT") / col("GT_IDs")).otherwise(0.0))
-      .withColumn("PTR", when(col("GT_IDs") > 0, col("PT") / col("GT_IDs")).otherwise(0.0))
-      .withColumn("MLR", when(col("GT_IDs") > 0, col("ML") / col("GT_IDs")).otherwise(0.0))
-      .withColumn("IDR", when(col("IDTP") + col("IDFN") > 0,
-        col("IDTP") / (col("IDTP") + col("IDFN"))).otherwise(0.0))
-      .withColumn("IDP", when(col("IDTP") + col("IDFP") > 0,
-        col("IDTP") / (col("IDTP") + col("IDFP"))).otherwise(0.0))
-      .withColumn("IDF1", when(lit(2) * col("IDTP") + col("IDFN") + col("IDFP") > 0,
-        lit(2) * col("IDTP") / (lit(2) * col("IDTP") + col("IDFN") + col("IDFP")))
-        .otherwise(0.0))
+        counts.tail.map(c => sum(c).as(c)) :+ sum(col("LocA") * tp).as("locaNum"): _*)
+      .select(counts.map(col) ++ Seq(
+        lit("COMBINED").as("seq"),
+        ratio(col("locaNum"), tp).as("LocA"),
+        ratio(tp, col("GT_Dets")).as("CLR_Re"),
+        ratio(col("MT"), col("GT_IDs")).as("MTR"),
+        ratio(col("PT"), col("GT_IDs")).as("PTR"),
+        ratio(col("ML"), col("GT_IDs")).as("MLR"),
+        ratio(idtp, idtp + col("IDFN")).as("IDR"),
+        ratio(idtp, idtp + col("IDFP")).as("IDP"),
+        ratio(lit(2) * idtp, lit(2) * idtp + col("IDFN") + col("IDFP")).as("IDF1")): _*)
   }
 }

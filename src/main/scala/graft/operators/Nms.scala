@@ -98,6 +98,21 @@ object Nms {
     keep.toSeq
   }
 
+  /** O5 then O6 for one frame: the detection post-processing kernel
+    * that `Pipelines.detectPostprocess` and `Tiling.mergeTileDetections`
+    * run per group.
+    */
+  def suppressFrame(dets: Seq[DetBox], nmsThreshold: Double): Seq[DetBox] =
+    removeNestedFrame(nmsFrame(dets, nmsThreshold), nmsThreshold)
+
+  /** Spark's sort order for `(score desc, id asc)`, as a window's
+    * `row_number` numbers a frame: NaN scores first, -0.0 equal to 0.0.
+    */
+  val RankOrder: Ordering[DetBox] = (a: DetBox, b: DetBox) => {
+    val c = if (a.score == b.score) 0 else java.lang.Double.compare(b.score, a.score)
+    if (c != 0) c else Integer.compare(a.id, b.id)
+  }
+
   /** Distributed drivers: one kernel invocation per (seq, frame). */
   def nms(dets: Dataset[DetBox], iouThreshold: Double): Dataset[DetBox] = {
     val spark = dets.sparkSession

@@ -84,8 +84,6 @@ object Tiling {
     // mapped groups don't carry their partitioning to the next
     // groupByKey).
     global.groupByKey(d => d.seq)
-      .flatMapGroups((_, it) =>
-        Nms.removeNestedFrame(
-          Nms.nmsFrame(it.toSeq, nmsThreshold), nmsThreshold).iterator)
+      .flatMapGroups((_, it) => Nms.suppressFrame(it.toSeq, nmsThreshold).iterator)
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.mot.{Bbox, Kalman, KalmanState, TrackOut}
+import graft.mot.{Bbox, Kalman, KalmanState}
 
 /** Multi-object tracker (SURVEY §2.8 T1–T6, §2.3 J1–J4).
   *

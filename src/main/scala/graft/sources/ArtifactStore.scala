@@ -1,5 +1,6 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -76,6 +77,24 @@ object ArtifactStore {
     if (fs.exists(root)) fs.delete(root, true)
   }
 
+  /** `<tmp>/<kind>/<datasetHash>` of every store [[locate]]d in this
+    * JVM, with the dataset's source files.
+    */
+  private val located =
+    new java.util.concurrent.ConcurrentHashMap[String, Seq[java.io.File]]()
+
+  /** The `<tmp>/<kind>/<datasetHash>` directories located in this JVM
+    * for datasets whose every source file lies under `root` — the
+    * stores a throwaway dataset copy leaves behind, since no other
+    * dataset's GC ever touches them.
+    */
+  def datasetDirsUnder(root: java.io.File): Seq[String] = {
+    val r = root.toPath.toAbsolutePath.normalize
+    located.asScala.collect {
+      case (dir, srcs) if srcs.forall(_.toPath.toAbsolutePath.normalize.startsWith(r)) => dir
+    }.toSeq
+  }
+
   /** The artifact directory this (kind, sources, sub) resolves to —
     * shared by [[resolve]] (build-if-missing) and [[resolveExisting]]
     * (fail-if-missing) so the two can never address different paths.
@@ -91,6 +110,7 @@ object ArtifactStore {
       sources.map(f => f.length() * 1000003L + f.lastModified())
         .reduce(_ * 998244353L + _))
     val dsDir = s"${System.getProperty("java.io.tmpdir")}/$kind/$dsHash"
+    located.putIfAbsent(dsDir, sources)
     val base = dsDir + (if (sub.nonEmpty) s"/$sub" else "")
     (dsDir, base, s"$base/$genTag")
   }

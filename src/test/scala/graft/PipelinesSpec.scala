@@ -70,12 +70,12 @@ class PipelinesSpec extends AnyFunSuite {
     assert(perCall(1) < 50 && perCall(2) < 50, s"classes compiled per call: $perCall")
   }
 
-  test("eval + metric tables run at most 10 Spark jobs") {
-    // the relational metrics plan ran 35: a job per AQE stage of its
-    // five aggregation branches
-    val (dir, trackFile) = trackedFixture("eval_jobs")
+  /** The Spark jobs `body` starts, counted by job group once the
+    * listener bus has drained.
+    */
+  private def jobsIn(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val group = "eval_job_count"
+    val group = "pipelines_job_count"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val counter = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -84,14 +84,34 @@ class PipelinesSpec extends AnyFunSuite {
     }
     sc.addSparkListener(counter)
     try {
-      sc.setJobGroup(group, "eval job count")
+      sc.setJobGroup(group, "pipelines job count")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(counter)
+    jobs.get
+  }
+
+  test("eval + metric tables run at most 3 Spark jobs") {
+    // eval.txt, the per-sequence metrics row and the COMBINED row: the
+    // one-partition inputs leave no exchange, so no stage job
+    val (dir, trackFile) = trackedFixture("eval_jobs")
+    val jobs = jobsIn {
       val (perSeq, combined) = Pipelines.eval(spark, s"$dir/gt.txt", trackFile,
         s"$dir/eval", iouThreshold = 0.3)
       Pipelines.formatMetricTables(perSeq, combined)
-      sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(counter)
-    assert(jobs.get > 0 && jobs.get <= 10, s"jobs: ${jobs.get}")
+    }
+    assert(jobs > 0 && jobs <= 3, s"jobs: $jobs")
+  }
+
+  test("track runs one Spark job") {
+    import spark.implicits._
+    val (dir, _) = trackedFixture("track_jobs")
+    val embs = MotCsv.read(spark, s"$dir/det.txt").select("frame", "id").as[(String, Int)]
+      .collect().toSeq.map { case (f, i) => (f, i, Array.fill(8)(1.0f)) }
+      .toDF("frame", "id", "vector")
+    assert(jobsIn(Pipelines.track(spark, s"$dir/det.txt", embs, s"$dir/track2")) == 1)
+    assert(MotCsv.read(spark, s"$dir/track2").collect().toSet ==
+      MotCsv.read(spark, s"$dir/track").collect().toSet)
   }
 
   test("Run CLI: config + overrides drive track then eval over a dataset dir") {
@@ -631,8 +651,9 @@ class PipelinesSpec extends AnyFunSuite {
       ("s", "000001", 5, 300.0, 300.0, 350.0, 345.0, 0.7)
     ).toDF("seq", "frame", "id", "x1", "y1", "x2", "y2", "score")
     val dir = tmp("det_out")
-    Pipelines.detectPostprocess(spark, raw, s"$dir/det", 400, 400,
-      confThreshold = 0.1)
+    // one kernel per frame and a single-file write: one job, no exchange
+    assert(jobsIn(Pipelines.detectPostprocess(spark, raw, s"$dir/det", 400, 400,
+      confThreshold = 0.1)) == 1)
     val out = MotCsv.read(spark, s"$dir/det").collect()
     assert(out.length == 2) // boxes 1 and 5 survive
     assert(out.map(_.getInt(1)).sorted.toSeq == Seq(1, 2)) // per-frame ordinals
