@@ -479,23 +479,19 @@ object Bench {
         .filter(_.getName.matches("BENCH_r\\d+_local\\.json"))
       if (recs.isEmpty) None else {
         val prev = recs.maxBy(_.getName.replaceAll("\\D+", "").toInt)
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(prev.toPath), "UTF-8")
+        import org.json4s._
+        val rec = org.json4s.jackson.JsonMethods.parse(prev)
         // walls are only comparable at the SAME scale factor — an
         // sf0.001 smoke vs an sf0.1 canonical would read as a phantom
         // ~0.1x "speedup"; omit the field across SFs
-        val prevSf = """"sf":"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
-        if (!prevSf.contains(sfDir)) throw new IllegalStateException("sf mismatch")
-        val prevQ = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(txt)
-          .map(_.group(1)).getOrElse("")
-          .split(",").toSeq.flatMap { kv =>
-            kv.split(":") match {
-              case Array(k, v) =>
-                try Some(k.trim.stripPrefix("\"").stripSuffix("\"") -> v.trim.toDouble)
-                catch { case _: NumberFormatException => None }
-              case _ => None
-            }
-          }.toMap
+        if (rec \ "sf" != JString(sfDir)) throw new IllegalStateException("sf mismatch")
+        val prevQ = (rec \ "queries" match {
+          case JObject(fs) => fs.collect {
+            case (k, JDouble(v)) => k -> v
+            case (k, JInt(v)) => k -> v.toDouble
+          }
+          case _ => Nil
+        }).toMap
         val cur = results.filter(_.ok).map(r => r.key -> r.wall).toMap
         val ratios = cur.keySet.intersect(prevQ.keySet).toSeq
           .map(k => cur(k) / math.max(prevQ(k), 1e-9)).sorted

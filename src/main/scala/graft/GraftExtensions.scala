@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.expressions.DotQuantized
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import graft.expressions._
 
 /** Engine extension point (SURVEY §7.1): registers graft's native
   * Catalyst expressions into the session's function registry.
@@ -14,128 +15,51 @@ import graft.expressions.DotQuantized
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.dotqDescriptor)
-    ext.injectFunction(GraftExtensions.distLeDescriptor)
-    ext.injectFunction(GraftExtensions.interSizeDescriptor)
-    ext.injectFunction(GraftExtensions.repStatsDescriptor)
-    ext.injectFunction(GraftExtensions.bandSigsDescriptor)
-    ext.injectFunction(GraftExtensions.simhash64Descriptor)
-    ext.injectFunction(GraftExtensions.cellArgmaxDescriptor)
-    ext.injectFunction(GraftExtensions.cellScoresDescriptor)
-    ext.injectFunction(GraftExtensions.pqEncodeDescriptor)
-    ext.injectFunction(GraftExtensions.pqLutsDescriptor)
-    ext.injectFunction(GraftExtensions.bloomAggDescriptor)
-    ext.injectFunction(GraftExtensions.mightContainDescriptor)
+    GraftExtensions.descriptors.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.optimizer.BandJoinRewrite)
   }
 }
 
 object GraftExtensions {
-  private val dotqDescriptor = (
-    FunctionIdentifier("graft_dotq"),
-    new ExpressionInfo(classOf[DotQuantized].getName, "graft_dotq"),
-    (children: Seq[Expression]) => DotQuantized(children(0), children(1)))
 
-  private val distLeDescriptor = (
-    FunctionIdentifier("graft_dist_le"),
-    new ExpressionInfo(classOf[graft.expressions.DistanceLE].getName, "graft_dist_le"),
-    (c: Seq[Expression]) => graft.expressions.DistanceLE(c(0), c(1), c(2), c(3), c(4)))
+  /** (name, expression class, builder) of every native function. */
+  private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_dotq", classOf[DotQuantized], c => DotQuantized(c(0), c(1))),
+    ("graft_dist_le", classOf[DistanceLE], c => DistanceLE(c(0), c(1), c(2), c(3), c(4))),
+    ("graft_inter_size", classOf[SortedIntersectSize], c => SortedIntersectSize(c(0), c(1))),
+    ("graft_repstats", classOf[RepetitionStats], c => RepetitionStats(c(0), c(1))),
+    ("graft_bandsigs", classOf[BandSignatures], c => BandSignatures(c(0), c(1), c(2))),
+    ("graft_simhash64", classOf[Simhash64], c => Simhash64(c.head)),
+    ("graft_cell_argmax", classOf[CentroidArgmax], c => CentroidArgmax(c(0), c(1))),
+    ("graft_cell_scores", classOf[CentroidScores], c => CentroidScores(c(0), c(1))),
+    ("graft_pq_encode", classOf[PqEncode], c => PqEncode(c(0), c(1))),
+    ("graft_pq_luts", classOf[PqLuts], c => PqLuts(c(0), c(1))),
+    // Spark's OWN Bloom expressions (the machinery behind its runtime
+    // row-group filters), surfaced as callable functions — Spark ships
+    // them but does not register them in the public FunctionRegistry.
+    // graft_bloom_agg(longCol, estimatedItems, numBits) → binary sketch;
+    // graft_might_contain(binary, longCol) → boolean. Used by the
+    // Bloom-prefilter decontamination tier (TextAnalysis
+    // .decontaminateBloom): the eval-side sketch is ~10 bits/gram where
+    // the exact hash relation is ~64+, which is the difference between
+    // a broadcastable prefilter and an unbroadcastable eval set at
+    // 100 TB.
+    ("graft_bloom_agg", classOf[BloomFilterAggregate],
+      c => new BloomFilterAggregate(c(0), c(1), c(2)).toAggregateExpression()),
+    ("graft_might_contain", classOf[BloomFilterMightContain],
+      c => BloomFilterMightContain(c(0), c(1))))
 
-  private val interSizeDescriptor = (
-    FunctionIdentifier("graft_inter_size"),
-    new ExpressionInfo(classOf[graft.expressions.SortedIntersectSize].getName, "graft_inter_size"),
-    (c: Seq[Expression]) => graft.expressions.SortedIntersectSize(c(0), c(1)))
-
-  private val repStatsDescriptor = (
-    FunctionIdentifier("graft_repstats"),
-    new ExpressionInfo(classOf[graft.expressions.RepetitionStats].getName, "graft_repstats"),
-    (c: Seq[Expression]) => graft.expressions.RepetitionStats(c(0), c(1)))
-
-  private val bandSigsDescriptor = (
-    FunctionIdentifier("graft_bandsigs"),
-    new ExpressionInfo(classOf[graft.expressions.BandSignatures].getName, "graft_bandsigs"),
-    (c: Seq[Expression]) => graft.expressions.BandSignatures(c(0), c(1), c(2)))
-
-  private val simhash64Descriptor = (
-    FunctionIdentifier("graft_simhash64"),
-    new ExpressionInfo(classOf[graft.expressions.Simhash64].getName, "graft_simhash64"),
-    (c: Seq[Expression]) => graft.expressions.Simhash64(c.head))
-
-  private val cellArgmaxDescriptor = (
-    FunctionIdentifier("graft_cell_argmax"),
-    new ExpressionInfo(classOf[graft.expressions.CentroidArgmax].getName, "graft_cell_argmax"),
-    (c: Seq[Expression]) => graft.expressions.CentroidArgmax(c(0), c(1)))
-
-  private val cellScoresDescriptor = (
-    FunctionIdentifier("graft_cell_scores"),
-    new ExpressionInfo(classOf[graft.expressions.CentroidScores].getName, "graft_cell_scores"),
-    (c: Seq[Expression]) => graft.expressions.CentroidScores(c(0), c(1)))
-
-  private val pqEncodeDescriptor = (
-    FunctionIdentifier("graft_pq_encode"),
-    new ExpressionInfo(classOf[graft.expressions.PqEncode].getName, "graft_pq_encode"),
-    (c: Seq[Expression]) => graft.expressions.PqEncode(c(0), c(1)))
-
-  private val pqLutsDescriptor = (
-    FunctionIdentifier("graft_pq_luts"),
-    new ExpressionInfo(classOf[graft.expressions.PqLuts].getName, "graft_pq_luts"),
-    (c: Seq[Expression]) => graft.expressions.PqLuts(c(0), c(1)))
-
-  // Spark's OWN Bloom expressions (the machinery behind its runtime
-  // row-group filters), surfaced as callable functions — Spark ships
-  // them but does not register them in the public FunctionRegistry.
-  // graft_bloom_agg(longCol, estimatedItems, numBits) → binary sketch;
-  // graft_might_contain(binary, longCol) → boolean. Used by the
-  // Bloom-prefilter decontamination tier (TextAnalysis
-  // .decontaminateBloom): the eval-side sketch is ~10 bits/gram where
-  // the exact hash relation is ~64+, which is the difference between
-  // a broadcastable prefilter and an unbroadcastable eval set at
-  // 100 TB.
-  private val bloomAggDescriptor = (
-    FunctionIdentifier("graft_bloom_agg"),
-    new ExpressionInfo(
-      classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-      "graft_bloom_agg"),
-    (c: Seq[Expression]) =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        c(0), c(1), c(2)).toAggregateExpression(): Expression)
-
-  private val mightContainDescriptor = (
-    FunctionIdentifier("graft_might_contain"),
-    new ExpressionInfo(
-      classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-      "graft_might_contain"),
-    (c: Seq[Expression]) =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(c(0), c(1)): Expression)
+  private def descriptors = functions.map { case (name, cls, build) =>
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+  }
 
   /** Imperative registration for an already-built session: functions
     * plus the band-join optimizer rule (idempotent).
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      dotqDescriptor._1, dotqDescriptor._2, dotqDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      distLeDescriptor._1, distLeDescriptor._2, distLeDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      interSizeDescriptor._1, interSizeDescriptor._2, interSizeDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      repStatsDescriptor._1, repStatsDescriptor._2, repStatsDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      bandSigsDescriptor._1, bandSigsDescriptor._2, bandSigsDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      simhash64Descriptor._1, simhash64Descriptor._2, simhash64Descriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      cellArgmaxDescriptor._1, cellArgmaxDescriptor._2, cellArgmaxDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      cellScoresDescriptor._1, cellScoresDescriptor._2, cellScoresDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      pqEncodeDescriptor._1, pqEncodeDescriptor._2, pqEncodeDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      pqLutsDescriptor._1, pqLutsDescriptor._2, pqLutsDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      bloomAggDescriptor._1, bloomAggDescriptor._2, bloomAggDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      mightContainDescriptor._1, mightContainDescriptor._2, mightContainDescriptor._3)
+    descriptors.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    }
     val opt = spark.sessionState.experimentalMethods
     if (!opt.extraOptimizations.contains(graft.optimizer.BandJoinRewrite))
       opt.extraOptimizations = opt.extraOptimizations :+ graft.optimizer.BandJoinRewrite

@@ -1,136 +1,79 @@
 package graft.config
 
-import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.snakeyaml.engine.v2.api.LoadSettings
+import org.snakeyaml.engine.v2.api.lowlevel.Compose
+import org.snakeyaml.engine.v2.common.FlowStyle
+import org.snakeyaml.engine.v2.constructor.StandardConstructor
+import org.snakeyaml.engine.v2.exceptions.YamlEngineException
+import org.snakeyaml.engine.v2.nodes.{MappingNode, Node, SequenceNode}
+import org.snakeyaml.engine.v2.schema.CoreSchema
 
-/** Minimal YAML-subset parser for pipeline config files (SURVEY §2.1
-  * S12; reference `load_config`, src/utils/helpers.py:149-286 loads
-  * OmegaConf YAML → dict). No external dependency ships in this
-  * environment, so this hand-rolled parser covers exactly the subset
-  * the reference's config files (cfgs directory) use:
+/** Pipeline config loader (SURVEY §2.1 S12; reference `load_config`,
+  * src/utils/helpers.py:149-286 loads OmegaConf YAML → dict) over
+  * snakeyaml-engine, which Spark ships, with the YAML 1.2 core schema:
+  * `null`/`~`, `true`/`True`/`TRUE`, ints, floats (`1e-4`, `.nan`,
+  * `.inf`), quoted and plain strings (URLs and `12:30` stay strings),
+  * and flow and block collections at any depth.
   *
-  *  - flat `key: value` scalar entries
-  *  - scalars: `null`/`~`, `true`/`false` (any case), int, float
-  *    (incl. scientific `1e-4`), quoted and bare strings
-  *  - flow sequences `[a, b, [c]]` (arbitrarily nested)
-  *  - flow mappings `{ "k": v, ... }`, possibly spanning multiple
-  *    lines (track.yaml's `thresholds:` block)
-  *  - block-style nesting to ARBITRARY depth: a bare `key:` followed
-  *    by indented `k: v` lines (block map) or `- item` lines (block
-  *    list), where any child may open its own deeper block. Block
-  *    list items stay scalars/flow collections (`- key: val` — a
-  *    list of maps — fails loudly rather than silently parsing as
-  *    the string "key: val"); mixed list/map entries at one level
-  *    and orphaned indentation fail loudly too.
-  *  - `#` comments (full-line and trailing) and blank lines
+  * Values are Scala types: `null`, `Boolean`, `Long`, `Double`,
+  * `String`, `List[Any]`, `Map[String, Any]` — the shapes OmegaConf's
+  * `to_container` yields, so override merging and dataclass dispatch
+  * mirror the reference. An integer beyond a Long loads as a Double.
   *
-  * Parsed values are Scala types: `null`, `Boolean`, `Long`, `Double`,
-  * `String`, `List[Any]`, `Map[String, Any]` — the same shapes
-  * OmegaConf's `to_container` yields, so override merging and dataclass
-  * dispatch mirror the reference exactly.
+  * Fails with IllegalArgumentException on malformed YAML, on a duplicate
+  * key (never last-wins), on a document whose top level is not a
+  * mapping, and on a block mapping directly inside a block list
+  * (`- key: val`; a flow `- {k: v}` is fine): the reference's configs
+  * hold no list of maps, so a mis-indented entry fails at load instead
+  * of reaching a typed field as a map.
+  *
+  * Edge cases: `.nan` and `.inf` load as Doubles, and a mixed-case
+  * `tRuE` stays a string, which `Configs.bool` lowercases.
   */
 object Yaml {
 
-  /** A non-blank logical line: indent column, trimmed content, raw
-    * text for error messages.
-    */
-  private case class Ln(indent: Int, s: String, raw: String)
+  private val settings = LoadSettings.builder().setSchema(new CoreSchema()).build()
 
-  def parse(text: String): Map[String, Any] = {
-    val ls = text.linesIterator
-      .map(stripComment)
-      .filter(_.trim.nonEmpty)
-      .map(l => Ln(l.indexWhere(c => c != ' ' && c != '\t'), l.trim, l))
-      .toArray
-    if (ls.isEmpty) return Map.empty
-    require(ls.head.indent == 0,
-      s"unexpected indentation (no open block): ${ls.head.raw}")
-    val (m, next) = parseMapBlock(ls, 0, 0)
-    require(next == ls.length,
-      s"unexpected indentation (no open block): ${ls(next).raw}")
-    m
-  }
-
-  /** Recursive block node at `from`, whose lines sit at `indent`: a
-    * list if the first line is a `- item`, a map otherwise. Block
-    * nesting recurses to ARBITRARY depth — a bare `key:` whose next
-    * line is deeper opens a child block at that line's indent.
-    * Mixing list and map entries at one level ends the block, which
-    * surfaces as the enclosing scope's fail-loud indentation error.
-    */
-  private def parseNode(ls: Array[Ln], from: Int, indent: Int): (Any, Int) =
-    if (ls(from).s == "-" || ls(from).s.startsWith("- "))
-      parseListBlock(ls, from, indent)
-    else parseMapBlock(ls, from, indent)
-
-  private def parseListBlock(ls: Array[Ln], from: Int,
-                             indent: Int): (List[Any], Int) = {
-    val buf = mutable.ListBuffer.empty[Any]
-    var i = from
-    while (i < ls.length && ls(i).indent == indent &&
-      (ls(i).s == "-" || ls(i).s.startsWith("- "))) {
-      val item = ls(i).s.drop(1).trim
-      // a bare `- key: val` item is a LIST OF MAPS in real YAML —
-      // parseValue would silently yield the string "key: val";
-      // flow/quoted items ({k: v}, "a: b") are fine
-      require(item.isEmpty || "{[\"'".contains(item.head) ||
-        indexOfKeyColon(item) < 0,
-        s"block list items must be scalars or flow collections, " +
-          s"not nested mappings: ${ls(i).raw}")
-      val (v, ni) = parseFlowValue(ls, i, item)
-      buf += v
-      i = ni
-    }
-    (buf.toList, i)
-  }
-
-  private def parseMapBlock(ls: Array[Ln], from: Int,
-                            indent: Int): (Map[String, Any], Int) = {
-    val m = mutable.LinkedHashMap.empty[String, Any]
-    var i = from
-    while (i < ls.length && ls(i).indent == indent &&
-      ls(i).s != "-" && !ls(i).s.startsWith("- ")) {
-      val line = ls(i).s
-      val colon = indexOfKeyColon(line)
-      require(colon > 0, s"unsupported YAML line (need 'key: value'): ${ls(i).raw}")
-      val key = unquote(line.substring(0, colon).trim)
-      val rest = line.substring(colon + 1).trim
-      if (rest.isEmpty) {
-        // bare `key:` — an explicit null, or a child block (map or
-        // list) opened by a deeper next line; recursion = any depth
-        if (i + 1 < ls.length && ls(i + 1).indent > indent) {
-          val (v, ni) = parseNode(ls, i + 1, ls(i + 1).indent)
-          m(key) = v
-          i = ni
-        } else { m(key) = null; i += 1 }
-      } else {
-        val (v, ni) = parseFlowValue(ls, i, rest)
-        m(key) = v
-        i = ni
+  def parse(text: String): Map[String, Any] =
+    try {
+      val doc = new Compose(settings).composeString(text)
+      if (!doc.isPresent) Map.empty else {
+        checkShape(doc.get)
+        toScala(new StandardConstructor(settings).constructSingleDocument(doc)) match {
+          case m: Map[String @unchecked, Any @unchecked] => m
+          case v => throw new IllegalArgumentException(s"a config's top level must be a mapping, not: $v")
+        }
       }
+    } catch {
+      case e: YamlEngineException => throw new IllegalArgumentException(e.getMessage, e)
     }
-    (m.toMap, i)
+
+  private def checkShape(n: Node): Unit = n match {
+    case s: SequenceNode => s.getValue.asScala.foreach {
+      case m: MappingNode if m.getFlowStyle == FlowStyle.BLOCK =>
+        throw new IllegalArgumentException("block list items must be scalars or flow " +
+          s"collections, not nested mappings: ${m.getStartMark.map[String](_.toString).orElse("")}")
+      case c => checkShape(c)
+    }
+    case m: MappingNode => m.getValue.asScala.foreach { t =>
+      checkShape(t.getKeyNode); checkShape(t.getValueNode)
+    }
+    case _ =>
   }
 
-  /** A scalar or flow collection starting on line `i` with text
-    * `first`; flow collections may span lines — accumulate until
-    * brackets balance (comments already stripped per physical line).
-    */
-  private def parseFlowValue(ls: Array[Ln], i: Int,
-                             first: String): (Any, Int) = {
-    var rest = first
-    var j = i
-    while (bracketDepth(rest) > 0 && j + 1 < ls.length) {
-      j += 1
-      rest = rest + " " + ls(j).s
-    }
-    require(bracketDepth(rest) == 0, s"unbalanced brackets in value: $first")
-    (parseValue(rest), j + 1)
+  private def toScala(v: Any): Any = v match {
+    case m: java.util.Map[_, _] => m.asScala.map { case (k, x) => String.valueOf(k) -> toScala(x) }.toMap
+    case l: java.util.List[_] => l.asScala.map(toScala).toList
+    case i: java.lang.Integer => i.toLong
+    case b: java.math.BigInteger => b.doubleValue
+    case x => x
   }
 
   /** Scalar coercion for a single CLI `key=value` override — the same
     * inference chain as the reference (int → float → bool → str,
     * src/utils/helpers.py:120-132). NOT used for YAML values, which
-    * have their own literal syntax (`parseValue`).
+    * have their own literal syntax.
     */
   def inferScalar(v: String): Any = {
     val t = v.trim
@@ -142,105 +85,6 @@ object Yaml {
           case _ => t
         }))
   }
-
-  // ---- internals ----
-
-  /** Index of the key/value `:` — the first colon outside quotes. */
-  private def indexOfKeyColon(line: String): Int = {
-    var i = 0
-    var quote: Char = 0
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else if (c == '"' || c == '\'') quote = c
-      else if (c == ':' &&
-        (i + 1 >= line.length || line.charAt(i + 1).isWhitespace))
-        // YAML's key rule: ':' ends a key only before whitespace/EOL —
-        // a bare ':' inside a plain scalar (http://x, 12:30) is data,
-        // and treating it as a key rejected valid list items
-        return i
-      i += 1
-    }
-    -1
-  }
-
-  /** Strips a `#` comment, respecting quotes. */
-  private def stripComment(line: String): String = {
-    var i = 0
-    var quote: Char = 0
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else if (c == '"' || c == '\'') quote = c
-      else if (c == '#') return line.substring(0, i)
-      i += 1
-    }
-    line
-  }
-
-  private def bracketDepth(s: String): Int = {
-    var depth = 0
-    var quote: Char = 0
-    for (c <- s) {
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else if (c == '"' || c == '\'') quote = c
-      else if (c == '[' || c == '{') depth += 1
-      else if (c == ']' || c == '}') depth -= 1
-    }
-    depth
-  }
-
-  private[config] def parseValue(raw: String): Any = {
-    val s = raw.trim
-    if (s.isEmpty || s == "null" || s == "~") null
-    else if (s.startsWith("[")) parseFlowSeq(s)
-    else if (s.startsWith("{")) parseFlowMap(s)
-    else if (s.startsWith("\"") || s.startsWith("'")) unquote(s)
-    else s.toLowerCase match {
-      case "true" => true
-      case "false" => false
-      case _ => toLong(s).getOrElse(toDouble(s).getOrElse(s))
-    }
-  }
-
-  private def parseFlowSeq(s: String): List[Any] = {
-    require(s.endsWith("]"), s"unterminated sequence: $s")
-    splitTop(s.substring(1, s.length - 1)).map(parseValue)
-  }
-
-  private def parseFlowMap(s: String): Map[String, Any] = {
-    require(s.endsWith("}"), s"unterminated mapping: $s")
-    val entries = splitTop(s.substring(1, s.length - 1)).map { e =>
-      val colon = indexOfKeyColon(e)
-      require(colon > 0, s"mapping entry needs 'key: value': $e")
-      unquote(e.substring(0, colon).trim) -> parseValue(e.substring(colon + 1))
-    }
-    // LinkedHashMap via foldLeft keeps insertion order deterministic
-    entries.foldLeft(mutable.LinkedHashMap.empty[String, Any])(_ += _).toMap
-  }
-
-  /** Splits on top-level commas (outside brackets and quotes). */
-  private def splitTop(s: String): List[String] = {
-    val parts = mutable.ListBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    for (c <- s) {
-      if (quote != 0) { if (c == quote) quote = 0; cur += c }
-      else if (c == '"' || c == '\'') { quote = c; cur += c }
-      else if (c == '[' || c == '{') { depth += 1; cur += c }
-      else if (c == ']' || c == '}') { depth -= 1; cur += c }
-      else if (c == ',' && depth == 0) { parts += cur.result(); cur.clear() }
-      else cur += c
-    }
-    if (cur.result().trim.nonEmpty) parts += cur.result()
-    parts.toList.map(_.trim).filter(_.nonEmpty)
-  }
-
-  private def unquote(s: String): String =
-    if (s.length >= 2 && ((s.head == '"' && s.last == '"') ||
-      (s.head == '\'' && s.last == '\''))) s.substring(1, s.length - 1)
-    else s
 
   private def toLong(s: String): Option[Long] =
     try Some(java.lang.Long.parseLong(s)) catch { case _: NumberFormatException => None }

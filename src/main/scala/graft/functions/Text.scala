@@ -61,14 +61,4 @@ object Text {
     */
   def fingerprint(text: Column): Column =
     md5s(concat_ws(" ", array_sort(distinctTokens(text))))
-
-  // Language-ID stopword lists (tiny n-gram-free heuristic; the point is
-  // the *operator shape* — counting list hits per language and taking a
-  // deterministic argmax — not linguistic accuracy).
-  val enStops: Seq[String] = Seq("the", "a", "fast", "slow", "small")
-  val deStops: Seq[String] = Seq("der", "die", "und", "data", "window")
-  val esStops: Seq[String] = Seq("el", "la", "de", "join", "row")
-
-  def inList(tok: Column, words: Seq[String]): Column =
-    tok.isin(words: _*)
 }

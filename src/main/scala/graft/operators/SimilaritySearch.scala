@@ -12,8 +12,9 @@ import graft.functions.{Text, Vectors}
   *   - `bruteForceTopK` — exact cosine top-k; the correctness baseline.
   *     Queries × corpus is a broadcast nested-loop: fine when the query
   *     set is small (the usual ANN-serving shape), wrong for all-pairs.
-  *   - `lshTopK` — random-hyperplane LSH: corpus and queries bucketed by
-  *     sign-bit signature; candidates share a bucket, then exact rerank.
+  *   - `lshSignature` — random-hyperplane LSH: corpus and queries are
+  *     bucketed by sign-bit signature; candidates share a bucket, then
+  *     exact rerank (s03_lsh_topk).
   *     The all-pairs cost collapses to per-bucket joins. Hyperplanes are
   *     derived from MD5 of (plane, dim) — deterministic on any engine,
   *     no RNG state to ship.
@@ -482,9 +483,7 @@ object SimilaritySearch {
   final case class IvfPqModel(cents: Array[(Int, Array[Float])],
                               cb: Array[Array[Array[Float]]],
                               cNorm: Array[Array[Long]],
-                              m: Int, sub: Int, codebookSize: Int) {
-    private[operators] def cellScores(vec: Column) = cellScoresAll(vec, cents)
-  }
+                              m: Int, sub: Int, codebookSize: Int)
 
   def ivfPqModel(corpus: DataFrame, nlist: Int, m: Int, codebookSize: Int,
                  idCol: String = "vec_id", vecCol: String = "embedding",
@@ -1135,23 +1134,4 @@ object SimilaritySearch {
       .withColumn("__b", cellBest(col("__v"), cents))
       .select(col(idCol), col("__b.cid").as("cluster"),
         col("__b.ccos").as("cos_centroid"))
-
-  /** ANN via LSH buckets + exact rerank. Multi-probe is the `numTables`
-    * axis (vary the plane seed offset) — see `lshTables`; one table with
-    * `numPlanes` bits already demonstrates the scale path.
-    */
-  def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int, numPlanes: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = lshSignature(queries, numPlanes, vecCol = vecCol)
-      .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"), col("lsh_bucket"))
-    val c = lshSignature(corpus, numPlanes, vecCol = vecCol)
-      .select(col(idCol).as("corpus_id"), col(vecCol).as("c_vec"), col("lsh_bucket"))
-    val pairs = q.join(c, Seq("lsh_bucket"))
-      .filter(col("query_id") =!= col("corpus_id"))
-      .withColumn("cosine", Vectors.cosine(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    pairs.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("query_id"), col("corpus_id"), col("cosine"), col("rn").as("rank"))
-  }
 }

@@ -701,7 +701,10 @@ object ExtQ {
     // lossless.
     Q("s03_mot_roundtrip", Seq(Derived.TracksStore),
       (s, d) => {
-        val tmp = s"/tmp/graft_mot_rt_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
+        // one output dir per dataset, recorded with the store dirs so a
+        // throwaway dataset copy's cleanup finds it
+        val tmp = graft.sources.ArtifactStore.datasetDir("graft_mot_rt",
+          Derived.TracksStore.sources.map(new java.io.File(d, _)))
         val tracks = Derived.table(s, d, "tracks")
           .select(format_string("%06d", col("frameIdx")).as("frame"),
             col("id"), col("x"), col("y"), col("w"), col("h"), col("conf"))

@@ -95,6 +95,12 @@ object ArtifactStore {
     }.toSeq
   }
 
+  /** `<tmp>/<kind>/<datasetHash>` for a query's own output derived from
+    * `sources`, recorded like a store's so [[datasetDirsUnder]] names it.
+    */
+  def datasetDir(kind: String, sources: Seq[java.io.File]): String =
+    locate(kind, sources, "")._1
+
   /** The artifact directory this (kind, sources, sub) resolves to —
     * shared by [[resolve]] (build-if-missing) and [[resolveExisting]]
     * (fail-if-missing) so the two can never address different paths.

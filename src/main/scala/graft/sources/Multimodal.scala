@@ -24,15 +24,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("path", StringType),
-    StructField("modality", StringType), // image | audio | video
-    StructField("content", BinaryType),
-    StructField("meta_width", IntegerType),
-    StructField("meta_height", IntegerType),
-    StructField("meta_duration_ms", LongType)
-  ))
-
   /** Directory of media files → media table (S10 analogue;
     * reference ext-sniffing at src/utils/helpers.py:665-685).
     */

@@ -307,4 +307,14 @@ class ConfigSpec extends AnyFunSuite {
       Configs.load("d/detect.yaml", "dataset: x\nwindow_size: 77\n")
     }
   }
+
+  test("a duplicate key and a non-mapping document fail loudly") {
+    // last-wins would silently drop the first value
+    intercept[IllegalArgumentException] {
+      Yaml.parse("a: 1\na: 2\n")
+    }
+    intercept[IllegalArgumentException] {
+      Yaml.parse("- a\n- b\n")
+    }
+  }
 }

@@ -22,7 +22,6 @@ class NeedsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val declared = SparkEntry.catalog.flatMap(_.needs).distinct
 
   private val copies = scala.collection.mutable.ArrayBuffer.empty[Path]
-  private val stores = scala.collection.mutable.LinkedHashSet.empty[Path]
 
   private def freshCopy(): String = {
     val dir = Files.createTempDirectory("needs_spec_")
@@ -37,21 +36,18 @@ class NeedsSpec extends AnyFunSuite with BeforeAndAfterAll {
     tmp.resolve(rel.getName(0)).resolve(rel.getName(1))
   }
 
-  private def resolve(a: Artifact, d: String): String = {
-    val dir = a.resolve(spark, d)
-    stores += storeRoot(dir)
-    dir
-  }
+  private def resolve(a: Artifact, d: String): String = a.resolve(spark, d)
 
   private def rm(p: Path): Unit = {
     def go(f: File): Unit = { Option(f.listFiles()).foreach(_.foreach(go)); f.delete() }
     go(p.toFile)
   }
 
-  override def afterAll(): Unit = {
+  override def afterAll(): Unit = copies.foreach { c =>
     // a kind root goes too once no dataset is left in it
-    stores.foreach { p => rm(p); p.getParent.toFile.delete() }
-    copies.foreach(rm)
+    ArtifactStore.datasetDirsUnder(c.toFile).map(Paths.get(_))
+      .foreach { p => rm(p); p.getParent.toFile.delete() }
+    rm(c)
   }
 
   test("every declared artifact and two anchor frame counts coexist, built in either order") {
