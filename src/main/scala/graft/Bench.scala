@@ -157,31 +157,28 @@ object Bench {
     // A failed warmup must degrade to un-warmed timings, never abort
     // the whole bench before any JSON is emitted (timed per-query
     // failures are caught and reported; the warmup deserves no
-    // stronger kill-switch). The temp dir is deleted either way.
+    // stronger kill-switch). The temp dir and the sink dir the drains
+    // write for it are deleted either way.
     if (sorted.exists(q => q.name.startsWith("st") || q.name.startsWith("k10"))) {
       import org.apache.spark.sql.functions._
-      val dir = java.nio.file.Files.createTempDirectory("graft_stwarm")
+      val dir = java.nio.file.Files.createTempDirectory("graft_stwarm").toFile
       try {
-        val ev = dir.resolve("ev").toString
+        val ev = new java.io.File(dir, "ev").toString
         spark.range(200)
           .selectExpr("id", "timestamp_micros(id * 1000000) AS et", "id % 7 AS k")
           .write.mode("overwrite").parquet(ev)
         val schema = spark.read.parquet(ev).schema
         def src = spark.readStream.schema(schema).parquet(ev)
-        def drain(df: org.apache.spark.sql.DataFrame, mode: String, name: String): Unit = {
-          val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          spark.catalog.dropTempView(name)
-        }
+        def drain(df: org.apache.spark.sql.DataFrame, mode: String): Unit =
+          streaming.Drain.toSink(df, "graft_drain_warmup", dir.toString, Seq("ev"), mode)(identity)
         graft.queries.ExtQ.withStreamShuffle(spark) {
           drain(src.withWatermark("et", "1 hour")
-            .groupBy(window(col("et"), "1 hour")).count(), "complete", "stwarm1")
+            .groupBy(window(col("et"), "1 hour")).count(), "complete")
           drain(src.withWatermark("et", "1 hour")
-            .dropDuplicatesWithinWatermark("id"), "append", "stwarm2")
+            .dropDuplicatesWithinWatermark("id"), "append")
           drain(src.withWatermark("et", "1 second")
             .groupBy(col("k"), session_window(col("et"), "10 minutes"))
-            .agg(count(lit(1)).as("n")), "append", "stwarm3")
+            .agg(count(lit(1)).as("n")), "append")
           val a = src.select(col("id").as("aid"), col("et").as("aet"))
             .withWatermark("aet", "1 hour")
           val b = src.select(col("id").as("bid"), col("et").as("bet"))
@@ -189,16 +186,15 @@ object Bench {
           drain(a.join(b, col("aid") === col("bid") &&
               col("bet") >= col("aet") &&
               col("bet") <= col("aet") + expr("interval 1 hour"))
-            .select(col("aid"), col("bid")), "append", "stwarm4")
+            .select(col("aid"), col("bid")), "append")
         }
       } catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println("[bench] warm-up failed, continuing untimed:")
           e.printStackTrace()
       } finally {
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(p => try java.nio.file.Files.deleteIfExists(p) catch {
-            case _: java.io.IOException => () })
+        (sources.ArtifactStore.datasetDirsUnder(dir).map(new java.io.File(_)) :+ dir)
+          .foreach(f => org.apache.hadoop.fs.FileUtil.fullyDelete(f))
       }
     }
     // ARTIFACT PRE-TOUCH (untimed): the persisted stores the selected
@@ -502,14 +498,14 @@ object Bench {
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Between-queries isolation: drop the session's memoized relations
-    * and handles, every cached relation, and drained streams' leftovers
-    * (memory-sink views + loaded state-store providers; across ~100
-    * queries that accumulation inflates later streaming numbers ~3x,
-    * see StreamHygiene).
+    * and handles, every cached relation, the temp views queries leave,
+    * and drained streams' loaded state-store providers (across ~100
+    * queries that accumulation inflated later streaming numbers ~3x,
+    * see `streaming.Drain.reset`).
     */
   def isolate(spark: SparkSession): Unit = {
     SessionMemo.reset(spark)
     spark.catalog.clearCache()
-    streaming.StreamHygiene.reset(spark)
+    streaming.Drain.reset(spark)
   }
 }

@@ -46,7 +46,7 @@ object SessionMemo {
     }
 
   /** Track a persisted DataFrame for unpersist at `owner`'s next
-    * [[reset]]. Frames built inside `foreachBatch` must name the outer
+    * [[reset]]. Frames built inside a per-batch function must name the outer
     * session: Structured Streaming hands the batch a CLONED session,
     * so `df.sparkSession` would never be reset.
     */

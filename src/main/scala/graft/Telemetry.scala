@@ -15,8 +15,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One structured record per query run through [[Telemetry.query]]: its
   * wall split into builder and plan, process CPU and GC, codegen, the
-  * jobs, stages and tasks it ran, shuffle and spill bytes, Catalyst
-  * phases, artifact builds, and every named `observe()` metric.
+  * jobs, stages and tasks it ran, shuffle, spill and task-result bytes,
+  * Catalyst phases, artifact builds, and every named `observe()` metric.
   *
   * Attribution: a job carries the running query's id in the local
   * property [[Telemetry.Tag]], and its stages and tasks follow the job.
@@ -108,6 +108,8 @@ final class Telemetry(spark: SparkSession) {
               m.shuffleReadMetrics.localBytesRead
             q.shuffleWriteB += m.shuffleWriteMetrics.bytesWritten
             q.spillB += m.diskBytesSpilled
+            q.resultB += m.resultSize
+            q.maxTaskResultB = math.max(q.maxTaskResultB, m.resultSize)
           }
         }
       }
@@ -168,6 +170,8 @@ object Telemetry {
     @volatile var failure: Option[Throwable] = None
     @volatile var builderNs, planNs, cpuNs, gcMs, compiles, compileNs, artifactBuilds = 0L
     var jobs, stages, tasks, taskCpuNs, shuffleReadB, shuffleWriteB, spillB = 0L
+    /** Serialized task results sent to the driver: the sum, and the largest one. */
+    var resultB, maxTaskResultB = 0L
     var analysisMs, optimizationMs, planningMs = 0L
     /** Named `observe()` metrics; a name observed twice keeps its last row. */
     val metrics = mutable.LinkedHashMap.empty[String, Row]
@@ -190,6 +194,7 @@ object Telemetry {
           ("task_cpu_s" -> taskCpuNs / 1e9) ~
           ("shuffle_read_bytes" -> shuffleReadB) ~ ("shuffle_write_bytes" -> shuffleWriteB) ~
           ("spill_bytes" -> spillB) ~
+          ("result_bytes" -> resultB) ~ ("max_task_result_bytes" -> maxTaskResultB) ~
           ("analysis_s" -> analysisMs / 1e3) ~ ("optimization_s" -> optimizationMs / 1e3) ~
           ("planning_s" -> planningMs / 1e3) ~
           ("artifact_builds" -> artifactBuilds) ~

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Derived, Tables}
+import graft.streaming.Drain
 import graft.operators.{DetectFilters, TextAnalysis}
 import graft.functions.Text
 
@@ -21,15 +22,6 @@ object ExtQ {
   lazy val mask: Array[Array[Boolean]] =
     Array.tabulate(MaskN, MaskN)((r, c) => ((r / 40) + (c / 40)) % 2 == 0)
   lazy val maskIntegral: Array[Long] = DetectFilters.integralImage(mask)
-
-  /** Memory-sink table name unique per source dir: md5-hex suffix is
-    * sign-safe (hashCode could be Int.MinValue, whose abs is negative —
-    * a dash breaks identifier parsing) and collision-free in practice,
-    * so two dirs queried in one session never share a sink table.
-    */
-  private[queries] def sinkName(prefix: String, d: String): String =
-    prefix + java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
 
   /** Runs `body` (a streaming start+drain) with `spark.sql.shuffle.
     * partitions` lowered to `parts`, restoring the previous value after.
@@ -51,41 +43,6 @@ object ExtQ {
     val prev = s.conf.get(key)
     s.conf.set(key, parts.toString)
     try body finally s.conf.set(key, prev)
-  }
-
-  /** Bounded parquet sink dir for foreachBatch streaming queries: one
-    * directory per (kind, dataset), WIPED before each run — a fresh
-    * createTempDirectory per invocation would leak one full output
-    * dump per bench round/sweep point forever.
-    */
-  private def boundedSink(kind: String, d: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val tag = md.digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val p = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), kind, tag)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(p)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-    }
-    java.nio.file.Files.createDirectories(p)
-    p.toString
-  }
-
-  /** Read a [[boundedSink]] back after the stream drains. A run whose
-    * batches emitted ZERO rows leaves only _SUCCESS markers (Spark
-    * writes no part files for empty appends), where a bare
-    * read.parquet would fail schema inference — fall back to an empty
-    * result of the schema the batches carried.
-    */
-  private def readSink(s: org.apache.spark.sql.SparkSession, outDir: String,
-                       schema: org.apache.spark.sql.types.StructType) = {
-    val files = Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
-    if (files.exists(_.getName.endsWith(".parquet"))) s.read.parquet(outDir)
-    else s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
   /** ONE verify tail for the streaming ingest-gate oracles (st6 capped
@@ -138,57 +95,28 @@ object ExtQ {
     TextQ.BandStore.resolve(s, d)  // build/refresh at batch parallelism
     val gramsB = TextQ.gramSetsOf(s, d)  // memoized gram artifact
       .select(col("doc_id").as("doc_b"), col("grams").as("grams_b"))
-    val outDir = boundedSink(outKind, d)
-    // NOT withStreamShuffle: this stream is STATELESS (source →
-    // foreachBatch, no state store), so the 4-partition state-layout
-    // throttle has nothing to protect — it only squeezed the
-    // per-trigger probe+verify (a CPU-heavy batch join inside
-    // foreachBatch, ~12-16 CPU-s at sf0.1) onto ≤4 tasks. At batch
-    // parallelism the verify spreads across the session's shuffle
-    // partitions (measured round 21: st6 4.4 s → ~2.5 s steady).
-    locally {
-      val stream = s.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(d)
-        .filter(col("source") === "src0")
-        .select(col("doc_id").as("doc_a"), fp(col("text")).as("grams_a"),
-          posexplode(call_function("graft_bandsigs",
-            Text.tokens(col("text")), lit(16), lit(2))))
-        .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_sig"))
-      // ONE probe plan, shared by the per-trigger batches and the
-      // static schema derivation below — analysis-only on the
-      // streaming DF, so a zero-trigger stream (glob matching no
-      // file) still hands readSink a real schema instead of null
-      def probeRes(b: org.apache.spark.sql.DataFrame,
-                   static: org.apache.spark.sql.DataFrame) =
-        b.join(static, Seq("band", "band_sig"))
-          .join(gramsB, Seq("doc_b"))
-          .withColumn("inter",
-            call_function("graft_inter_size", col("grams_a"), col("grams_b")))
-          .withColumn("unionSz",
-            size(col("grams_a")) + size(col("grams_b")) - col("inter"))
-          .withColumn("jaccard",
-            when(col("unionSz") === 0, 0.0)
-              .otherwise(col("inter").cast("double") / col("unionSz")))
-          .filter(col("jaccard") >= 0.5)
-          .select(col("doc_a"), col("doc_b"), col("band"),
-            round(col("jaccard"), 9).as("jaccard"))
-      val outSchema = probeRes(stream,
-        TextQ.prunedCorpusBands(s, d, Seq.empty)
-          .select(col("band"), col("band_sig"), col("doc_id").as("doc_b"))).schema
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val b = batch.persist()
-          try {
-            val prefixes = b.select(TextQ.sigPfx(col("band_sig")))
-              .distinct().collect().map(_.getString(0)).toSeq
-            val res = probeRes(b, staticSideOf(prefixes))
-            res.write.mode("append").parquet(outDir)
-          } finally { b.unpersist(); () }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readSink(s, outDir, outSchema)
+    val stream = s.readStream.schema(docs.schema)
+      .option("pathGlobFilter", "documents.parquet").parquet(d)
+      .filter(col("source") === "src0")
+      .select(col("doc_id").as("doc_a"), fp(col("text")).as("grams_a"),
+        posexplode(call_function("graft_bandsigs",
+          Text.tokens(col("text")), lit(16), lit(2))))
+      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_sig"))
+    Drain.toSink(stream, outKind, d, Seq("documents.parquet"), persistBatch = true) { b =>
+      val prefixes = b.select(TextQ.sigPfx(col("band_sig")))
+        .distinct().collect().map(_.getString(0)).toSeq
+      b.join(staticSideOf(prefixes), Seq("band", "band_sig"))
+        .join(gramsB, Seq("doc_b"))
+        .withColumn("inter",
+          call_function("graft_inter_size", col("grams_a"), col("grams_b")))
+        .withColumn("unionSz",
+          size(col("grams_a")) + size(col("grams_b")) - col("inter"))
+        .withColumn("jaccard",
+          when(col("unionSz") === 0, 0.0)
+            .otherwise(col("inter").cast("double") / col("unionSz")))
+        .filter(col("jaccard") >= 0.5)
+        .select(col("doc_a"), col("doc_b"), col("band"),
+          round(col("jaccard"), 9).as("jaccard"))
     }
   }
 
@@ -222,49 +150,45 @@ object ExtQ {
         posexplode(call_function("graft_bandsigs",
           Text.tokens(col("text")), lit(16), lit(2))))
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_sig"))
-    val q = banded.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val b = batch.persist()
-        try {
-          val prefixes = b.select(TextQ.sigPfx(col("band_sig")))
-            .distinct().collect().map(_.getString(0)).toSeq
-          val corpus = TextQ.prunedCorpusBands(s, d, prefixes)
-          val others = seen.map(corpus.unionByName(_)).getOrElse(corpus)
-          // candidates = batch × (corpus ∪ earlier ∪ itself): every
-          // pair touching ≥1 doc of this batch, canonicalized like d17
-          val cands = b.select(col("band"), col("band_sig"), col("doc_id").as("doc_x"))
-            .join(others.unionByName(b.select("band", "band_sig", "doc_id"))
-              .select(col("band"), col("band_sig"), col("doc_id").as("doc_y")),
-              Seq("band", "band_sig"))
-            .filter(col("doc_x") =!= col("doc_y"))
-            .select(least(col("doc_x"), col("doc_y")).as("doc_a"),
-              greatest(col("doc_x"), col("doc_y")).as("doc_b"))
-            .distinct()
-          val edges = Dedup.jaccardPairsFromSets(grams, cands,
-              minJaccard = TextQ.ClusterJaccard)
-            .select("doc_a", "doc_b")
-          val prev = labels
-          val next = Dedup.ccIncremental(prev, edges).persist()
-          next.count()  // materialize: bounded lineage across batches
-          if (labelsOwned) prev.unpersist()  // superseded snapshot
-          labels = next
-          labelsOwned = true
-          val batchBands = b.select("band", "band_sig", "doc_id").persist()
-          batchBands.count()
-          batchBandHandles += batchBands
-          seen = Some(seen.map(_.unionByName(batchBands)).getOrElse(batchBands))
-        } finally { b.unpersist(); () }
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Drain.run(banded) { (batch, _) =>
+      val b = batch.persist()
+      try {
+        val prefixes = b.select(TextQ.sigPfx(col("band_sig")))
+          .distinct().collect().map(_.getString(0)).toSeq
+        val corpus = TextQ.prunedCorpusBands(s, d, prefixes)
+        val others = seen.map(corpus.unionByName(_)).getOrElse(corpus)
+        // candidates = batch × (corpus ∪ earlier ∪ itself): every
+        // pair touching ≥1 doc of this batch, canonicalized like d17
+        val cands = b.select(col("band"), col("band_sig"), col("doc_id").as("doc_x"))
+          .join(others.unionByName(b.select("band", "band_sig", "doc_id"))
+            .select(col("band"), col("band_sig"), col("doc_id").as("doc_y")),
+            Seq("band", "band_sig"))
+          .filter(col("doc_x") =!= col("doc_y"))
+          .select(least(col("doc_x"), col("doc_y")).as("doc_a"),
+            greatest(col("doc_x"), col("doc_y")).as("doc_b"))
+          .distinct()
+        val edges = Dedup.jaccardPairsFromSets(grams, cands,
+            minJaccard = TextQ.ClusterJaccard)
+          .select("doc_a", "doc_b")
+        val prev = labels
+        val next = Dedup.ccIncremental(prev, edges).persist()
+        next.count()  // materialize: bounded lineage across batches
+        if (labelsOwned) prev.unpersist()  // superseded snapshot
+        labels = next
+        labelsOwned = true
+        val batchBands = b.select("band", "band_sig", "doc_id").persist()
+        batchBands.count()
+        batchBandHandles += batchBands
+        seen = Some(seen.map(_.unionByName(batchBands)).getOrElse(batchBands))
+      } finally { b.unpersist(); () }
+    }
     // earlier batches' band snapshots are dead once the stream drains
     // (only the final labels outlive the loop, consumed by the caller —
     // registered so the session memo's reset releases that last handle
     // too instead of pinning one label table per invocation)
     batchBandHandles.foreach(_.unpersist())
-    // explicit owner: `labels` was built inside foreachBatch, whose
-    // cloned session would never match the caller's reset(s)
+    // explicit owner: `labels` was built inside the per-batch function,
+    // whose cloned session would never match the caller's reset(s)
     if (labelsOwned) graft.SessionMemo.register(labels, s)
     labels
       .withColumn("cluster_size",
@@ -307,7 +231,7 @@ object ExtQ {
     * writes every chunk into a PER-TRIGGER STAGING directory (wiped at
     * trigger start, dot-prefixed so sink reads ignore it) and publishes
     * all staged part files into the sink with one rename pass at
-    * trigger end — a foreachBatch retry after a partial chunk sequence
+    * trigger end — a trigger retry after a partial chunk sequence
     * re-stages from scratch instead of re-appending already-committed
     * chunks, so the duplicate window shrinks back to the sink's
     * pre-existing one commit per trigger (a crash mid-rename-pass can
@@ -392,28 +316,12 @@ object ExtQ {
     val np = TextQ.resolveNprobe(s, index, nprobe)
     val model = SimilaritySearch.ivfPqModel(
       emb, TextQ.AnnNlist, TextQ.AnnM, TextQ.AnnCb)
-    val outDir = boundedSink("graft_st8_out", d)
-    // NOT withStreamShuffle: stateless stream (source -> foreachBatch,
-    // no state store) - the 4-partition throttle only squeezed the
-    // per-trigger batch jobs onto <=4 tasks (see streamIngestDedup)
-    locally {
-      // schema derived STATICALLY from the same plan (analysis only,
-      // nothing executes) so a zero-trigger stream — e.g. a glob
-      // matching no file — returns an empty typed result from
-      // readSink instead of NPE-ing on a never-assigned capture
-      val outSchema = SimilaritySearch.ivfPqSearch(
-        emb.limit(0), emb, TextQ.storeRead(s, index),
-        model, k = 5, nprobe = np, refine = 20).schema
-      val q = queryStream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          annProbeTrigger(s, emb, index, model, np, maxQueryBatch,
-            outDir)(batch, bid)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readSink(s, outDir, outSchema)
-    }
+    val outDir = Drain.sinkDir(s, "graft_drain_st8", d, Seq("embeddings.parquet"))
+    Drain.run(queryStream)(annProbeTrigger(s, emb, index, model, np, maxQueryBatch, outDir))
+    // typed read: an empty sink (no trigger, or no probed cell) is an
+    // empty result, and no job infers the schema
+    s.read.schema(SimilaritySearch.ivfPqSearch(emb.limit(0), emb, TextQ.storeRead(s, index),
+      model, k = 5, nprobe = np, refine = 20).schema).parquet(outDir)
   }
 
   /** The st9 micro-batch classifier probe, shared with the multi-batch
@@ -429,27 +337,9 @@ object ExtQ {
   private[graft] def streamClassify(
       s: org.apache.spark.sql.SparkSession, d: String,
       docStream: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import graft.operators.TextAnalysis
     val model = TextQ.clfModelOfStore(s, d)
-    val outDir = boundedSink("graft_st9_out", d)
-    // NOT withStreamShuffle: stateless stream (source -> foreachBatch,
-    // no state store) - the 4-partition throttle only squeezed the
-    // per-trigger batch jobs onto <=4 tasks (see streamIngestDedup)
-    locally {
-      // schema derived statically (analysis only) so a zero-trigger
-      // stream returns an empty typed result instead of NPE-ing
-      val outSchema = TextAnalysis.hashClassifierScoreUnder(
-        model, Tables.documents(s, d).limit(0)).schema
-      val q = docStream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          TextAnalysis.hashClassifierScoreUnder(model, batch)
-            .write.mode("append").parquet(outDir)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readSink(s, outDir, outSchema)
-    }
+    Drain.toSink(docStream, "graft_drain_st9", d, Seq("documents.parquet"))(
+      TextAnalysis.hashClassifierScoreUnder(model, _))
   }
 
   /** The st10 micro-batch decontamination probe, shared with the
@@ -466,27 +356,9 @@ object ExtQ {
   private[graft] def streamDecontam(
       s: org.apache.spark.sql.SparkSession, d: String,
       docStream: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import graft.operators.TextAnalysis
     val model = TextQ.decontamModelOfStore(s, d)
-    val outDir = boundedSink("graft_st10_out", d)
-    // NOT withStreamShuffle: stateless stream (source -> foreachBatch,
-    // no state store) - the 4-partition throttle only squeezed the
-    // per-trigger batch jobs onto <=4 tasks (see streamIngestDedup)
-    locally {
-      // schema derived statically (analysis only) so a zero-trigger
-      // stream returns an empty typed result instead of NPE-ing
-      val outSchema = TextAnalysis.decontaminateUnder(
-        model, Tables.documents(s, d).limit(0)).schema
-      val q = docStream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          TextAnalysis.decontaminateUnder(model, batch)
-            .write.mode("append").parquet(outDir)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readSink(s, outDir, outSchema)
-    }
+    Drain.toSink(docStream, "graft_drain_st10", d, Seq("documents.parquet"))(
+      TextAnalysis.decontaminateUnder(model, _))
   }
 
   /** The st11 micro-batch delta-ingest, shared with the multi-batch
@@ -506,44 +378,18 @@ object ExtQ {
       s: org.apache.spark.sql.SparkSession, d: String,
       vecStream: org.apache.spark.sql.DataFrame,
       nprobe: Option[Int] = None): org.apache.spark.sql.DataFrame = {
-    import graft.operators.SimilaritySearch
     val emb = Tables.embeddings(s, d)
-    val model = SimilaritySearch.ivfPqModel(
-      emb.filter(!TextQ.SemBatchPred), TextQ.AnnNlist, TextQ.AnnM, TextQ.AnnCb)
+    val model = TextQ.annCorpusModel(emb)
     val index = TextQ.annCorpusIndexOfStore(s, d)
     // `nprobe = None` resolves through the CORPUS index generation's
-    // sidecar (the streamAnnProbe posture — one serving entry rule);
-    // catalog st11 pins Some(2) so its oracle hash can never depend on
-    // whether a maintenance sweep stored a suggestion
+    // sidecar (the streamAnnProbe posture — one serving entry rule),
+    // before the stream runs; catalog st11 pins Some(2) so its oracle
+    // hash can never depend on whether a maintenance sweep stored a
+    // suggestion
     val np = TextQ.resolveNprobe(s, index, nprobe)
-    val deltaDir = boundedSink("graft_st11_delta", d)
-    // NOT withStreamShuffle: stateless stream (source -> foreachBatch,
-    // no state store) - the 4-partition throttle only squeezed the
-    // per-trigger batch jobs onto <=4 tasks (see streamIngestDedup)
-    locally {
-      val deltaSchema = SimilaritySearch.ivfPqEncode(emb.limit(0), model).schema
-      val q = vecStream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          SimilaritySearch.ivfPqEncode(batch, model)
-            .write.mode("append").parquet(deltaDir)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val delta = readSink(s, deltaDir, deltaSchema)
-      val queries = emb.filter(col("vec_id") < 10)
-      val cells = SimilaritySearch.ivfPqProbedCells(queries, model, nprobe = np)
-      val main = TextQ.storeRead(s, index)
-        .where(col("cell").isin(cells: _*))
-        .select(col("vec_id"), col("cell"), col("codes"))
-      // growth-guarded union (TextQ.annDeltaCoded): the probe emits
-      // its delta/main row balance as an observe metric
-      val coded = TextQ.annDeltaCoded(main, delta
-        .where(col("cell").isin(cells: _*))
-        .select(col("vec_id"), col("cell"), col("codes")))
-      SimilaritySearch.ivfPqSearch(queries, emb, coded, model,
-        k = 5, nprobe = np, refine = 20)
-    }
+    val delta = Drain.toSink(vecStream, "graft_drain_st11", d, Seq("embeddings.parquet"))(
+      graft.operators.SimilaritySearch.ivfPqEncode(_, model))
+    TextQ.deltaProbe(s, emb, model, index, delta, emb.filter(col("vec_id") < 10), Some(np))
   }
 
   val defs: Seq[Q] = Seq(
@@ -702,7 +548,9 @@ object ExtQ {
     Q("s03_mot_roundtrip", Seq(Derived.TracksStore),
       (s, d) => {
         // one output dir per dataset, recorded with the store dirs so a
-        // throwaway dataset copy's cleanup finds it
+        // throwaway dataset copy's cleanup finds it; the dirs of the
+        // former `graft_mot_rt_<data dir>` naming are deleted
+        graft.sources.ArtifactStore.retirePrefixed(s, "graft_mot_rt_")
         val tmp = graft.sources.ArtifactStore.datasetDir("graft_mot_rt",
           Derived.TracksStore.sources.map(new java.io.File(d, _)))
         val tracks = Derived.table(s, d, "tracks")
@@ -725,24 +573,18 @@ object ExtQ {
         |FROM tracks""".stripMargin)),
 
     // M7 — real Structured Streaming: file source → event-time tumbling
-    // window (watermarked) → memory sink, Trigger.AvailableNow. The
+    // window (watermarked) → parquet sink, drained (AvailableNow). The
     // oracle is the batch equivalent — exact agreement because the
     // stream drains completely.
     Q("st1_stream_window",
       (s, d) => withStreamShuffle(s) {
         val schema = Tables.events(s, d).schema
-        val name = sinkName("st1_counts_", d)
         val stream = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(d)
           .withColumn("et", Tables.eventTime(schema("ts").dataType))
           .withWatermark("et", "1 hour")
           .groupBy(window(col("et"), "1 hour")).count()
-        val q = stream.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name)
+        Drain.toSink(stream, "graft_drain_st1", d, Seq("events.parquet"), "complete")(identity)
           .select(unix_millis(col("window.start")).as("hour_ms"),
             col("count").as("n_events"))
       },
@@ -755,7 +597,7 @@ object ExtQ {
     // store: a key's entry is evicted once the event-time watermark
     // passes its timestamp + delay, where plain dropDuplicates would
     // grow state forever on a continuous stream (the 100 TB posture).
-    // Under Trigger.AvailableNow the drain is exact — every event_id
+    // Under an AvailableNow drain the dedup is exact — every event_id
     // emits exactly once — so the batch-distinct oracle still matches.
     // That exactness leans on both union legs (one parquet file each)
     // landing in ONE microbatch: a duplicate arriving in a later batch
@@ -769,24 +611,19 @@ object ExtQ {
         val schema = Tables.events(s, d).schema
         def src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(d)
-        val name = sinkName("st2_dedup_", d)
-        val q = src.union(src)
+        val deduped = src.union(src)
           .withColumn("et", Tables.eventTime(schema("ts").dataType))
           .withWatermark("et", "1 hour")
           .dropDuplicatesWithinWatermark("event_id")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name).groupBy("event_type").agg(count(lit(1)).as("n_events"))
+        Drain.toSink(deduped, "graft_drain_st2", d, Seq("events.parquet"))(_.select("event_type"))
+          .groupBy("event_type").agg(count(lit(1)).as("n_events"))
       },
       Some("""SELECT event_type, count(*) AS n_events FROM events GROUP BY 1""")),
 
     // M7 — streaming SESSION windows (the reference's only session-like
     // construct is batch gaps-and-islands, A12; this is its streaming
     // generalization): session_window(10 min) per user, append mode +
-    // watermark, Trigger.AvailableNow. Append only emits sessions the
+    // watermark, drained (AvailableNow). Append only emits sessions the
     // final watermark (maxET − 1 s) has closed, so BOTH sides filter to
     // sessions ending strictly 2 s before maxET — the compared set is
     // identical regardless of the engine's ≤/< boundary choice. Oracle =
@@ -794,7 +631,6 @@ object ExtQ {
     Q("st3_stream_session",
       (s, d) => withStreamShuffle(s) {
         val schema = Tables.events(s, d).schema
-        val name = sinkName("st3_sess_", d)
         val stream = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(d)
           // floor event time to MILLISECONDS: the oracle sessionizes on
@@ -804,13 +640,8 @@ object ExtQ {
           .withWatermark("et", "1 second")
           .groupBy(col("user_id"), session_window(col("et"), "10 minutes"))
           .agg(count(lit(1)).as("n_events"))
-        val q = stream.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         val maxMs = Tables.eventsMs(s, d).agg(max("ms")).head().getLong(0)
-        s.table(name)
+        Drain.toSink(stream, "graft_drain_st3", d, Seq("events.parquet"))(identity)
           .select(col("user_id"),
             unix_millis(col("session_window.start")).as("sess_start_ms"),
             unix_millis(col("session_window.end")).as("sess_end_ms"),
@@ -845,8 +676,8 @@ object ExtQ {
     // passes their join window — the shape that keeps a continuous
     // two-stream join bounded at 100 TB. Event times are ms-floored on
     // both engines (st3's rule) and the interval bounds are integer
-    // millis, so the pair set is exact — no FP anywhere. Under
-    // Trigger.AvailableNow both legs drain completely and inner-join
+    // millis, so the pair set is exact — no FP anywhere. Under an
+    // AvailableNow drain both legs drain completely and inner-join
     // state outlives the drain, so every qualifying pair emits exactly
     // once and the batch-join oracle matches.
     Q("st4_stream_join",
@@ -863,18 +694,12 @@ object ExtQ {
           .select(col("user_id").as("b_user"), col("event_id").as("buy_id"),
             col("et").as("b_et"))
           .withWatermark("b_et", "1 hour")
-        val name = sinkName("st4_join_", d)
-        val q = views.join(buys,
+        val pairs = views.join(buys,
             col("v_user") === col("b_user") &&
               col("b_et") >= col("v_et") &&
               col("b_et") <= col("v_et") + expr("interval 1 hour"))
           .select(col("view_id"), col("buy_id"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name)
+        Drain.toSink(pairs, "graft_drain_st4", d, Seq("events.parquet"))(identity)
       },
       Some("""SELECT v.event_id AS view_id, b.event_id AS buy_id
         |FROM events v JOIN events b
@@ -894,7 +719,6 @@ object ExtQ {
     Q("st5_stream_quality",
       (s, d) => withStreamShuffle(s) {
         val schema = Tables.documents(s, d).schema
-        val name = sinkName("st5_quality_", d)
         val gated = TextAnalysis.repetitionStatsInline(
             s.readStream.schema(schema)
               .option("pathGlobFilter", "documents.parquet").parquet(d))
@@ -907,12 +731,7 @@ object ExtQ {
             && col("dup_gram3") === 0 && col("top_gram2") <= 2)
           .select("doc_id", "lang", "source", "n_tokens", "n_stop",
             "top_gram2", "dup_gram3")
-        val q = gated.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name)
+        Drain.toSink(gated, "graft_drain_st5", d, Seq("documents.parquet"))(identity)
       },
       Some("""WITH toks AS (
         |  SELECT doc_id, lang, source, list_filter(string_split(lower(text), ' '), t -> len(t) > 0) AS tk
@@ -935,47 +754,6 @@ object ExtQ {
         |WHERE n_tokens BETWEEN 20 AND 90 AND n_stop * 20 >= n_tokens
         |  AND dup_gram3 = 0 AND top_gram2 <= 2""".stripMargin)),
 
-    // Streaming ingest dedup: a document stream (the src0 slice)
-    // probes the existing corpus's PERSISTED band-signature table with
-    // a stream-static equi-join — the online form of d09. The stream
-    // side is stateless end to end: graft_bandsigs computes an
-    // arriving doc's MinHash band signatures per-row (no token
-    // shuffle, no state), the static side is the batch artifact a
-    // production pipeline maintains, and the exact-Jaccard verify is
-    // the native sorted-merge intersect. Emitted rows keep the band
-    // column, so no stateful distinct is needed — a pair colliding in
-    // both bands appears once per band, deterministically.
-    //
-    // The band artifact and gram store are materialized BEFORE
-    // entering the stream's 4-partition shuffle scope: building them
-    // is batch maintenance that wants full cluster parallelism; only
-    // the per-micro-batch probe should run at stream settings. A
-    // production pipeline reads both from storage, so the per-batch
-    // plan probing persisted tables is the faithful shape.
-    //
-    // The probe itself runs in foreachBatch so each micro-batch can
-    // PUSH ITS OWN KEYS into the static side: the batch's distinct
-    // band-signature prefixes become a partition filter on the
-    // sig_pfx-partitioned band artifact, and the static FileScan reads
-    // only the ≤256ths of the signature store the batch can collide
-    // with (PlanShapeSpec pins the PartitionFilters). This is what
-    // survives 100×: per-trigger cost scales with the batch's key
-    // spread, not the corpus — the previous shape re-scanned the whole
-    // cached corpus signature table every micro-batch, the one
-    // superlinear cross-SF curve of r13. (The gram-side verify join
-    // touches only post-collision candidates; its static input is the
-    // memoized in-memory gram store — at 100 TB that store would be
-    // bucketed by doc_id for the same pruned-probe effect.)
-    // Streaming ANN ingest probe — the embedding analogue of st6: each
-    // arriving micro-batch of vectors probes the PERSISTED
-    // cell-partitioned PQ index (AnnStore) for its nearest
-    // neighbors, with the batch's probed cells pushed as partition
-    // filters on the index FileScan — per-trigger cost scales with the
-    // batch's cell spread, never the index. The query set (the vec_id
-    // < 10 slice arriving as one AvailableNow batch) matches s08/s09's,
-    // and the PQ encode is deterministic, so all three forms — inline
-    // (s08), stored (s09), streaming (st8) — share ONE oracle and must
-    // answer row-identically.
     // Streaming classifier serving — the third form of the classifier
     // tier (t17 batch train/holdout, t18 incremental artifact probe,
     // st9 the live ingest stream): each arriving micro-batch is scored
@@ -1019,6 +797,16 @@ object ExtQ {
       },
       Some(TextQ.decontamOracleSql(TextQ.DecontamBatchWhereSql))),
 
+    // Streaming ANN ingest probe — the embedding analogue of st6: each
+    // arriving micro-batch of vectors probes the PERSISTED
+    // cell-partitioned PQ index (AnnStore) for its nearest
+    // neighbors, with the batch's probed cells pushed as partition
+    // filters on the index FileScan — per-trigger cost scales with the
+    // batch's cell spread, never the index. The query set (the vec_id
+    // < 10 slice arriving as one AvailableNow batch) matches s08/s09's,
+    // and the PQ encode is deterministic, so all three forms — inline
+    // (s08), stored (s09), streaming (st8) — share ONE oracle and must
+    // answer row-identically.
     Q("st8_stream_ann_probe", Seq(TextQ.AnnStore),
       (s, d) => {
         val emb = Tables.embeddings(s, d)
@@ -1078,10 +866,6 @@ object ExtQ {
         TextQ.BandStore.resolve(s, d)
         TextQ.gramSetsOf(s, d)
         TextQ.prevClusters(s, d)
-        // NOT withStreamShuffle: stateless stream (source →
-        // foreachBatch, no state store) — the 4-partition throttle
-        // only squeezed the per-trigger probe+verify+merge batch jobs
-        // onto ≤4 tasks (see streamIngestDedup)
         streamClusterMaintain(s, d,
           s.readStream.schema(docs.schema)
             .option("pathGlobFilter", "documents.parquet").parquet(d)
@@ -1089,6 +873,37 @@ object ExtQ {
       },
       Some(TextQ.ClusterOracleSql)),
 
+    // Streaming ingest dedup: a document stream (the src0 slice)
+    // probes the existing corpus's PERSISTED band-signature table with
+    // a stream-static equi-join — the online form of d09. The stream
+    // side is stateless end to end: graft_bandsigs computes an
+    // arriving doc's MinHash band signatures per-row (no token
+    // shuffle, no state), the static side is the batch artifact a
+    // production pipeline maintains, and the exact-Jaccard verify is
+    // the native sorted-merge intersect. Emitted rows keep the band
+    // column, so no stateful distinct is needed — a pair colliding in
+    // both bands appears once per band, deterministically.
+    //
+    // The band artifact and gram store are materialized BEFORE
+    // entering the stream's 4-partition shuffle scope: building them
+    // is batch maintenance that wants full cluster parallelism; only
+    // the per-micro-batch probe should run at stream settings. A
+    // production pipeline reads both from storage, so the per-batch
+    // plan probing persisted tables is the faithful shape.
+    //
+    // The probe itself runs in the per-batch function so each micro-batch can
+    // PUSH ITS OWN KEYS into the static side: the batch's distinct
+    // band-signature prefixes become a partition filter on the
+    // sig_pfx-partitioned band artifact, and the static FileScan reads
+    // only the ≤256ths of the signature store the batch can collide
+    // with (PlanShapeSpec pins the PartitionFilters). This is what
+    // survives 100×: per-trigger cost scales with the batch's key
+    // spread, not the corpus — the previous shape re-scanned the whole
+    // cached corpus signature table every micro-batch, the one
+    // superlinear cross-SF curve of r13. (The gram-side verify join
+    // touches only post-collision candidates; its static input is the
+    // memoized in-memory gram store — at 100 TB that store would be
+    // bucketed by doc_id for the same pruned-probe effect.)
     Q("st6_stream_ingest_dedup", Seq(TextQ.BandStore, TextQ.GramStore),
       (s, d) =>
         // corpus side capped per bucket (the d09/d15 ingest guard) via
@@ -1096,7 +911,7 @@ object ExtQ {
         // scan FILTER per trigger, zero windows (the rank is
         // bucket-local, so the stored rank is valid under any prefix
         // pruning)
-        streamIngestDedup(s, d, "graft_st6_out", prefixes =>
+        streamIngestDedup(s, d, "graft_drain_st6", prefixes =>
           graft.operators.Dedup.bandsKeptByRank(
               TextQ.prunedCorpusBands(s, d, prefixes, withCorpusRank = true),
               "corpus_rank", TextQ.D05MaxBucket,
@@ -1124,7 +939,7 @@ object ExtQ {
     // oracle replays the routed union branch by branch at RoutedCap.
     Q("st12_stream_routed_dedup", Seq(TextQ.BandStore, TextQ.GramStore),
       (s, d) =>
-        streamIngestDedup(s, d, "graft_st12_out", prefixes =>
+        streamIngestDedup(s, d, "graft_drain_st12", prefixes =>
           graft.operators.Dedup.bandsRoutedByRank(
               TextQ.prunedCorpusBands(s, d, prefixes, withCorpusRank = true),
               "corpus_rank", TextQ.RoutedCap,

@@ -1098,18 +1098,13 @@ ${matchLayers.replace("AGED_SRC", agedSrc.replace("FROM step s", s"FROM $name s"
     Q("k10_track_timed", Seq(K10BatchStore),
       (s, d) => ExtQ.withStreamShuffle(s) {
         import s.implicits._
-        val dir = K10BatchStore.resolve(s, d)
-        val name = ExtQ.sinkName("k10_timed_", d)
-        val q = StreamingTracker.trackTimed(
+        val tracked = StreamingTracker.trackTimed(
             s.readStream.schema(org.apache.spark.sql.Encoders.product[TimedTrackerIn].schema)
-              .option("maxFilesPerTrigger", "1").parquet(dir)
+              .option("maxFilesPerTrigger", "1").parquet(K10BatchStore.resolve(s, d))
               .as[TimedTrackerIn],
             k03Cfg)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        trackRows(s.table(name).as[graft.operators.SeqTrackOut])
+        trackRows(graft.streaming.Drain.toSink(tracked.toDF(), "graft_drain_k10", d,
+          K10BatchStore.sources)(identity).as[graft.operators.SeqTrackOut])
       },
       Some(kalmanTrackOracle(greedy = false, k03Cfg,
         dinWhere = s"\n      |  WHERE NOT ($K10LatePred)".stripMargin))),

@@ -382,7 +382,7 @@ object TextQ {
                                        d: String, prefixes: Seq[String],
                                        withCorpusRank: Boolean = false) =
     // existing, not resolve: this is the per-trigger probe the
-    // streaming ingests (st6/st7) run inside foreachBatch — a missing
+    // streaming ingests (st6/st7) run inside a micro-batch — a missing
     // store there is a maintenance outage and must fail loudly, never
     // silently rebuild the corpus banding inside a micro-batch trigger
     // (StreamBoundarySpec pins it; the queries' pre-stream resolve /
@@ -613,31 +613,46 @@ object TextQ {
       k = k, nprobe = np, refine = refine)
   }
 
-  /** The delta-ingest tier over the CORPUS index — the s12 shape:
-    * resolves against the corpus index generation's own sidecar
-    * (absent until a maintenance sweep targets that store → the
-    * engine default; the dual index's suggestion is a different
-    * model's measurement and deliberately does NOT transfer).
+  /** The delta-ingest tier over the CORPUS index — the s12 shape: the
+    * batch slice encoded under the frozen corpus model is the delta.
     */
   private[graft] def servedDeltaProbe(s: org.apache.spark.sql.SparkSession,
       d: String, queries: org.apache.spark.sql.DataFrame,
       nprobe: Option[Int] = None, k: Int = 5, refine: Int = 20): org.apache.spark.sql.DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val corpus = emb.filter(!SemBatchPred)
-    val model = SimilaritySearch.ivfPqModel(corpus, AnnNlist, AnnM, AnnCb)
-    val index = AnnCorpusStore.resolve(s, d)
+    val model = annCorpusModel(emb)
+    deltaProbe(s, emb, model, AnnCorpusStore.resolve(s, d),
+      SimilaritySearch.ivfPqEncode(emb.filter(SemBatchPred), model), queries, nprobe, k, refine)
+  }
+
+  /** The delta-ingest tier's probe, shared by s12 and st11's post-drain
+    * probe: the partition-pruned corpus `index` ∪ the `delta` code
+    * table, searched over `emb` under the frozen corpus `model`.
+    * `nprobe = None` resolves against the corpus index generation's own
+    * sidecar (absent until a maintenance sweep targets that store → the
+    * engine default; the dual index's suggestion is a different model's
+    * measurement and deliberately does NOT transfer).
+    */
+  private[graft] def deltaProbe(s: org.apache.spark.sql.SparkSession,
+      emb: org.apache.spark.sql.DataFrame, model: SimilaritySearch.IvfPqModel,
+      index: String, delta: org.apache.spark.sql.DataFrame,
+      queries: org.apache.spark.sql.DataFrame, nprobe: Option[Int],
+      k: Int = 5, refine: Int = 20): org.apache.spark.sql.DataFrame = {
     val np = resolveNprobe(s, index, nprobe)
-    val delta = SimilaritySearch.ivfPqEncode(emb.filter(SemBatchPred), model)
     val cells = SimilaritySearch.ivfPqProbedCells(queries, model, nprobe = np)
-    val main = storeRead(s, index)
+    def probed(codes: org.apache.spark.sql.DataFrame) = codes
       .where(col("cell").isin(cells: _*))
       .select(col("vec_id"), col("cell"), col("codes"))
-    val coded = annDeltaCoded(main, delta
-      .where(col("cell").isin(cells: _*))
-      .select(col("vec_id"), col("cell"), col("codes")))
-    SimilaritySearch.ivfPqSearch(queries, emb, coded, model,
+    SimilaritySearch.ivfPqSearch(queries, emb,
+      annDeltaCoded(probed(storeRead(s, index)), probed(delta)), model,
       k = k, nprobe = np, refine = refine)
   }
+
+  /** The delta tier's frozen model over the embeddings `emb`: seeds
+    * drawn from the corpus slice only, never the arriving batch.
+    */
+  private[graft] def annCorpusModel(emb: org.apache.spark.sql.DataFrame) =
+    SimilaritySearch.ivfPqModel(emb.filter(!SemBatchPred), AnnNlist, AnnM, AnnCb)
 
   /** The delta-ingest tier's MAIN index: the raw-PQ code table of the
     * CORPUS slice only, encoded under a model whose seeds are drawn
@@ -655,9 +670,8 @@ object TextQ {
   val AnnCorpusStore: Artifact = Artifact("corpus")("graft_ann_corpus_artifact",
       Seq("embeddings.parquet"),
       s"nl${AnnNlist}m${AnnM}cb${AnnCb}b7$annTrainSubTag") { (s, d, dir) =>
-    val corpus = Tables.embeddings(s, d).filter(!SemBatchPred)
-    val model = SimilaritySearch.ivfPqModel(corpus, AnnNlist, AnnM, AnnCb)
-    SimilaritySearch.ivfPqEncode(corpus, model)
+    val emb = Tables.embeddings(s, d)
+    SimilaritySearch.ivfPqEncode(emb.filter(!SemBatchPred), annCorpusModel(emb))
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(dir)
   }

@@ -77,6 +77,14 @@ object ArtifactStore {
     if (fs.exists(root)) fs.delete(root, true)
   }
 
+  /** [[retire]] every `<tmp>` entry whose name starts with `prefix`: the
+    * per-dataset directories of a naming that put the dataset into the
+    * entry's own name.
+    */
+  def retirePrefixed(spark: SparkSession, prefix: String): Unit =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list()).toSeq.flatten
+      .filter(_.startsWith(prefix)).foreach(retire(spark, _))
+
   /** `<tmp>/<kind>/<datasetHash>` of every store [[locate]]d in this
     * JVM, with the dataset's source files.
     */
@@ -123,7 +131,7 @@ object ArtifactStore {
 
   /** [[resolve]]'s read-only twin for PROBE paths that must never own
     * a build — above all the per-trigger probes inside a streaming
-    * foreachBatch: an artifact missing there means the maintenance job
+    * micro-batch: an artifact missing there means the maintenance job
     * (dedup-maintain / ann-maintain, or the query's own pre-stream
     * resolve) didn't run for this generation, and silently rebuilding
     * a corpus-sized store inside a micro-batch trigger would bury a

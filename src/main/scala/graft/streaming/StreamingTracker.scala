@@ -33,19 +33,29 @@ object StreamingTracker {
       .flatMapGroupsWithState[SeqState, SeqTrackOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (seq: String, rows: Iterator[TrackerIn], state: GroupState[SeqState]) =>
-          val prior = state.getOption.getOrElse(SeqState.Initial)
-          val core = Tracker.restoreCore(cfg, prior)
-          val byFrame = rows.toArray.groupBy(_.frame).toArray.sortBy(_._1)
-          val out = byFrame.iterator
-            .filter { case (frame, _) => prior.lastFrame.isEmpty || frame > prior.lastFrame }
-            .flatMap { case (frame, ds) =>
-              core.step(frame, ds.sortBy(_.id).toSeq).map(_.copy(seq = seq))
-            }.toArray
-          val newLast = byFrame.lastOption.map(_._1).getOrElse(prior.lastFrame)
-          state.update(Tracker.snapshotCore(core,
-            if (newLast > prior.lastFrame) newLast else prior.lastFrame))
-          out.iterator
+          stepBatch(cfg, seq, rows.toArray, state)
       }
+  }
+
+  /** One micro-batch of one sequence: restore the tracker from state,
+    * step each frame newer than the state's `lastFrame` in frame order
+    * (detections by id), and snapshot the tracker with the new
+    * `lastFrame`.
+    */
+  private def stepBatch(cfg: TrackerConfig, seq: String, rows: Array[TrackerIn],
+                        state: GroupState[SeqState]): Iterator[SeqTrackOut] = {
+    val prior = state.getOption.getOrElse(SeqState.Initial)
+    val core = Tracker.restoreCore(cfg, prior)
+    val byFrame = rows.groupBy(_.frame).toArray.sortBy(_._1)
+    val out = byFrame.iterator
+      .filter { case (frame, _) => prior.lastFrame.isEmpty || frame > prior.lastFrame }
+      .flatMap { case (frame, ds) =>
+        core.step(frame, ds.sortBy(_.id).toSeq).map(_.copy(seq = seq))
+      }.toArray
+    val newLast = byFrame.lastOption.map(_._1).getOrElse(prior.lastFrame)
+    state.update(Tracker.snapshotCore(core,
+      if (newLast > prior.lastFrame) newLast else prior.lastFrame))
+    out.iterator
   }
 
   /** Watermarked streaming entry (T7): detections carry an event time
@@ -90,25 +100,15 @@ object StreamingTracker {
             Iterator.empty
           } else {
             val wmMs = state.getCurrentWatermarkMs()
-            val prior = state.getOption.getOrElse(SeqState.Initial)
-            val core = Tracker.restoreCore(cfg, prior)
             val kept = rows.filter(_.et.getTime >= wmMs).toArray // late drop
-            val byFrame = kept.groupBy(_.frame).toArray.sortBy(_._1)
-            val out = byFrame.iterator
-              .filter { case (frame, _) => prior.lastFrame.isEmpty || frame > prior.lastFrame }
-              .flatMap { case (frame, ds) =>
-                core.step(frame, ds.sortBy(_.id).map(_.toIn).toSeq).map(_.copy(seq = seq))
-              }.toArray
-            val newLast = byFrame.lastOption.map(_._1).getOrElse(prior.lastFrame)
-            state.update(Tracker.snapshotCore(core,
-              if (newLast > prior.lastFrame) newLast else prior.lastFrame))
+            val out = stepBatch(cfg, seq, kept.map(_.toIn), state)
             // arm eviction at (last seen event time + delay); must stay
             // strictly ahead of the watermark or Spark rejects it, so a
             // batch of entirely-late rows re-arms relative to the wm
             val maxEtMs = kept.iterator.map(_.et.getTime).foldLeft(Long.MinValue)(_ max _)
             val base = math.max(maxEtMs, wmMs)
             state.setTimeoutTimestamp(base + delaySec * 1000L + 1L)
-            out.iterator
+            out
           }
       }
   }

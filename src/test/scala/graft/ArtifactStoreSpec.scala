@@ -163,4 +163,16 @@ class ArtifactStoreSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("retirePrefixed deletes graft_mot_rt_<dir> entries and keeps graft_mot_rt/<hash>") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val former = new java.io.File(tmp, "graft_mot_rt__spec_former")
+    val current = new java.io.File(tmp, "graft_mot_rt/spec_current")
+    Seq(former, current).foreach(d => assert(new java.io.File(d, "part").mkdirs()))
+    try {
+      sources.ArtifactStore.retirePrefixed(spark, "graft_mot_rt_")
+      assert(!former.exists())
+      assert(new java.io.File(current, "part").exists())
+    } finally Seq(former, current).foreach(rm)
+  }
 }

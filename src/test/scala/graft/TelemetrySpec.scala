@@ -64,6 +64,20 @@ class TelemetrySpec extends AnyFunSuite {
       r.json)
   }
 
+  test("a collect of n rows shows at least their serialized size in result_bytes") {
+    val t = new Telemetry(spark)
+    val rdd = sc.parallelize(0 until 200, 4).map(i => Array.fill(1000)(i.toByte))
+    val r = t.query("collect")(rdd)(_.collect())
+    ListenerBusDrain(sc)
+    val ser = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+    val rowBytes = rdd.collect().map(ser.serialize(_).remaining().toLong).sum
+    assert(rowBytes >= 200L * 1000L)
+    assert(r.resultB >= rowBytes, s"result_bytes ${r.resultB} < serialized rows $rowBytes")
+    assert(r.maxTaskResultB > 0 && r.maxTaskResultB < r.resultB)
+    assert(r.json.contains(
+      s""""result_bytes":${r.resultB},"max_task_result_bytes":${r.maxTaskResultB}"""), r.json)
+  }
+
   test("a query that throws: ok = false and the exception class in the record") {
     val t = new Telemetry(spark)
     val r = t.query("boom")(throw new IllegalStateException("no input"))(_ => ())
